@@ -74,8 +74,8 @@ object CommitLog {
   /** Per-file bloom index (the published Delta/Parquet bloom-filter-index
     * concept): when `spark.graft.bloom.columns` names columns at write
     * time, every staged file gets a sidecar holding one bloom filter per
-    * indexed column, built in the SAME single stats pass the commit
-    * already pays. Equality and IN pushdown then skip files whose bloom
+    * indexed column, built in the commit's one Spark sketch pass
+    * ([[sketchPass]]). Equality and IN pushdown then skip files whose bloom
     * proves the value absent — the point-lookup complement to min/max
     * skipping, which cannot prune high-cardinality unsorted keys (every
     * file's [min,max] spans the whole domain, so a 100 TB needle-in-
@@ -95,7 +95,7 @@ object CommitLog {
     * on the engine's own bundled datasketches HLL): when `ndv.columns`
     * (table property, or the session conf override) names columns at
     * write time, every staged file gets a sidecar holding one HLL sketch
-    * per column, built in the SAME stats pass the commit already pays.
+    * per column, built in the same sketch pass as the bloom index.
     * HLL sketches MERGE losslessly, so [[describeStats]] unions the
     * per-file sketches into table-level distinct-count estimates without
     * ever re-scanning data — the statistic a planner (or a human sizing a
@@ -814,7 +814,7 @@ object CommitLog {
   /** Staged writes pin timestamps to INT64 TIMESTAMP_MICROS (set/restored
     * around the write): Spark's INT96 default writes footers with
     * DEPRECATED statistics, which would force every timestamp column onto
-    * the residual stats pass — and Delta/Iceberg mandate INT64 for the
+    * the sketch pass — and Delta/Iceberg mandate INT64 for the
     * same reason. Readers handle mixed INT96/INT64 files per-footer, so
     * pre-r8 table history needs no rewrite.
     */
@@ -850,6 +850,13 @@ object CommitLog {
         else withCopies.repartition(copies.map(col).toIndexedSeq: _*)
       withCap(staged.write).partitionBy(copies: _*).parquet(s"$root/$sub")
     }
+    stagedLeaves(root, sub)
+  }
+
+  /** Root-relative paths of the parquet leaves a staging write left under
+    * `root/sub`, sorted (markers like `_SUCCESS` and hidden files skipped).
+    */
+  private def stagedLeaves(root: String, sub: String): Seq[String] = {
     val rootPath = Paths.get(root)
     withWalk(Paths.get(root, sub))(_.filter { p =>
       val n = p.getFileName.toString
@@ -890,15 +897,13 @@ object CommitLog {
     case _ => c.cast(dt)
   }
 
-  /** Per-file stats read off one parquet FOOTER: row count, byte size,
-    * rendered min/max and null counts for every footer-derivable tracked
-    * column, plus the set of columns whose footer stats exist-but-cannot-
-    * be-trusted (they fall to the residual data pass).
+  /** What one open of one parquet file yields: the footer's row count,
+    * byte size, rendered min/max and null counts for every footer-derivable
+    * tracked column, exact sums of the requested integral columns (all in
+    * `stat`), plus the set of columns whose footer stats exist-but-cannot-
+    * be-trusted (they fall to [[sketchPass]]).
     */
-  private final case class FooterFileStats(
-      rel: String, rows: Long, bytes: Long,
-      mins: Map[String, String], maxs: Map[String, String],
-      nulls: Map[String, Long], underivable: Set[String])
+  private final case class FileReadStats(stat: FileStat, underivable: Set[String])
 
   /** Footer min/max rendered EXACTLY as [[statRender]] renders the
     * aggregate path: timestamps as unix micros, everything else through
@@ -936,18 +941,21 @@ object CommitLog {
     }
   }
 
-  /** Footer stats of ONE file. Columns degrade to `underivable` — never to
-    * wrong values — when the footer cannot carry Spark's semantics:
-    * INT96-era timestamps (deprecated stats), float/double chunks that saw
-    * a NaN (parquet-mr drops their min/max — detectable as
-    * hasNonNullValue=false with non-null values present; Spark orders NaN
-    * LARGEST, so NaN-blind bounds would mis-prune), oversized binary stats
-    * (parquet omits them past ~4 KB), or unset null counts. A column
-    * absent from the file's physical schema reads back as all-null
-    * (schema evolution), which IS derivable: nulls = rows, no bounds.
+  /** Stats of ONE file from ONE open: footer stats for `tracked`, then
+    * exact sums of `summed` off the same reader. Columns degrade to
+    * `underivable` — never to wrong values — when the footer cannot carry
+    * Spark's semantics: INT96-era timestamps (deprecated stats),
+    * float/double chunks that saw a NaN (parquet-mr drops their min/max —
+    * detectable as hasNonNullValue=false with non-null values present;
+    * Spark orders NaN LARGEST, so NaN-blind bounds would mis-prune),
+    * oversized binary stats (parquet omits them past ~4 KB), or unset null
+    * counts. A column absent from the file's physical schema reads back as
+    * all-null (schema evolution), which IS derivable: nulls = rows, no
+    * bounds.
     */
-  private def footerStatsOf(conf: org.apache.hadoop.conf.Configuration,
-      abs: String, rel: String, tracked: Seq[StructField]): FooterFileStats = {
+  private def fileStatsOf(conf: org.apache.hadoop.conf.Configuration,
+      abs: String, rel: String, tracked: Seq[StructField],
+      summed: Seq[StructField]): FileReadStats = {
     import scala.jdk.CollectionConverters._
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(abs), conf)
@@ -982,7 +990,7 @@ object CommitLog {
           // matching rows. refreshStats over imported snapshots is exactly
           // this foreign-file path, so: any unit other than MICROS (or a
           // missing/non-timestamp annotation, unit unknowable) degrades to
-          // the residual pass, same as INT96.
+          // the sketch pass, same as INT96.
           val tsUnitBad = (f.dataType == TimestampType ||
               f.dataType == TimestampNTZType) &&
             chunks.exists { c =>
@@ -1025,117 +1033,222 @@ object CommitLog {
           }
         }
       }
-      FooterFileStats(rel, rows, in.getLength,
-        mins.result(), maxs.result(), nulls.result(), under.result())
+      FileReadStats(
+        FileStat(rel, rows, in.getLength, mins.result(), maxs.result(),
+          nulls.result(), sums = columnSums(r, summed)),
+        under.result())
     }
   }
 
-  /** Footer stats for every staged file — KB of I/O per file instead of a
-    * re-read of every written byte. Driver-parallel below 192 files, a
-    * Spark job above (a 100 TB initial load stages 10⁵ files; footer reads
-    * must scale out like everything else).
+  /** Exact integral sums of `cols` over the file `r` has open, read with
+    * the parquet column reader (the parquet-cli dump iteration pattern:
+    * no-op converters, definition-level null checks, getLong/getInteger per
+    * value) over only those columns' chunks. Accumulates in long with an
+    * overflow escape to BigInteger — value-equal to
+    * `sum(CAST(col AS DECIMAL(38,0)))`. All-null and absent columns are
+    * OMITTED, matching SQL `sum`'s null-on-empty contract.
     */
-  private def readFooterStats(spark: SparkSession, root: String,
-      files: Seq[String], tracked: Seq[StructField]): Seq[FooterFileStats] = {
+  private def columnSums(r: org.apache.parquet.hadoop.ParquetFileReader,
+      cols: Seq[StructField]): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val md = r.getFooter
+    val schema = md.getFileMetaData.getSchema
+    val wanted = cols.flatMap { f =>
+      schema.getColumns.asScala.find(cd =>
+        cd.getPath.length == 1 && cd.getPath()(0) == f.name)
+        .map(f.name -> _)
+    }
+    if (wanted.isEmpty) return Map.empty
+    val projection = new org.apache.parquet.schema.MessageType(schema.getName,
+      wanted.map[org.apache.parquet.schema.Type] { case (name, _) =>
+        schema.getType(schema.getFieldIndex(name)) }.asJava)
+    r.setRequestedSchema(projection)
+    val noopGroup: GroupConverter = new GroupConverter {
+      override def getConverter(i: Int): Converter = new PrimitiveConverter {}
+      override def start(): Unit = ()
+      override def end(): Unit = ()
+    }
+    val acc = scala.collection.mutable.Map[String, java.math.BigInteger]()
+    var pages = r.readNextRowGroup()
+    while (pages != null) {
+      val store = new org.apache.parquet.column.impl.ColumnReadStoreImpl(
+        pages, noopGroup, projection, md.getFileMetaData.getCreatedBy)
+      wanted.foreach { case (name, cd) =>
+        val cr = store.getColumnReader(cd)
+        val maxDef = cd.getMaxDefinitionLevel
+        val isLong = cd.getPrimitiveType.getPrimitiveTypeName ==
+          PrimitiveTypeName.INT64
+        // foreign files may annotate INT32 as UNSIGNED — widen the
+        // raw bits instead of sign-extending (Spark's read semantics)
+        val unsigned32 = !isLong &&
+          (cd.getPrimitiveType.getLogicalTypeAnnotation match {
+            case a: org.apache.parquet.schema.LogicalTypeAnnotation
+                .IntLogicalTypeAnnotation => !a.isSigned
+            case _ => false
+          })
+        val n = cr.getTotalValueCount
+        var i = 0L
+        var s = 0L
+        var big: java.math.BigInteger = null
+        var nonNull = false
+        while (i < n) {
+          if (cr.getCurrentDefinitionLevel == maxDef) {
+            val v =
+              if (isLong) cr.getLong
+              else if (unsigned32) cr.getInteger.toLong & 0xFFFFFFFFL
+              else cr.getInteger.toLong
+            nonNull = true
+            if (big == null) {
+              val t = s + v
+              if (((s ^ t) & (v ^ t)) < 0L) // i64 overflow: escape
+                big = java.math.BigInteger.valueOf(s)
+                  .add(java.math.BigInteger.valueOf(v))
+              else s = t
+            } else big = big.add(java.math.BigInteger.valueOf(v))
+          }
+          cr.consume()
+          i += 1
+        }
+        if (nonNull) {
+          val part =
+            if (big == null) java.math.BigInteger.valueOf(s) else big
+          acc(name) = acc.get(name).map(_.add(part)).getOrElse(part)
+        }
+      }
+      pages = r.readNextRowGroup()
+    }
+    acc.iterator.map { case (k, v) => k -> v.toString }.toMap
+  }
+
+  /** [[fileStatsOf]] for every file — KB of footer I/O per file plus the
+    * summed columns' chunks, never a re-read of every written byte.
+    * Driver-parallel up to 192 files, a Spark job above (a 100 TB initial
+    * load stages 10⁵ files; per-file reads must scale out like everything
+    * else).
+    */
+  private def readFileStats(spark: SparkSession, root: String,
+      files: Seq[String], tracked: Seq[StructField],
+      summed: Seq[StructField]): Seq[FileReadStats] = {
     val conf = spark.sessionState.newHadoopConf()
     if (files.sizeIs <= 192) {
       import scala.jdk.CollectionConverters._
       java.util.List.copyOf(files.asJava).parallelStream()
-        .map[FooterFileStats](f =>
-          footerStatsOf(conf, dataPath(root, f), f, tracked))
-        .collect(java.util.stream.Collectors.toList[FooterFileStats])
+        .map[FileReadStats](f =>
+          fileStatsOf(conf, dataPath(root, f), f, tracked, summed))
+        .collect(java.util.stream.Collectors.toList[FileReadStats])
         .asScala.toSeq
     } else {
       val ser = new org.apache.spark.util.SerializableConfiguration(conf)
-      val trackedB = tracked // local val: don't capture the object graph
-      val rootB = root
       spark.sparkContext.parallelize(files, math.min(files.size, 256))
-        .map(f => footerStatsOf(ser.value, dataPath(rootB, f), f, trackedB))
+        .map(f => fileStatsOf(ser.value, dataPath(root, f), f, tracked, summed))
         .collect().toSeq
     }
   }
 
-  /** Per-file statistics for a commit. r8 redesign (VERDICT r7 "the single
-    * biggest avoidable cost"): row count, byte size, min/max and null
-    * counts come from parquet FOOTERS — KB per file — instead of the
-    * historical full re-read of every staged byte. ONE residual columnar
-    * data pass (grouped by `input_file_name`, reading ONLY the columns it
-    * owes) runs just for what footers cannot supply:
-    *   - exact integral sums (parquet stores no sums; the metadata-
-    *     answered SUM feature keeps them default-on via `sums.columns`,
-    *     settable to '' for pure-footer commits),
-    *   - bloom / NDV sketches when the table opts in,
-    *   - columns whose footer stats are untrustworthy in some file
-    *     (NaN-bearing float/double chunks, INT96-era timestamps on
-    *     imported files, >4 KB binary bounds) — Spark-semantics min/max
-    *     (NaN largest) are recomputed exactly as before.
-    * Write amplification drops from 2× (every byte re-read every commit)
-    * to the residual-column fraction — typically one integral key column —
-    * and to pure metadata when sums are off and no file degrades.
+  /** Per-file statistics for a commit or a refresh, from two pieces:
+    *   1. [[readFileStats]] — ONE open of each file yields the footer's
+    *      rows, bytes, min/max and null counts (KB per file) plus the exact
+    *      integral sums of `sumCols` (parquet stores no sums; the metadata-
+    *      answered SUM feature keeps them default-on via `sums.columns`,
+    *      settable to '' for pure-footer commits);
+    *   2. [[sketchPass]] — one Spark job grouped by `input_file_name`,
+    *      reading ONLY the columns it owes, and run only for what needs
+    *      Spark's aggregates: bloom / NDV sketches when the table opts in,
+    *      and columns whose footer stats are untrustworthy in some file
+    *      (NaN-bearing float/double chunks, INT96-era or non-MICROS
+    *      timestamps on imported files, >4 KB binary bounds) — Spark-
+    *      semantics min/max (NaN largest) are recomputed exactly as before.
+    * 0-row files never enter the result.
     */
   private def statsFor(
       spark: SparkSession,
       root: String,
       files: Seq[String],
       schema: StructType,
-      bloomSpec: Option[(Seq[String], Long, Long)] = None,
-      ndvSpec: Option[(Seq[String], Int)] = None,
+      sketches: Sketches = Sketches(None, None),
       sumCols: Seq[String] = Nil): Seq[FileStat] = {
     if (files.isEmpty) return Nil
     val tracked = schema.fields.filter(f => statTracked(f.dataType)).toSeq
-    // 0-row files never enter the manifest (the historical groupBy path
-    // could not observe them; vacuum reclaims the orphans)
-    val foot = readFooterStats(spark, root, files, tracked).filter(_.rows > 0L)
-    val under = tracked.filter(f => foot.exists(_.underivable.contains(f.name)))
     val summed = sumCols.distinct.flatMap(c =>
       tracked.find(f => f.name == c && integralType(f.dataType)))
-    val base: Seq[FileStat] = foot.map(f =>
-      FileStat(f.rel, f.rows, f.bytes, f.mins, f.maxs, f.nulls))
-    if (under.isEmpty && summed.isEmpty && bloomSpec.isEmpty && ndvSpec.isEmpty)
-      return base
-    // r15 OPT (guide §1.2 — the residual pass measured as ~0.4 s of every
-    // ~0.7 s append, ALL of it fixed job overhead at small commit sizes):
-    // when the ONLY residual work is the exact integral sums, read them
-    // DRIVER-SIDE with the parquet column reader instead of a Spark job —
-    // the same ≤threshold discipline as [[readFooterStats]], gated on
-    // STAGED BYTES so a 100 TB load still scales out. Values identical:
-    // an order-independent exact integer sum either way (spec'd in
-    // CommitLogFooterStatsSpec; the distributed pass remains the
-    // bloom/ndv/underivable path and the big-commit path).
-    if (under.isEmpty && bloomSpec.isEmpty && ndvSpec.isEmpty) {
-      val cap = spark.conf.getOption(DriverSumBytesConf)
-        .flatMap(_.toLongOption).getOrElse(DefaultDriverSumBytes)
-      if (foot.map(_.bytes).sum <= cap) {
-        val conf = spark.sessionState.newHadoopConf()
-        import scala.jdk.CollectionConverters._
-        val sums = java.util.List.copyOf(foot.map(_.rel).asJava).parallelStream()
-          .map[(String, Map[String, String])](rel =>
-            rel -> driverFileSums(conf, dataPath(root, rel), summed))
-          .collect(java.util.stream.Collectors
-            .toList[(String, Map[String, String])])
-          .asScala.toMap
-        return base.map(st => st.copy(sums = sums.getOrElse(st.path, Map.empty)))
-      }
-    }
-    // residual pass: only the owed columns, only the live files
-    val passFields = (under ++ summed ++
-      bloomSpec.toSeq.flatMap(_._1).flatMap(c => schema.fields.find(_.name == c)) ++
-      ndvSpec.toSeq.flatMap(_._1).flatMap(c => schema.fields.find(_.name == c)))
-      .groupBy(_.name).map(_._2.head).toSeq
+    // 0-row files never enter the manifest (vacuum reclaims the orphans)
+    val read = readFileStats(spark, root, files, tracked, summed)
+      .filter(_.stat.rows > 0L)
+    val under = tracked.filter(f => read.exists(_.underivable.contains(f.name)))
+    sketchPass(spark, root, root, read.map(_.stat), schema, under, sketches,
+      strict = true)
+  }
+
+  /** Bloom (`(columns, items, bits)`) and NDV (`(columns, lgK)`) sketches a
+    * stats pass builds, physical column names.
+    */
+  private final case class Sketches(
+      bloom: Option[(Seq[String], Long, Long)],
+      ndv: Option[(Seq[String], Int)]) {
+    def isEmpty: Boolean = bloom.isEmpty && ndv.isEmpty
+  }
+
+  /** The bloom/NDV sketches a write builds. Bloom indexing is a WRITE-TIME
+    * choice, sticky per table via the `bloom.columns`/`bloom.bits`/
+    * `bloom.items` TABLE properties (the reference point: Delta's
+    * delta.bloomFilter column property) with the session conf as a
+    * per-session override; NDV sketches follow the same discipline with
+    * `ndv.columns`/`ndv.lgk`. Logical names in either, mapped to physical
+    * names by `p`; columns of unsupported types are dropped. Imports pass
+    * no properties (a foreign table has none yet).
+    */
+  private def sketchesFor(sess: SparkSession, schema: StructType,
+      props: Map[String, String], p: String => String = identity): Sketches = {
+    def opt(confKey: String, propKey: String): Option[String] =
+      sess.conf.getOption(confKey).filter(_.nonEmpty)
+        .orElse(props.get(propKey)).filter(_.nonEmpty)
+    def cols(confKey: String, propKey: String, ok: DataType => Boolean) =
+      opt(confKey, propKey).getOrElse("")
+        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        .map(p)
+        .filter(c => schema.fields.exists(f => f.name == c && ok(f.dataType)))
+    val bloomCols = cols(BloomColumnsConf, "bloom.columns", bloomSupported)
+    val ndvCols = cols(NdvColumnsConf, "ndv.columns", ndvSupported)
+    Sketches(
+      if (bloomCols.isEmpty) None
+      else Some((bloomCols,
+        opt(BloomItemsConf, "bloom.items").getOrElse(DefaultBloomItems.toString).toLong,
+        opt(BloomBitsConf, "bloom.bits").getOrElse(DefaultBloomBits.toString).toLong)),
+      if (ndvCols.isEmpty) None
+      else Some((ndvCols,
+        opt(NdvLgkConf, "ndv.lgk").getOrElse(DefaultNdvLgk.toString).toInt)))
+  }
+
+  /** The one Spark pass over data for statistics: one column-pruned job
+    * grouped by `input_file_name`, computing Spark-semantics min/max/null
+    * counts for the `under` columns and the bloom/NDV sketches, whose
+    * sidecars land under `sidecarRoot` (`data/_bloom`/`data/_ndv`, where
+    * vacuum's walk reclaims them). Files are read at `dataPath(root, …)`:
+    * a native commit's staged files, or an import's foreign files by
+    * reference (root ""). `strict` (native commits) fails loudly when a
+    * file is missing from the pass; an import keeps such a file's footer
+    * stats, unindexed. No-op when there is nothing to compute.
+    */
+  private def sketchPass(spark: SparkSession, root: String,
+      sidecarRoot: String, stats: Seq[FileStat], schema: StructType,
+      under: Seq[StructField], sketches: Sketches,
+      strict: Boolean): Seq[FileStat] = {
+    if (stats.isEmpty || (under.isEmpty && sketches.isEmpty)) return stats
+    val bloomCols = sketches.bloom.toSeq.flatMap(_._1)
+    val ndvCols = sketches.ndv.toSeq.flatMap(_._1)
+    val passFields = (under ++ (bloomCols ++ ndvCols)
+      .flatMap(c => schema.fields.find(_.name == c))).distinctBy(_.name)
     val df = spark.read.schema(StructType(passFields))
-      .parquet(foot.map(f => dataPath(root, f.rel)): _*)
+      .parquet(stats.map(s => dataPath(root, s.path)): _*)
     val aggs = under.flatMap { f =>
       Seq(
         statRender(min(col(f.name)), f.dataType).as(s"min__${f.name}"),
         statRender(max(col(f.name)), f.dataType).as(s"max__${f.name}"),
         sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"nulls__${f.name}"))
-    } ++ summed.map { f =>
-      // widened to DECIMAL(38,0) so a file-level sum cannot overflow
-      sum(col(f.name).cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-        .cast("string").as(s"sum__${f.name}")
-    } ++ bloomSpec.toSeq.flatMap { case (cols, items, bits) =>
-      // bloom sketches ride the residual pass: the engine's own
-      // BloomFilterAggregate over xxhash64 of the column
+    } ++ sketches.bloom.toSeq.flatMap { case (cols, items, bits) =>
+      // the engine's own BloomFilterAggregate over xxhash64 of the column
       // (BloomFilterMightContain's exact build contract)
       cols.map { c =>
         import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -1146,133 +1259,46 @@ object CommitLog {
               CatLit(items), CatLit(bits)).toAggregateExpression())
           .as(s"bloom__$c")
       }
-    } ++ ndvSpec.toSeq.flatMap { case (cols, lgk) =>
-      // NDV sketches likewise: datasketches HLL, binary-mergeable
+    } ++ sketches.ndv.toSeq.flatMap { case (cols, lgk) =>
+      // datasketches HLL, binary-mergeable
       cols.map(c => hll_sketch_agg(col(c), lit(lgk)).as(s"ndv__$c"))
     }
     val rows = df.groupBy(input_file_name().as("file__"))
-      .agg(aggs.head, aggs.tail: _*).collect() // one row per staged file
-    val byRel: Map[String, org.apache.spark.sql.Row] = rows.toSeq.map { r =>
+      .agg(aggs.head, aggs.tail: _*).collect() // one row per file
+    // exact path first; a suffix match (the longest) covers a root that
+    // Spark reports in another spelling
+    val byAbs = stats.map(s => dataPath(root, s.path) -> s.path).toMap
+    val byRel: Map[String, org.apache.spark.sql.Row] = rows.toSeq.flatMap { r =>
       val abs = decodeFileName(r.getAs[String]("file__"))
-      foot.map(_.rel).find(f => abs.endsWith(f))
-        .getOrElse(sys.error(s"staged file $abs not in commit set")) -> r
+      byAbs.get(abs)
+        .orElse(stats.map(_.path).filter(abs.endsWith).maxByOption(_.length))
+        .orElse(if (strict) sys.error(s"staged file $abs not in commit set") else None)
+        .map(_ -> r)
     }.toMap
-    base.map { st =>
-      val r = byRel.getOrElse(st.path,
-        sys.error(s"staged file ${st.path} missing from residual stats pass"))
-      def s(prefix: String): Map[String, String] = under.flatMap { f =>
-        Option(r.getAs[String](s"${prefix}__${f.name}")).map(f.name -> _)
-      }.toMap
-      val bloomRel = bloomSpec.flatMap { case (cols, _, _) =>
-        val built = cols.flatMap(c =>
-          Option(r.getAs[Array[Byte]](s"bloom__$c")).map(c -> _))
-        if (built.isEmpty) None
-        else Some(writeSketchSidecar(root, "_bloom", "gblm", BloomMagic, built))
-      }
-      val ndvRel = ndvSpec.flatMap { case (cols, _) =>
-        val built = cols.flatMap(c =>
-          Option(r.getAs[Array[Byte]](s"ndv__$c")).map(c -> _))
-        if (built.isEmpty) None
-        else Some(writeSketchSidecar(root, "_ndv", "gndv", NdvMagic, built))
-      }
-      st.copy(
-        mins = st.minsOrEmpty ++ s("min"),
-        maxs = st.maxsOrEmpty ++ s("max"),
-        nullCounts = Option(st.nullCounts).getOrElse(Map.empty) ++
-          under.map(f => f.name -> r.getAs[Long](s"nulls__${f.name}")).toMap,
-        bloom = bloomRel.orNull, ndv = ndvRel.orNull,
-        sums = summed.flatMap(f =>
-          Option(r.getAs[String](s"sum__${f.name}")).map(f.name -> _)).toMap)
+    def sidecar(r: org.apache.spark.sql.Row, cols: Seq[String], prefix: String,
+        sub: String, ext: String, magic: Int): String = {
+      val built = cols.flatMap(c =>
+        Option(r.getAs[Array[Byte]](s"${prefix}__$c")).map(c -> _))
+      if (built.isEmpty) null
+      else writeSketchSidecar(sidecarRoot, sub, ext, magic, built)
     }
-  }
-
-  /** Staged-bytes ceiling for the driver-side sums read (the residual
-    * pass's small-commit fast path); above it the distributed pass runs.
-    */
-  private[sources] val DriverSumBytesConf = "spark.graft.stats.driverSumBytes"
-  private val DefaultDriverSumBytes = 256L << 20
-
-  /** Exact integral sums of `cols` over one parquet file, read with the
-    * parquet column reader on the DRIVER (the parquet-cli dump iteration
-    * pattern: no-op converters, definition-level null checks, getLong/
-    * getInteger per value). Accumulates in long with an overflow
-    * escape to BigInteger — value-equal to the distributed pass's
-    * `sum(CAST(col AS DECIMAL(38,0)))`. All-null and absent columns are
-    * OMITTED, matching SQL `sum`'s null-on-empty contract.
-    */
-  private def driverFileSums(conf: org.apache.hadoop.conf.Configuration,
-      abs: String, cols: Seq[StructField]): Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(abs), conf)
-    Using.resource(org.apache.parquet.hadoop.ParquetFileReader.open(in)) { r =>
-      val md = r.getFooter
-      val schema = md.getFileMetaData.getSchema
-      val createdBy = md.getFileMetaData.getCreatedBy
-      val noopGroup: GroupConverter = new GroupConverter {
-        override def getConverter(i: Int): Converter = new PrimitiveConverter {}
-        override def start(): Unit = ()
-        override def end(): Unit = ()
+    stats.map { st =>
+      byRel.get(st.path) match {
+        case None if strict =>
+          sys.error(s"staged file ${st.path} missing from residual stats pass")
+        case None => st
+        case Some(r) =>
+          def s(prefix: String): Map[String, String] = under.flatMap { f =>
+            Option(r.getAs[String](s"${prefix}__${f.name}")).map(f.name -> _)
+          }.toMap
+          st.copy(
+            mins = st.minsOrEmpty ++ s("min"),
+            maxs = st.maxsOrEmpty ++ s("max"),
+            nullCounts = Option(st.nullCounts).getOrElse(Map.empty) ++
+              under.map(f => f.name -> r.getAs[Long](s"nulls__${f.name}")).toMap,
+            bloom = sidecar(r, bloomCols, "bloom", "_bloom", "gblm", BloomMagic),
+            ndv = sidecar(r, ndvCols, "ndv", "_ndv", "gndv", NdvMagic))
       }
-      val wanted = cols.flatMap { f =>
-        schema.getColumns.asScala.find(cd =>
-          cd.getPath.length == 1 && cd.getPath()(0) == f.name)
-          .map(f.name -> _)
-      }
-      val acc = scala.collection.mutable.Map[String, java.math.BigInteger]()
-      if (wanted.nonEmpty) {
-        var pages = r.readNextRowGroup()
-        while (pages != null) {
-          val store = new org.apache.parquet.column.impl.ColumnReadStoreImpl(
-            pages, noopGroup, schema, createdBy)
-          wanted.foreach { case (name, cd) =>
-            val cr = store.getColumnReader(cd)
-            val maxDef = cd.getMaxDefinitionLevel
-            val isLong = cd.getPrimitiveType.getPrimitiveTypeName ==
-              PrimitiveTypeName.INT64
-            // foreign files may annotate INT32 as UNSIGNED — widen the
-            // raw bits instead of sign-extending (Spark's read semantics)
-            val unsigned32 = !isLong &&
-              (cd.getPrimitiveType.getLogicalTypeAnnotation match {
-                case a: org.apache.parquet.schema.LogicalTypeAnnotation
-                    .IntLogicalTypeAnnotation => !a.isSigned
-                case _ => false
-              })
-            val n = cr.getTotalValueCount
-            var i = 0L
-            var s = 0L
-            var big: java.math.BigInteger = null
-            var nonNull = false
-            while (i < n) {
-              if (cr.getCurrentDefinitionLevel == maxDef) {
-                val v =
-                  if (isLong) cr.getLong
-                  else if (unsigned32) cr.getInteger.toLong & 0xFFFFFFFFL
-                  else cr.getInteger.toLong
-                nonNull = true
-                if (big == null) {
-                  val t = s + v
-                  if (((s ^ t) & (v ^ t)) < 0L) // i64 overflow: escape
-                    big = java.math.BigInteger.valueOf(s)
-                      .add(java.math.BigInteger.valueOf(v))
-                  else s = t
-                } else big = big.add(java.math.BigInteger.valueOf(v))
-              }
-              cr.consume()
-              i += 1
-            }
-            if (nonNull) {
-              val part =
-                if (big == null) java.math.BigInteger.valueOf(s) else big
-              acc(name) = acc.get(name).map(_.add(part)).getOrElse(part)
-            }
-          }
-          pages = r.readNextRowGroup()
-        }
-      }
-      acc.iterator.map { case (k, v) => k -> v.toString }.toMap
     }
   }
 
@@ -1466,41 +1492,15 @@ object CommitLog {
       f.key(p) -> f.derive(p, dt)
     }
     val files = stage(physDf, root, partCols, preArranged, maxRecordsPerFile)
-    // Bloom indexing is a WRITE-TIME choice, sticky per table via the
-    // `bloom.columns`/`bloom.bits`/`bloom.items` TABLE properties (the
-    // reference point: Delta's delta.bloomFilter column property) with
-    // the session conf as a per-session override: logical names in
-    // either, physical names on disk. Every write path — appends,
-    // streaming appendTxn, compact/OPTIMIZE/DML rewrites — passes through
-    // here, so an indexed table stays indexed for every writer without
-    // per-session setup.
+    // Every write path — appends, streaming appendTxn, compact/OPTIMIZE/
+    // DML rewrites — passes through here, so an indexed table stays
+    // indexed for every writer without per-session setup.
     val sess = df.sparkSession
-    def opt(confKey: String, propKey: String): Option[String] =
-      sess.conf.getOption(confKey).filter(_.nonEmpty)
-        .orElse(props.get(propKey)).filter(_.nonEmpty)
-    val bloomCols = opt(BloomColumnsConf, "bloom.columns").getOrElse("")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      .map(p)
-      .filter(c => physDf.schema.fields.exists(f =>
-        f.name == c && bloomSupported(f.dataType)))
-    val bloomSpec =
-      if (bloomCols.isEmpty) None
-      else Some((bloomCols,
-        opt(BloomItemsConf, "bloom.items").getOrElse(DefaultBloomItems.toString).toLong,
-        opt(BloomBitsConf, "bloom.bits").getOrElse(DefaultBloomBits.toString).toLong))
-    // NDV sketches: same sticky-property + session-override discipline
-    val ndvCols = opt(NdvColumnsConf, "ndv.columns").getOrElse("")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      .map(p)
-      .filter(c => physDf.schema.fields.exists(f =>
-        f.name == c && ndvSupported(f.dataType)))
-    val ndvSpec =
-      if (ndvCols.isEmpty) None
-      else Some((ndvCols,
-        opt(NdvLgkConf, "ndv.lgk").getOrElse(DefaultNdvLgk.toString).toInt))
+    val sketches = sketchesFor(sess, physDf.schema, props, p)
     // Exact integral sums (the metadata-answered SUM feature): parquet
     // footers carry no sums, so these are the one stat that still costs a
-    // (column-pruned) data read per commit. Default '*' = every integral
+    // data read per commit (the summed columns' chunks, on the same open
+    // that reads the footer). Default '*' = every integral
     // column, preserving the historical answering surface; a table that
     // wants pure-footer commits sets `sums.columns` to '' (sticky
     // property, session conf override — the bloom/ndv discipline).
@@ -1517,7 +1517,7 @@ object CommitLog {
     // zone-safe rendering); transform entries parse their derived value
     // back out of the file's own __gp_<key>=<value> path segments.
     val transformKeys = fields.filterNot(_.fn == "identity").map(_.key(p)).toSet
-    statsFor(sess, root, files, physDf.schema, bloomSpec, ndvSpec, sumCols).map { st =>
+    statsFor(sess, root, files, physDf.schema, sketches, sumCols).map { st =>
       val idTuple = fields.filter(_.fn == "identity")
         .flatMap(f => st.minsOrEmpty.get(p(f.source)).map(p(f.source) -> _))
         .toMap
@@ -1762,7 +1762,7 @@ object CommitLog {
     * native DV writer records) — so readers apply imported DVs through
     * the identical anti-join. Fully DISTRIBUTED: positions stay in the
     * DataFrame end-to-end (duplicate marks dedupe in the shuffle, the
-    * DV parquet lands via one partitionBy write keyed on a path digest);
+    * DV parquet lands through the native DV write, [[stageDV]]);
     * the driver holds only the DV'd FILE LIST — one row per file, never
     * a position set — so an import of billions of dead positions is a
     * normal Spark job, not a driver OOM.
@@ -1774,37 +1774,11 @@ object CommitLog {
     val files = marks.select(col("file").cast("string"))
       .distinct().collect().map(_.getString(0)).toSeq
     if (files.isEmpty) return Map.empty
-    val sub = s"data/${UUID.randomUUID()}"
-    marks
-      .select(col("file").cast("string").as("file"),
-        col("pos").cast("long").as("pos"))
-      .distinct() // several delete files may mark the same row
-      .withColumn("__dv_k", sha2(col("file"), 256).substr(1, 16))
-      .select(col("__dv_k"), col("pos"))
-      .repartition(col("__dv_k"))
-      .sortWithinPartitions("pos")
-      // exactly ONE parquet per DV key, whatever the session's
-      // maxRecordsPerFile says — a split file would silently drop the
-      // positions landing in the shadowed part (resurrected rows)
-      .write.option("maxRecordsPerFile", 0L)
-      .partitionBy("__dv_k").parquet(s"$root/$sub")
-    val byKey = files.map(f => dvKey(f) -> f).toMap
-    val rootPath = Paths.get(root)
-    val found = withWalk(Paths.get(root, sub))(_.filter { p =>
-      val n = p.getFileName.toString
-      Files.isRegularFile(p) && n.endsWith(".parquet") &&
-        !n.startsWith("_") && !n.startsWith(".")
-    }.map { p =>
-      p.getParent.getFileName.toString.stripPrefix("__dv_k=") ->
-        rootPath.relativize(p).toString
-    }.toSeq)
-    found.groupBy(_._1).collect { case (k, vs) if vs.sizeIs > 1 => k }
-      .headOption.foreach(k => sys.error(
-        s"imported DV key $k split across multiple parquet files — " +
-          "refusing a staging layout that would drop delete positions"))
-    found.map { case (k, rel) =>
-      byKey.getOrElse(k, sys.error(s"unexpected imported DV key '$k'")) -> rel
-    }.toMap
+    stageDV(marks
+      .select(col("file").cast("string").as("__dv_rel"),
+        col("pos").cast("long").as("__dv_pos"))
+      .distinct(), // several delete files may mark the same row
+      root, files)
   }
 
   /** Footer-derived per-file statistics for EXTERNALLY-managed parquet an
@@ -1816,87 +1790,30 @@ object CommitLog {
     * timestamps, NaN-dropped fp bounds, >4 KB binary bounds — the foreign
     * files this path exists for) simply carry NO bounds here (they never
     * mis-prune, and [[refreshStats]]/ANALYZE later pays the scan that
-    * derives them exactly); there is deliberately no residual pass at
-    * import time. Row counts and byte sizes come from the footer, exact.
+    * derives them exactly); there are deliberately no sums and no
+    * untrusted-column pass at import time. Row counts and byte sizes come
+    * from the footer, exact. With `sidecarRoot`, a session that opts in
+    * via `spark.graft.bloom.columns` / `ndv.columns` (the write-path confs —
+    * an import has no table properties yet) gets the same bloom/NDV
+    * sketches a native commit builds, from [[sketchPass]] over the named
+    * columns of the referenced files; the sidecars land under the TARGET
+    * root while the foreign data files stay untouched. No opt-in →
+    * pure-metadata import.
     */
   def importFooterStats(spark: SparkSession, schema: StructType,
       files: Seq[String], sidecarRoot: Option[String] = None): Seq[FileStat] = {
     val tracked = schema.fields.filter(f => statTracked(f.dataType)).toSeq
-    val base = readFooterStats(spark, "", files, tracked)
+    val base = readFileStats(spark, "", files, tracked, summed = Nil)
+      .map(_.stat)
       // the native-commit invariant — 0-row files never enter the
       // manifest (statsFor filters them) — holds for imports too: a
       // foreign snapshot referencing an empty parquet contributes
       // nothing but manifest noise
       .filter(_.rows > 0L)
-      .map(f => FileStat(f.rel, f.rows, f.bytes, f.mins, f.maxs, f.nulls))
     sidecarRoot match {
-      case Some(root) => importSidecars(spark, root, schema, base)
+      case Some(root) => sketchPass(spark, "", root, base, schema, under = Nil,
+        sketchesFor(spark, schema, props = Map.empty), strict = false)
       case None => base
-    }
-  }
-
-  /** Bloom/NDV sidecars for IMPORTED by-reference files (r10): when the
-    * session opts in via `spark.graft.bloom.columns` / `ndv.columns`
-    * (the write-path confs — an import has no table properties yet),
-    * one column-pruned pass over the referenced files builds the same
-    * sketches a native commit's residual pass would, and the sidecars
-    * land under the TARGET root (`data/_bloom`/`data/_ndv`, vacuum's
-    * walk reclaims them normally) while the foreign data files stay
-    * untouched. Point-lookup skipping then lights up at import, not
-    * first at OPTIMIZE/refresh. No opt-in → pure-metadata import,
-    * exactly as before. Cost: the scan OPTIMIZE would pay later, paid
-    * once, only over the named columns.
-    */
-  private def importSidecars(spark: SparkSession, root: String,
-      schema: StructType, stats: Seq[FileStat]): Seq[FileStat] = {
-    def cols(conf: String, ok: DataType => Boolean): Seq[String] =
-      spark.conf.getOption(conf).getOrElse("")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        .filter(c => schema.fields.exists(f => f.name == c && ok(f.dataType)))
-    val bloomCols = cols(BloomColumnsConf, bloomSupported)
-    val ndvCols = cols(NdvColumnsConf, ndvSupported)
-    if ((bloomCols.isEmpty && ndvCols.isEmpty) || stats.isEmpty) return stats
-    val items = spark.conf.getOption(BloomItemsConf)
-      .getOrElse(DefaultBloomItems.toString).toLong
-    val bits = spark.conf.getOption(BloomBitsConf)
-      .getOrElse(DefaultBloomBits.toString).toLong
-    val lgk = spark.conf.getOption(NdvLgkConf)
-      .getOrElse(DefaultNdvLgk.toString).toInt
-    val passFields = (bloomCols ++ ndvCols).distinct
-      .flatMap(c => schema.fields.find(_.name == c))
-    val df = spark.read.schema(StructType(passFields))
-      .parquet(stats.map(_.path): _*)
-    val aggs = bloomCols.map { c =>
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-      import org.apache.spark.sql.catalyst.expressions.{Literal => CatLit, XxHash64}
-      GraftBridge.column(
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(new XxHash64(Seq(UnresolvedAttribute(Seq(c)))),
-            CatLit(items), CatLit(bits)).toAggregateExpression())
-        .as(s"bloom__$c")
-    } ++ ndvCols.map(c => hll_sketch_agg(col(c), lit(lgk)).as(s"ndv__$c"))
-    val rows = df.groupBy(input_file_name().as("file__"))
-      .agg(aggs.head, aggs.tail: _*).collect() // one row per imported file
-    val byPath = rows.toSeq
-      .map(r => decodeFileName(r.getAs[String]("file__")) -> r).toMap
-    stats.map { st =>
-      byPath.get(st.path) match {
-        case None => st // e.g. a file whose named columns are all absent
-        case Some(r) =>
-          val bloomRel = {
-            val built = bloomCols.flatMap(c =>
-              Option(r.getAs[Array[Byte]](s"bloom__$c")).map(c -> _))
-            if (built.isEmpty) None
-            else Some(writeSketchSidecar(root, "_bloom", "gblm", BloomMagic, built))
-          }
-          val ndvRel = {
-            val built = ndvCols.flatMap(c =>
-              Option(r.getAs[Array[Byte]](s"ndv__$c")).map(c -> _))
-            if (built.isEmpty) None
-            else Some(writeSketchSidecar(root, "_ndv", "gndv", NdvMagic, built))
-          }
-          st.copy(bloom = bloomRel.orNull, ndv = ndvRel.orNull)
-      }
     }
   }
 
@@ -4075,15 +3992,8 @@ object CommitLog {
       .write.option("maxRecordsPerFile", 0L)
       .partitionBy("__dv_k").parquet(s"$root/$sub")
     val byKey = files.map(f => dvKey(f) -> f).toMap
-    val rootPath = Paths.get(root)
-    val found = withWalk(Paths.get(root, sub))(_.filter { p =>
-      val n = p.getFileName.toString
-      Files.isRegularFile(p) && n.endsWith(".parquet") &&
-        !n.startsWith("_") && !n.startsWith(".")
-    }.map { p =>
-      p.getParent.getFileName.toString.stripPrefix("__dv_k=") ->
-        rootPath.relativize(p).toString
-    }.toSeq)
+    val found = stagedLeaves(root, sub).map(rel =>
+      Paths.get(rel).getParent.getFileName.toString.stripPrefix("__dv_k=") -> rel)
     found.groupBy(_._1).collect { case (k, vs) if vs.sizeIs > 1 => k }
       .headOption.foreach(k => sys.error(
         s"DV key $k split across multiple parquet files — refusing a " +

@@ -14,9 +14,10 @@ import graft.SparkTestBase
   * for EVERY tracked type; (2) semantic edges — NaN floats, all-null
   * columns, >4 KB string bounds degrade to the residual pass or to
   * absent stats, never to wrong values; (3) the cost claim itself — a
-  * plain append re-reads at most the residual columns, and with sums off
-  * it re-reads (nearly) nothing, machine-checked through Spark's own
-  * task input metrics.
+  * plain append runs no Spark read of its data (the exact sums come off
+  * the same per-file open as the footer), machine-checked through Spark's
+  * own task input metrics; (4) the exact sums equal a per-file scan on
+  * both dispatch branches and beside the untrusted-column pass.
   */
 class CommitLogFooterStatsSpec extends SparkTestBase {
 
@@ -180,8 +181,8 @@ class CommitLogFooterStatsSpec extends SparkTestBase {
     // a fat string column dominates the bytes; one long key rides along
     val df = spark.range(2000).selectExpr(
       "id", "repeat(uuid(), 20) AS payload")
-    // default ('*'): the residual pass reads ONLY the integral column —
-    // a small fraction of the staged bytes
+    // default ('*'): the exact sums come off the same per-file open as
+    // the footer, so no Spark job reads the staged bytes
     val root1 = tmp()
     val withSums = inputBytesDuring { CommitLog.append(df, root1) }
     val staged = statsOf(root1).map(_.bytes).sum
@@ -210,7 +211,7 @@ class CommitLogFooterStatsSpec extends SparkTestBase {
       "driver-parallel branch, and 0-row files are filtered at import") {
     import scala.jdk.CollectionConverters._
     // 193 one-row files — partitionBy guarantees exactly one non-empty
-    // leaf per key, pushing readFooterStats onto its Spark-job path
+    // leaf per key, pushing readFileStats onto its Spark-job path
     val dir = tmp() + "/t"
     spark.range(193).selectExpr("id AS k", "id * 10 AS v", "uuid() AS s")
       .repartition(8)
@@ -243,6 +244,23 @@ class CommitLogFooterStatsSpec extends SparkTestBase {
       assert(s.minsOrEmpty("v") == s.maxsOrEmpty("v"))
     }
 
+    // the job branch computes exact sums too: refreshStats over all 193
+    // imported files (job path) and over the subset (driver-parallel)
+    def refreshed(paths: Seq[String]): Map[String, Map[String, String]] = {
+      val root = tmp()
+      CommitLog.importSnapshot(root, schema,
+        paths.map(p => CommitLog.FileStat(p, 1L)))
+      CommitLog.refreshStats(spark, root, onlyMissing = false)
+      statsOf(root).map(s => s.path -> s.sumsOrEmpty).toMap
+    }
+    val jobSums = refreshed(files)
+    assert(jobSums.size == 193)
+    refreshed(sub).foreach { case (p, sums) =>
+      assert(sums == jobSums(p), s"driver vs job sums of $p")
+    }
+    val scan = scannedSums(files, Seq("v"))
+    files.foreach(f => assert(jobSums(f) == Map("v" -> scan(f).head), f))
+
     // 0-row files never enter import-derived stats (the native-commit
     // manifest invariant holds for imports too)
     val emptyDir = tmp() + "/e"
@@ -260,9 +278,24 @@ class CommitLogFooterStatsSpec extends SparkTestBase {
     }
   }
 
-  test("driver-side sums fast path matches the distributed residual pass " +
-      "(negatives, nulls, multi-file, overflow-safe accumulation)") {
-    import org.apache.spark.sql.functions._
+  /** Per-file `sum(CAST(c AS DECIMAL(38,0)))` by a direct scan — the
+    * reference the stats reader's exact sums must equal — keyed by the
+    * file's absolute path; all-null columns map to null.
+    */
+  private def scannedSums(files: Seq[String], cols: Seq[String])
+      : Map[String, Seq[String]] =
+    spark.read.parquet(files: _*)
+      .groupBy(input_file_name().as("f"))
+      .agg(sum(col(cols.head).cast("decimal(38,0)")).cast("string"),
+        cols.tail.map(c => sum(col(c).cast("decimal(38,0)")).cast("string")): _*)
+      .collect().map { r =>
+        new java.net.URI(r.getString(0)).getPath ->
+          cols.indices.map(i => r.getString(i + 1))
+      }.toMap
+
+  test("per-file sums from the stats reader match a per-file scan on a " +
+      "plain append and when the untrusted-column pass runs (negatives, " +
+      "nulls, multi-file, overflow-safe accumulation)") {
     // values exercising sign, null skipping, and large magnitudes
     val df = spark.range(10000).selectExpr(
       "id",
@@ -271,36 +304,47 @@ class CommitLogFooterStatsSpec extends SparkTestBase {
       "CAST(NULL AS BIGINT) AS allnull",
       "uuid() AS s")
       .repartition(3)
-    // driver fast path (default cap)
+    val summed = Seq("id", "big", "i32")
+    def check(root: String, stats: Seq[CommitLog.FileStat]): Unit = {
+      assert(stats.size > 1, "fixture must stage multiple files")
+      val abs = stats.map(st => CommitLog.dataPath(root, st.path))
+      val scan = scannedSums(abs, summed)
+      stats.zip(abs).foreach { case (st, a) =>
+        summed.zip(scan(a)).foreach { case (c, exp) =>
+          assert(st.sumsOrEmpty.get(c).contains(exp), s"$c sum of ${st.path}")
+        }
+        // all-null columns are omitted (sum-of-empty is null)
+        assert(!st.sumsOrEmpty.contains("allnull"))
+      }
+    }
+    // a native append: footer stats only, no Spark pass
     val r1 = tmp()
     CommitLog.append(df, r1)
-    // distributed pass, forced by a zero cap
+    check(r1, statsOf(r1))
+
+    // refreshStats over TIMESTAMP(MILLIS) foreign files: the ts column's
+    // footer is untrusted, so the Spark pass runs beside the sums
+    val foreign = tmp() + "/millis"
+    val key = "spark.sql.parquet.outputTimestampType"
+    spark.conf.set(key, "TIMESTAMP_MILLIS")
+    try df.selectExpr("*", "timestamp_millis(1700000000000 + id) AS ts")
+      .write.parquet(foreign)
+    finally spark.conf.unset(key)
+    val parts = {
+      import scala.jdk.CollectionConverters._
+      Files.list(java.nio.file.Paths.get(foreign)).iterator().asScala
+        .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
+    }
     val r2 = tmp()
-    spark.conf.set("spark.graft.stats.driverSumBytes", "0")
-    try CommitLog.append(df, r2)
-    finally spark.conf.unset("spark.graft.stats.driverSumBytes")
-    def total(root: String, c: String): Option[BigInt] = {
-      val parts = statsOf(root).flatMap(_.sumsOrEmpty.get(c)).map(BigInt(_))
-      if (parts.isEmpty) None else Some(parts.sum)
-    }
-    for (c <- Seq("id", "big", "i32")) {
-      assert(total(r1, c).isDefined, s"driver path produced no sum for $c")
-      assert(total(r1, c) == total(r2, c), s"sum mismatch on $c")
-    }
-    // all-null columns are omitted on BOTH paths (sum-of-empty is null)
-    assert(total(r1, "allnull").isEmpty && total(r2, "allnull").isEmpty)
-    // and the per-FILE maps agree file by file, not just in total
-    val by1 = statsOf(r1).map(s0 => s0.path -> s0.sumsOrEmpty).toMap
-    assert(statsOf(r1).size > 1, "fixture must stage multiple files")
-    // cross-check the driver path against a direct scan per file
-    statsOf(r1).foreach { st =>
-      val one = spark.read.parquet(s"$r1/" + st.path)
-        .agg(sum(col("id").cast("decimal(38,0)")).cast("string"),
-          sum(col("big").cast("decimal(38,0)")).cast("string"))
-        .head()
-      assert(st.sumsOrEmpty("id") == one.getString(0), s"id sum ${st.path}")
-      assert(st.sumsOrEmpty("big") == one.getString(1), s"big sum ${st.path}")
-    }
-    val _ = by1
+    CommitLog.importSnapshot(r2,
+      df.selectExpr("*", "CAST(NULL AS TIMESTAMP) AS ts").schema,
+      parts.map(p => CommitLog.FileStat(p,
+        spark.read.parquet(p).count())))
+    CommitLog.refreshStats(spark, r2)
+    val refreshed = statsOf(r2)
+    // the untrusted-column pass ran: ts bounds exist, in unix micros
+    refreshed.foreach(st =>
+      assert(st.minsOrEmpty("ts").toLong >= 1700000000000000L, st.minsOrEmpty))
+    check(r2, refreshed)
   }
 }
