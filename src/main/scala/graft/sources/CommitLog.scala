@@ -437,8 +437,7 @@ object CommitLog {
     */
   private[sources] def readSnapshotSlim(root: String, v: Long): SlimSnapshot = {
     require(v >= 1, s"versions start at 1, got $v")
-    val lo = math.max(1L, v - CheckpointInterval)
-    val ckpt = (v to lo by -1).find(cv => Files.exists(checkpointPath(root, cv)))
+    val ckpt = (v to 1L by -1).find(cv => Files.exists(checkpointPath(root, cv)))
     ckpt match {
       case Some(cv) =>
         val base = mapper.readValue(
@@ -636,9 +635,12 @@ object CommitLog {
 
   /** Materialize the snapshot at version `v`: nearest checkpoint at or
     * below `v` plus the commit deltas after it. Checkpoints are written
-    * every [[CheckpointInterval]] commits (and by [[vacuum]] at its keep
-    * boundary), so the probe window of K+1 versions always finds one once
-    * the table is older than K commits; younger tables fold from v1.
+    * every [[CheckpointInterval]] commits (and by [[vacuum]]/[[vacuumLog]]
+    * at their keep boundary), but a multi-table prepare landing on a
+    * multiple of K skips its checkpoint, so the probe walks down to the
+    * nearest checkpoint at any distance (a vacuum boundary always has
+    * one) and folds from v1 only when there is none — never more probes
+    * than that fold reads commits.
     */
   def readManifest(root: String, v: Long): Manifest =
     hydrate(root, readSnapshotSlim(root, v))
@@ -686,6 +688,46 @@ object CommitLog {
       advanceLastCheckpoint(root, c.version)
     }
   }
+
+  /** THE write path every writer goes through: read the current version
+    * and its manifest once, let `build` stage and validate against that
+    * prior and return its commit (None = nothing to do: the current
+    * version comes back, nothing is published), then publish it as
+    * prior + 1. `retry` re-runs the whole read-build-publish under
+    * [[withRetry]] when a concurrent writer takes the version first.
+    * With a `marker` the commit is a multi-table prepare
+    * ([[txnCommit]]): it carries the marker and skips checkpointing — a
+    * checkpoint above an undecided fold would freeze the wrong answer.
+    */
+  private def commitOn(root: String, retry: Boolean = false,
+      marker: Option[String] = None)(
+      build: Option[Manifest] => Option[Commit]): Long = {
+    def once(): Long = {
+      val prior = priorOf(root)
+      build(prior).fold(prior.fold(0L)(_.version)) { c =>
+        marker match {
+          case None => commitDelta(root, prior, c)
+          case Some(m) => publish(root, c.copy(multiTxn = m))
+        }
+        c.version
+      }
+    }
+    if (retry) withRetry()(once()) else once()
+  }
+
+  /** Current manifest of `root`, None for a table with no commits. */
+  private def priorOf(root: String): Option[Manifest] =
+    currentVersion(root).map(readManifest(root, _))
+
+  /** A commit on `prior` (None: a new table's version 1): the next
+    * version, inheriting the schema, partition spec and txn watermarks.
+    * Writers name only the fields their op changes — every other field
+    * is one the fold inherits from the prior manifest for that op.
+    */
+  private def nextCommit(prior: Option[Manifest], op: String): Commit =
+    Commit(prior.fold(1L)(_.version + 1), op, prior.map(_.schemaJson).orNull,
+      partitionBy = prior.fold(Seq.empty[String])(_.partitionByOrNil),
+      txn = prior.fold(Map.empty[String, Long])(_.txnOrEmpty))
 
   // --------------------------------------------------------------------
   // Staging: immutable data files + zone-independent stats
@@ -1692,6 +1734,51 @@ object CommitLog {
     }
   }
 
+  /** One batch staged and validated against the table state at `base`:
+    * what every append-shaped writer commits ([[append]], [[appendTxn]],
+    * and the multi-table prepares of [[multiAppend]], [[multiAppendTxn]]
+    * and [[multiDml]]'s insert-only tables).
+    */
+  private final case class PreparedAppend(root: String, df0: DataFrame,
+      base: Option[Long], schema: StructType, spec: Seq[String],
+      colMap: Map[String, String], props: Map[String, String],
+      add: Seq[FileStat]) {
+    def commit(prior: Option[Manifest], op: String): Commit =
+      nextCommit(prior, op).copy(schemaJson = schema.json, add = add,
+        partitionBy = spec)
+  }
+
+  /** The one append preparation: generated columns, `schema.mode`, the
+    * union schema, the partition spec and the new-column guard, then
+    * staging with stats and CHECK + relational enforcement over the
+    * staged rows. `staged` is an earlier preparation of the same batch:
+    * returned as is when `prior` is still its base, and its files are
+    * reused when a concurrent commit changed nothing staging depends on
+    * (spec, column mapping, properties) — validation re-runs either way,
+    * because the rows it validated against moved.
+    */
+  private def prepareAppend(df0: DataFrame, root: String,
+      prior: Option[Manifest], partitionBy: Seq[String] = Nil,
+      staged: Option[PreparedAppend] = None): PreparedAppend =
+    staged.filter(_.base == prior.map(_.version)).getOrElse {
+      val props = prior.map(_.propsOrEmpty).getOrElse(Map.empty)
+      val df = applyGenerated(df0, props)
+      guardSchemaMode(prior, df.schema)
+      val schema = prior.map(m => unionSchema(schemaOf(m), df.schema))
+        .getOrElse(df.schema)
+      val spec = effectiveSpec(prior, partitionBy)
+      if (prior.isEmpty) validatePartitionSpec(schema, spec)
+      prior.foreach(guardNewColumns(_, schema))
+      val cm = prior.map(_.colMapOrEmpty).getOrElse(Map.empty)
+      val add = staged
+        .filter(s => s.spec == spec && s.colMap == cm && s.props == props)
+        .fold(stageWithStats(df, root, spec, colMap = cm, props = props))(_.add)
+      enforceConstraints(df.sparkSession, root, prior, add, schema)
+      enforceRelational(df.sparkSession, root, prior, add, schema)
+      PreparedAppend(root, df0, prior.map(_.version), schema, spec, cm,
+        props, add)
+    }
+
   // --------------------------------------------------------------------
   // Transactions
   // --------------------------------------------------------------------
@@ -1708,29 +1795,37 @@ object CommitLog {
     * later plain appends, [[merge]], [[delete]], [[compact]] and
     * [[cluster]] all preserve it.
     */
-  def append(df0: DataFrame, root: String, partitionBy: Seq[String] = Nil): Long = {
-    val base = currentVersion(root)
-    val prior = base.map(readManifest(root, _))
-    val v = base.getOrElse(0L) + 1
-    val df = applyGenerated(df0,
-      prior.map(_.propsOrEmpty).getOrElse(Map.empty))
-    guardSchemaMode(prior, df.schema)
-    val schema = prior.map(m => unionSchema(schemaOf(m), df.schema))
-      .getOrElse(df.schema)
-    val spec = effectiveSpec(prior, partitionBy)
-    if (prior.isEmpty) validatePartitionSpec(schema, spec)
-    prior.foreach(guardNewColumns(_, schema))
-    val add = stageWithStats(df, root, spec,
-      colMap = prior.map(_.colMapOrEmpty).getOrElse(Map.empty),
-      props = prior.map(_.propsOrEmpty).getOrElse(Map.empty))
-    enforceConstraints(df.sparkSession, root, prior, add, schema)
-    enforceRelational(df.sparkSession, root, prior, add, schema)
-    commitDelta(root, prior, Commit(v, "append", schema.json, add, Nil, spec,
-      prior.map(_.txnOrEmpty).getOrElse(Map.empty)))
-    maybeAutoCompact(df.sparkSession, root,
-      prior.map(_.propsOrEmpty).getOrElse(Map.empty))
+  def append(df0: DataFrame, root: String, partitionBy: Seq[String] = Nil): Long =
+    appendOn(df0, root, partitionBy, txn = None)
+
+  /** [[append]], and with `txn` = (appId, batchId) [[appendTxn]]: a batch
+    * the appId's watermark already covers is a no-op, otherwise the commit
+    * advances the watermark atomically with the data.
+    */
+  private def appendOn(df0: DataFrame, root: String, partitionBy: Seq[String],
+      txn: Option[(String, Long)]): Long = {
+    var props = Map.empty[String, String] // the table's, for auto-compaction
+    val v = commitOn(root) { prior =>
+      if (covered(prior, txn)) None
+      else {
+        val pa = prepareAppend(df0, root, prior, partitionBy)
+        props = pa.props
+        val c = pa.commit(prior, "append")
+        Some(c.copy(txn = c.txn ++ txn))
+      }
+    }
+    maybeAutoCompact(df0.sparkSession, root, props)
     v
   }
+
+  /** Whether `txn` = (appId, batchId) is a replay: `prior`'s watermark for
+    * the appId already covers the batch.
+    */
+  private def covered(prior: Option[Manifest],
+      txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (app, b) =>
+      b <= prior.flatMap(_.txnOrEmpty.get(app)).getOrElse(Long.MinValue)
+    }
 
   /** Publish version 1 of a NEW table that REFERENCES externally-managed
     * data files by ABSOLUTE path — the interop import commit
@@ -1743,15 +1838,14 @@ object CommitLog {
   def importSnapshot(root: String, schema: StructType,
       files: Seq[FileStat],
       colMap: Map[String, String] = Map.empty,
-      dvs: Map[String, String] = Map.empty): Long = {
-    require(currentVersion(root).isEmpty, s"table already exists at $root")
+      dvs: Map[String, String] = Map.empty): Long = commitOn(root) { prior =>
+    require(prior.isEmpty, s"table already exists at $root")
     require(files.forall(_.path.startsWith("/")),
       "import references must be absolute paths")
     require(dvs.keySet.subsetOf(files.map(_.path).toSet),
       "every deletion vector must address an imported file")
-    commitDelta(root, None, Commit(1L, "import", schema.json, files, Nil, Nil,
-      colMap = colMap, dvs = dvs))
-    1L
+    Some(nextCommit(None, "import").copy(schemaJson = schema.json,
+      add = files, colMap = colMap, dvs = dvs))
   }
 
   /** Write externally-sourced deletion-vector position marks as this
@@ -1830,30 +1924,30 @@ object CommitLog {
     * DV-dead ones — the pruning contract is over file contents).
     */
   def refreshStats(spark: SparkSession, root: String,
-      onlyMissing: Boolean = true): Long = {
-    val base = currentVersion(root).getOrElse(
+      onlyMissing: Boolean = true): Long = commitOn(root) { prior =>
+    val m = prior.getOrElse(
       throw new IllegalStateException(s"no commits at $root"))
-    val m = readManifest(root, base)
     val targets = m.statsOrNil.filter(s =>
       !onlyMissing || (s.mins.isEmpty && s.maxs.isEmpty))
-    if (targets.isEmpty) return base
-    val byPath = targets.map(s => s.path -> s).toMap
-    // refreshStats IS the ANALYZE pass: always recompute exact sums for
-    // every integral column (imported files may predate the sums log, and
-    // the caller explicitly asked to pay a scan)
-    val phys = physSchema(m)
-    val fresh = statsFor(spark, root, targets.map(_.path), phys,
-        sumCols = phys.fields.toSeq.filter(f => integralType(f.dataType)).map(_.name))
-      .map { f =>
-        val prior = byPath(f.path)
-        f.copy(partitions = prior.partitionsOrEmpty,
-          bloom = prior.bloom, ndv = prior.ndv)
-      }
-    val dvCarry = m.dvsOrEmpty.filter { case (p, _) => byPath.contains(p) }
-    commitDelta(root, Some(m), Commit(base + 1, "refresh-stats",
-      m.schemaJson, fresh, targets.map(_.path), m.partitionByOrNil,
-      m.txnOrEmpty, dvs = dvCarry))
-    base + 1
+    if (targets.isEmpty) None
+    else {
+      val byPath = targets.map(s => s.path -> s).toMap
+      // refreshStats IS the ANALYZE pass: always recompute exact sums for
+      // every integral column (imported files may predate the sums log,
+      // and the caller explicitly asked to pay a scan)
+      val phys = physSchema(m)
+      val fresh = statsFor(spark, root, targets.map(_.path), phys,
+          sumCols = phys.fields.toSeq.filter(f => integralType(f.dataType))
+            .map(_.name))
+        .map { f =>
+          val old = byPath(f.path)
+          f.copy(partitions = old.partitionsOrEmpty,
+            bloom = old.bloom, ndv = old.ndv)
+        }
+      val dvCarry = m.dvsOrEmpty.filter { case (p, _) => byPath.contains(p) }
+      Some(nextCommit(prior, "refresh-stats").copy(add = fresh,
+        remove = targets.map(_.path), dvs = dvCarry))
+    }
   }
 
   /** Create an EMPTY table: version 1 records the schema and partition
@@ -1863,13 +1957,12 @@ object CommitLog {
     */
   def create(root: String, schema: StructType,
       partitionBy: Seq[String] = Nil,
-      props: Map[String, String] = Map.empty): Long = {
-    require(currentVersion(root).isEmpty, s"table already exists at $root")
+      props: Map[String, String] = Map.empty): Long = commitOn(root) { prior =>
+    require(prior.isEmpty, s"table already exists at $root")
     validatePartitionSpec(schema, partitionBy)
     validateProps(props)
-    commitDelta(root, None, Commit(1L, "create", schema.json, Nil, Nil,
-      partitionBy, props = props))
-    1L
+    Some(nextCommit(None, "create").copy(schemaJson = schema.json,
+      partitionBy = partitionBy, props = props))
   }
 
   /** Engine-read properties must parse AND be buildable where they are
@@ -2110,9 +2203,7 @@ object CommitLog {
 
   /** Current table-property map (empty for pre-props logs). */
   def tablePropertiesOf(root: String): Map[String, String] =
-    currentVersion(root)
-      .map(v => readManifest(root, v).propsOrEmpty)
-      .getOrElse(Map.empty)
+    priorOf(root).map(_.propsOrEmpty).getOrElse(Map.empty)
 
   /** What RELY join elimination needs in ONE manifest read: the current
     * properties (constraints + their validation stamps) and the two
@@ -2122,10 +2213,9 @@ object CommitLog {
       mutationV: Long, modifyV: Long)
 
   def constraintTrustOf(root: String): ConstraintTrust =
-    currentVersion(root).map { v =>
-      val m = readManifest(root, v)
-      ConstraintTrust(m.propsOrEmpty, m.mutationVOrZero, m.modifyVOrZero)
-    }.getOrElse(ConstraintTrust(Map.empty, 0L, 0L))
+    priorOf(root).map(m =>
+      ConstraintTrust(m.propsOrEmpty, m.mutationVOrZero, m.modifyVOrZero))
+      .getOrElse(ConstraintTrust(Map.empty, 0L, 0L))
 
   /** `ALTER TABLE … SET/UNSET TBLPROPERTIES`: one metadata commit carrying
     * the full post-change map (prior ++ set -- unset). Properties steer
@@ -2149,10 +2239,10 @@ object CommitLog {
     })
 
   def setTableProperties(root: String, set: Map[String, String],
-      unset: Seq[String] = Nil): Long = withRetry() {
-    val base = currentVersion(root).getOrElse(
+      unset: Seq[String] = Nil): Long = commitOn(root, retry = true) { prior =>
+    val m = prior.getOrElse(
       throw new IllegalArgumentException(s"no CommitLog table at $root"))
-    val m = readManifest(root, base)
+    val base = m.version
     (set.keys ++ unset).find(isTrustStamp).foreach(k =>
       throw new IllegalArgumentException(
         s"table property $k is a RELY validation stamp — it is written " +
@@ -2224,12 +2314,8 @@ object CommitLog {
         Seq(k, s"$k.v", s"$k.dimv")
       case k => Seq(k)
     }
-    commitDelta(root, Some(m), Commit(base + 1, "set-props", m.schemaJson,
-      Nil, Nil, m.partitionByOrNil, m.txnOrEmpty,
-      constraints = m.constraintsOrEmpty, dvs = m.dvsOrEmpty,
-      colMap = m.colMapOrEmpty, retired = m.retiredOrNil,
+    Some(nextCommit(prior, "set-props").copy(
       props = m.propsOrEmpty ++ stamped -- unsetAll))
-    base + 1
   }
 
   /** Metadata-only schema evolution: commit the union of the current
@@ -2240,15 +2326,12 @@ object CommitLog {
     * null; time travel keeps each version's own schema.
     */
   def evolveSchema(root: String, newSchema: StructType): Long =
-    withRetry() {
-      val base = currentVersion(root).getOrElse(
+    commitOn(root, retry = true) { prior =>
+      val m = prior.getOrElse(
         throw new IllegalArgumentException(s"no CommitLog table at $root"))
-      val prior = readManifest(root, base)
-      val evolved = unionSchema(schemaOf(prior), newSchema)
-      guardNewColumns(prior, evolved)
-      commitDelta(root, Some(prior), Commit(base + 1, "evolve-schema",
-        evolved.json, Nil, Nil, prior.partitionByOrNil, prior.txnOrEmpty))
-      base + 1
+      val evolved = unionSchema(schemaOf(m), newSchema)
+      guardNewColumns(m, evolved)
+      Some(nextCommit(prior, "evolve-schema").copy(schemaJson = evolved.json))
     }
 
   /** RENAME COLUMN without rewriting a byte (the published Delta
@@ -2263,10 +2346,9 @@ object CommitLog {
     * drop the constraint, rename, re-add.
     */
   def renameColumn(root: String, from: String, to: String): Long =
-    withRetry() {
-      val base = currentVersion(root).getOrElse(
+    commitOn(root, retry = true) { prior =>
+      val m = prior.getOrElse(
         throw new IllegalArgumentException(s"no CommitLog table at $root"))
-      val m = readManifest(root, base)
       val schema = schemaOf(m)
       require(schema.fieldNames.contains(from), s"no column '$from'")
       require(!schema.fieldNames.contains(to), s"column '$to' already exists")
@@ -2295,12 +2377,10 @@ object CommitLog {
           case grain => s"$grain($to)"
         }
       }
-      commitDelta(root, Some(m), Commit(base + 1, "rename-column",
-        newSchema.json, Nil, Nil, newSpec, m.txnOrEmpty,
-        constraints = m.constraintsOrEmpty,
+      Some(nextCommit(prior, "rename-column").copy(
+        schemaJson = newSchema.json, partitionBy = newSpec,
         colMap = newMap.filterNot { case (l, p) => l == p },
         retired = m.retiredOrNil))
-      base + 1
     }
 
   /** DROP COLUMN without rewriting a byte: the logical column disappears
@@ -2311,10 +2391,9 @@ object CommitLog {
     * column is a partition column or referenced by a CHECK constraint.
     */
   def dropColumn(root: String, name: String): Long =
-    withRetry() {
-      val base = currentVersion(root).getOrElse(
+    commitOn(root, retry = true) { prior =>
+      val m = prior.getOrElse(
         throw new IllegalArgumentException(s"no CommitLog table at $root"))
-      val m = readManifest(root, base)
       val schema = schemaOf(m)
       require(schema.fieldNames.contains(name), s"no column '$name'")
       require(schema.fields.length > 1, "cannot drop the last column")
@@ -2324,12 +2403,9 @@ object CommitLog {
       require(!m.constraintsOrEmpty.values.exists(_.matches(mentions)),
         s"a CHECK constraint references '$name' — drop the constraint first")
       val newSchema = StructType(schema.fields.filterNot(_.name == name))
-      commitDelta(root, Some(m), Commit(base + 1, "drop-column",
-        newSchema.json, Nil, Nil, m.partitionByOrNil, m.txnOrEmpty,
-        constraints = m.constraintsOrEmpty,
-        colMap = m.colMapOrEmpty - name,
+      Some(nextCommit(prior, "drop-column").copy(
+        schemaJson = newSchema.json, colMap = m.colMapOrEmpty - name,
         retired = (m.retiredOrNil :+ m.physOf(name)).distinct))
-      base + 1
     }
 
   /** Register a CHECK constraint (Delta's `ALTER TABLE ADD CONSTRAINT`
@@ -2344,40 +2420,33 @@ object CommitLog {
     * the registration scan can land violating rows in the same window.
     */
   def addConstraint(spark: SparkSession, root: String,
-      name: String, check: String): Long = withRetry() {
-    val base = currentVersion(root).getOrElse(
+      name: String, check: String): Long = commitOn(root, retry = true) { prior =>
+    val m = prior.getOrElse(
       throw new IllegalStateException(s"no CommitLog table at $root"))
-    val prior = readManifest(root, base)
-    require(!prior.constraintsOrEmpty.contains(name),
+    require(!m.constraintsOrEmpty.contains(name),
       s"constraint '$name' already exists at $root")
     val bad = read(spark, root)
       .filter(coalesce(expr(check).cast("boolean"), lit(true)) === false)
     require(bad.isEmpty,
       s"existing rows violate CHECK '$name' ($check) — constraint not added")
-    commitDelta(root, Some(prior), Commit(base + 1, "add-constraint",
-      prior.schemaJson, Nil, Nil, prior.partitionByOrNil, prior.txnOrEmpty,
-      constraints = prior.constraintsOrEmpty + (name -> check)))
-    base + 1
+    Some(nextCommit(prior, "add-constraint").copy(
+      constraints = m.constraintsOrEmpty + (name -> check)))
   }
 
   /** Metadata-only removal of a CHECK constraint. */
-  def dropConstraint(root: String, name: String): Long = withRetry() {
-    val base = currentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no CommitLog table at $root"))
-    val prior = readManifest(root, base)
-    require(prior.constraintsOrEmpty.contains(name),
-      s"no constraint '$name' at $root")
-    commitDelta(root, Some(prior), Commit(base + 1, "drop-constraint",
-      prior.schemaJson, Nil, Nil, prior.partitionByOrNil, prior.txnOrEmpty,
-      constraints = prior.constraintsOrEmpty - name))
-    base + 1
-  }
+  def dropConstraint(root: String, name: String): Long =
+    commitOn(root, retry = true) { prior =>
+      val m = prior.getOrElse(
+        throw new IllegalStateException(s"no CommitLog table at $root"))
+      require(m.constraintsOrEmpty.contains(name),
+        s"no constraint '$name' at $root")
+      Some(nextCommit(prior, "drop-constraint").copy(
+        constraints = m.constraintsOrEmpty - name))
+    }
 
   /** The CHECK set enforced on writes at the current version. */
   def constraintsOf(root: String): Map[String, String] =
-    currentVersion(root)
-      .map(v => readManifest(root, v).constraintsOrEmpty)
-      .getOrElse(Map.empty)
+    priorOf(root).map(_.constraintsOrEmpty).getOrElse(Map.empty)
 
   /** Validate freshly-staged files against the table's CHECK set before
     * their commit publishes — one columnar pass over the staged bytes
@@ -2421,31 +2490,8 @@ object CommitLog {
     * failure with the SAME batchId) it yields exactly-once table commits on
     * top of at-least-once batch delivery. See [[streamingSink]].
     */
-  def appendTxn(df0: DataFrame, root: String, appId: String, batchId: Long): Long = {
-    val base = currentVersion(root)
-    val prior = base.map(readManifest(root, _))
-    val last = prior.map(_.txnOrEmpty.getOrElse(appId, Long.MinValue))
-      .getOrElse(Long.MinValue)
-    if (batchId <= last) return base.get // replay — already committed
-    val v = base.getOrElse(0L) + 1
-    val df = applyGenerated(df0,
-      prior.map(_.propsOrEmpty).getOrElse(Map.empty))
-    guardSchemaMode(prior, df.schema)
-    val schema = prior.map(m => unionSchema(schemaOf(m), df.schema))
-      .getOrElse(df.schema)
-    val spec = effectiveSpec(prior, Nil)
-    prior.foreach(guardNewColumns(_, schema))
-    val add = stageWithStats(df, root, spec,
-      colMap = prior.map(_.colMapOrEmpty).getOrElse(Map.empty),
-      props = prior.map(_.propsOrEmpty).getOrElse(Map.empty))
-    enforceConstraints(df.sparkSession, root, prior, add, schema)
-    enforceRelational(df.sparkSession, root, prior, add, schema)
-    commitDelta(root, prior, Commit(v, "append", schema.json, add, Nil, spec,
-      prior.map(_.txnOrEmpty).getOrElse(Map.empty) + (appId -> batchId)))
-    maybeAutoCompact(df.sparkSession, root,
-      prior.map(_.propsOrEmpty).getOrElse(Map.empty))
-    v
-  }
+  def appendTxn(df0: DataFrame, root: String, appId: String, batchId: Long): Long =
+    appendOn(df0, root, Nil, txn = Some(appId -> batchId))
 
   /** `foreachBatch` body writing a stream into a CommitLog table with
     * exactly-once semantics: `df.writeStream.foreachBatch(
@@ -2529,30 +2575,80 @@ object CommitLog {
     st.get == "committed"
   }
 
+  /** The multi-table transaction protocol's one coordinator (two-phase,
+    * decided lazily à la Percolator, OSDI'10), shared by [[multiAppend]],
+    * [[multiAppendTxn]], [[multiDml]] and [[forgetKeys]]: mint a fresh
+    * marker under `coord`, run `body` — all data work, then one prepare
+    * per table published under the marker through [[commitOn]] — and
+    * decide everything with ONE create-if-absent marker write. Atomicity
+    * is exactly the atomicity of that single hard-link creation, the same
+    * primitive every single-table commit already trusts. A failing body
+    * aborts its own marker first, so already-published prepares fold as
+    * no-ops at once instead of after the grace window; a concurrent
+    * resolver that aborted the marker before us surfaces as
+    * [[TxnAbortedException]] (`what` names the transaction in it).
+    */
+  private def txnCommit[A](coord: String, what: String)(body: String => A): A = {
+    Files.createDirectories(Paths.get(coord))
+    val markerPath = Paths.get(coord)
+      .resolve(s"txn-${UUID.randomUUID()}.json").toAbsolutePath.toString
+    def decide(state: String): String = {
+      val st = decideMarker(Paths.get(markerPath), state)
+      txnStateCache.put(markerPath, st)
+      st
+    }
+    val out =
+      try body(markerPath)
+      catch {
+        case scala.util.control.NonFatal(e) => decide("aborted"); throw e
+      }
+    if (decide("committed") != "committed")
+      throw new TxnAbortedException(
+        s"$what $markerPath was force-aborted by a concurrent resolver " +
+          "during prepare; no table shows any effect")
+    out
+  }
+
+  /** Publish a batch prepared by [[prepareAppend]] as a "txn-append"
+    * prepare under `marker` — pure metadata while the table is unmoved
+    * since the preparation, re-prepared against the new head otherwise.
+    * With `txn` = (appId, batchId) the prepare also advances the appId's
+    * watermark; a head whose watermark already covers the batch means a
+    * racing identical transaction won this table ([[TxnReplay]]).
+    */
+  private def publishPrepared(pa: PreparedAppend, marker: String,
+      txn: Option[(String, Long)] = None): Long =
+    commitOn(pa.root, retry = true, marker = Some(marker)) { prior =>
+      if (covered(prior, txn)) throw new TxnReplay
+      val c = prepareAppend(pa.df0, pa.root, prior, staged = Some(pa))
+        .commit(prior, "txn-append")
+      Some(c.copy(txn = c.txn ++ txn))
+    }
+
   /** Atomic multi-table append: every batch lands in its table, and ALL of
     * them become visible at one instant — the creation of a single
-    * coordinator marker file — or none ever do. The protocol (two-phase,
-    * decided lazily à la Percolator, OSDI'10):
+    * coordinator marker file ([[txnCommit]]) — or none ever do:
     *
-    *  0. STAGE, per table: ALL data work (file writes, stats, CHECK +
-    *     relational enforcement) happens before any prepare is visible —
-    *     the first published prepare starts every reader's force-abort
-    *     grace clock, so the prepare→marker window must stay metadata-only.
+    *  0. STAGE, per table: ALL data work happens before any prepare is
+    *     visible — the one append preparation every append takes
+    *     ([[prepareAppend]]: generated columns, `schema.mode`, union
+    *     schema, file writes, stats, CHECK + relational enforcement). The
+    *     first published prepare starts every reader's force-abort grace
+    *     clock, so the prepare→marker window must stay metadata-only.
     *  1. PREPARE, per table in order: publish a "txn-append" commit
-    *     carrying the marker path (`multiTxn`) — a KB-scale write; staged
-    *     files are reused unless a concurrent commit changed the partition
-    *     spec or column mapping (then that table re-stages and
-    *     re-validates before ITS prepare). The prepare occupies a version
+    *     carrying the marker path (`multiTxn`) — a KB-scale write; a
+    *     table a concurrent commit moved is re-prepared against its new
+    *     head, reusing the staged files unless the partition spec, column
+    *     mapping or properties changed. The prepare occupies a version
     *     but has NO effect until the marker decides — readers fold it as a
     *     no-op (and force-abort it if it outlives the grace window
     *     undecided, so a crashed coordinator cannot wedge its tables).
     *     Prepares skip checkpointing: a checkpoint above an undecided fold
-    *     would freeze the wrong answer.
-    *  2. COMMIT: one create-if-absent marker write. Atomicity is exactly
-    *     the atomicity of that single hard-link creation — the same
-    *     primitive every single-table commit already trusts. If a
-    *     concurrent resolver aborted us first, the link loses, no table
-    *     shows anything, and [[TxnAbortedException]] reports it.
+    *     would freeze the wrong answer (snapshot resolution then folds
+    *     from the next checkpoint down — see [[readManifest]]).
+    *  2. COMMIT: one create-if-absent marker write. If a concurrent
+    *     resolver aborted us first, the link loses, no table shows
+    *     anything, and [[TxnAbortedException]] reports it.
     *
     * Why a table format needs this: derived-table PAIRS (an inverted
     * index's postings + sizes, an IVF index's centroids + members, a cube
@@ -2566,98 +2662,19 @@ object CommitLog {
     * retries independently; rewriting ops would need cross-table conflict
     * analysis that appends don't).
     */
-  /** One table's staged-and-validated contribution to a multi-table txn —
-    * everything data-sized happens BEFORE any prepare is published, so the
-    * prepare→marker window stays metadata-only (see [[multiAppend]]).
-    */
-  private final case class PreparedBatch(df: DataFrame, root: String,
-      base: Option[Long], schema: StructType, spec: Seq[String],
-      colMap: Map[String, String], add: Seq[FileStat])
-
-  /** Stage + validate one batch against the table's CURRENT state (full
-    * data work: write, stats, CHECK + relational enforcement) without
-    * publishing anything.
-    */
-  private def prepareBatch(df: DataFrame, root: String): PreparedBatch = {
-    val base = currentVersion(root)
-    val prior = base.map(readManifest(root, _))
-    val schema = prior.map(m => unionSchema(schemaOf(m), df.schema))
-      .getOrElse(df.schema)
-    val spec = effectiveSpec(prior, Nil)
-    prior.foreach(guardNewColumns(_, schema))
-    val cm = prior.map(_.colMapOrEmpty).getOrElse(Map.empty)
-    val add = stageWithStats(df, root, spec, colMap = cm,
-      props = prior.map(_.propsOrEmpty).getOrElse(Map.empty))
-    enforceConstraints(df.sparkSession, root, prior, add, schema)
-    enforceRelational(df.sparkSession, root, prior, add, schema)
-    PreparedBatch(df, root, base, schema, spec, cm, add)
-  }
-
-  /** Publish one prepared batch as a "txn-append" prepare. Fast path
-    * (table unmoved since [[prepareBatch]]): pure metadata. If a
-    * concurrent commit landed in between, re-derive the metadata — the
-    * staged files stay reusable unless the partition spec or column
-    * mapping changed (then re-stage; the orphans are vacuum's), and
-    * CHECK/relational validation re-runs because the rows it validated
-    * against moved.
-    */
-  private def publishPrepared(pb: PreparedBatch, markerPath: String,
-      txnPatch: Map[String, Long] => Map[String, Long],
-      priorGuard: Option[Manifest] => Unit = _ => ()): Long = {
-    val cur = currentVersion(pb.root)
-    val prior = cur.map(readManifest(pb.root, _))
-    priorGuard(prior) // e.g. replay detection, on the SAME prior we publish against
-    val v = cur.getOrElse(0L) + 1
-    val (schema, spec, add) =
-      if (cur == pb.base) (pb.schema, pb.spec, pb.add)
-      else {
-        val schema = prior.map(m => unionSchema(schemaOf(m), pb.df.schema))
-          .getOrElse(pb.df.schema)
-        val spec = effectiveSpec(prior, Nil)
-        prior.foreach(guardNewColumns(_, schema))
-        val cm = prior.map(_.colMapOrEmpty).getOrElse(Map.empty)
-        val add =
-          if (spec == pb.spec && cm == pb.colMap) pb.add
-          else stageWithStats(pb.df, pb.root, spec, colMap = cm,
-            props = prior.map(_.propsOrEmpty).getOrElse(Map.empty))
-        enforceConstraints(pb.df.sparkSession, pb.root, prior, add, schema)
-        enforceRelational(pb.df.sparkSession, pb.root, prior, add, schema)
-        (schema, spec, add)
-      }
-    publish(pb.root, Commit(v, "txn-append", schema.json, add, Nil, spec,
-      txnPatch(prior.map(_.txnOrEmpty).getOrElse(Map.empty)),
-      multiTxn = markerPath))
-    v
-  }
-
   def multiAppend(batches: Seq[(DataFrame, String)],
       coord: String): Map[String, Long] = {
     require(batches.nonEmpty, "multiAppend needs at least one batch")
     val roots = batches.map(_._2)
     require(roots.distinct.size == roots.size,
       "one batch per table root (combine duplicates with union first)")
-    Files.createDirectories(Paths.get(coord))
-    val markerPath = Paths.get(coord)
-      .resolve(s"txn-${UUID.randomUUID()}.json").toAbsolutePath.toString
-    // Phase 0 — ALL data work first (staging, stats, enforcement), before
-    // any prepare is visible: a reader that folds the first prepare starts
-    // the force-abort grace clock, so the prepare→marker window must hold
-    // only the remaining prepares' metadata writes, never a data job
-    // (ADVICE r7: staging minutes between prepare and marker let any
-    // concurrent reader force-abort a healthy transaction).
-    val prepared = batches.map { case (df, root) => prepareBatch(df, root) }
-    // Phase 1 — prepares back-to-back (KB-scale commit writes each)
-    val versions = prepared.map { pb =>
-      pb.root -> withRetry() { publishPrepared(pb, markerPath, identity) }
-    }.toMap
-    // Phase 2 — one create-if-absent marker write decides everything
-    val st = decideMarker(Paths.get(markerPath), "committed")
-    txnStateCache.put(markerPath, st)
-    if (st != "committed")
-      throw new TxnAbortedException(
-        s"multi-table transaction $markerPath was force-aborted by a " +
-          "concurrent resolver during prepare; no table shows any effect")
-    versions
+    txnCommit(coord, "multi-table transaction") { marker =>
+      // phase 0 before any prepare is visible (ADVICE r7: staging minutes
+      // between prepare and marker let any concurrent reader force-abort
+      // a healthy transaction), then the prepares back-to-back
+      batches.map { case (df, root) => prepareAppend(df, root, priorOf(root)) }
+        .map(pa => pa.root -> publishPrepared(pa, marker)).toMap
+    }
   }
 
   // --------------------------------------------------------------------
@@ -2792,7 +2809,7 @@ object CommitLog {
     * commit record.
     */
   private final case class PreparedDml(root: String, base: Long,
-      commit: Commit)
+      commit: Option[Commit])
 
   /** Atomic multi-table commit of a transaction block that may carry
     * row-level DELETE/UPDATE alongside INSERTs — the pg-wire BEGIN…COMMIT
@@ -2825,26 +2842,15 @@ object CommitLog {
     require(tables.nonEmpty, "multiDml needs at least one table")
     require(tables.map(_._1).distinct.size == tables.size,
       "one entry per table root")
-    Files.createDirectories(Paths.get(coord))
-    val markerPath = Paths.get(coord)
-      .resolve(s"txn-${UUID.randomUUID()}.json").toAbsolutePath.toString
-    def fail(e: Throwable): Nothing = {
-      // fail FAST and deterministically: abort our own marker so already-
-      // published prepares fold as no-ops immediately (not after the
-      // grace window)
-      val st = decideMarker(Paths.get(markerPath), "aborted")
-      txnStateCache.put(markerPath, st)
-      throw e
-    }
-    // Phase 0 — ALL data work (staging, DV computation, enforcement)
-    val prepared: Seq[Either[PreparedBatch, PreparedDml]] =
-      try {
+    txnCommit(coord, "multi-table transaction") { marker =>
+      // Phase 0 — ALL data work (staging, DV computation, enforcement)
+      val prepared: Seq[Either[PreparedAppend, PreparedDml]] =
         tables.map { case (root, pinned, ops) =>
           val dml = ops.exists(o => !o.isInstanceOf[TxnIns])
           if (!dml) {
             val batch = ops.collect { case TxnIns(df) => df }
               .reduceLeft(_ unionByName _)
-            Left(prepareBatch(batch, root))
+            Left(prepareAppend(batch, root, priorOf(root)))
           } else {
             val base = pinned.getOrElse(throw new IllegalArgumentException(
               s"DML ops need the block's pinned version for $root " +
@@ -2954,47 +2960,36 @@ object CommitLog {
                 // matched no rows, no surviving inserts) — skip the
                 // prepare entirely; skipping cannot break atomicity
                 // because there is nothing to publish
-                Right(PreparedDml(root, base, null))
-              else Right(PreparedDml(root, base,
-                Commit(base + 1, "txn-dml", m.schemaJson, add, fullGone,
-                  m.partitionByOrNil, m.txnOrEmpty, dvs = dvEntries,
-                  multiTxn = markerPath)))
+                Right(PreparedDml(root, base, None))
+              else Right(PreparedDml(root, base, Some(
+                nextCommit(Some(m), "txn-dml").copy(add = add,
+                  remove = fullGone, dvs = dvEntries))))
             } finally state.unpersist()
           }
         }
-      } catch { case scala.util.control.NonFatal(e) => fail(e) }
-    // Phase 1 — prepares back-to-back (KB-scale commit writes each)
-    val versions =
-      try {
-        prepared.map {
-          case Left(pb) =>
-            pb.root -> withRetry() { publishPrepared(pb, markerPath, identity) }
-          case Right(pd) if pd.commit == null =>
-            pd.root -> pd.base // net no-op on this table
-          case Right(pd) =>
-            // first-committer-wins: the version we computed against must
-            // still be current; the link-create races the last inch
-            if (!currentVersion(pd.root).contains(pd.base))
+      // Phase 1 — prepares back-to-back (KB-scale commit writes each)
+      prepared.map {
+        case Left(pa) => pa.root -> publishPrepared(pa, marker)
+        case Right(pd) if pd.commit.isEmpty =>
+          pd.root -> pd.base // net no-op on this table
+        case Right(pd) =>
+          // first-committer-wins: the version we computed against must
+          // still be current (checked before resolving a moved head, which
+          // could wait out another transaction's undecided marker); the
+          // link-create races the last inch
+          if (!currentVersion(pd.root).contains(pd.base))
+            throw new TxnSerializationException(
+              s"${pd.root} moved past pinned version ${pd.base} during " +
+                "COMMIT; retry the transaction (serialization failure)")
+          try pd.root -> commitOn(pd.root, marker = Some(marker))(_ => pd.commit)
+          catch {
+            case _: CommitConflictException =>
               throw new TxnSerializationException(
-                s"${pd.root} moved past pinned version ${pd.base} during " +
-                  "COMMIT; retry the transaction (serialization failure)")
-            try { publish(pd.root, pd.commit); pd.root -> pd.commit.version }
-            catch {
-              case _: CommitConflictException =>
-                throw new TxnSerializationException(
-                  s"${pd.root} received a concurrent commit during COMMIT; " +
-                    "retry the transaction (serialization failure)")
-            }
-        }.toMap
-      } catch { case scala.util.control.NonFatal(e) => fail(e) }
-    // Phase 2 — one create-if-absent marker write decides everything
-    val st = decideMarker(Paths.get(markerPath), "committed")
-    txnStateCache.put(markerPath, st)
-    if (st != "committed")
-      throw new TxnAbortedException(
-        s"multi-table transaction $markerPath was force-aborted by a " +
-          "concurrent resolver during prepare; no table shows any effect")
-    versions
+                s"${pd.root} received a concurrent commit during COMMIT; " +
+                  "retry the transaction (serialization failure)")
+          }
+      }.toMap
+    }
   }
 
   /** Signals a duplicate multi-table batch detected mid-prepare: some
@@ -3018,44 +3013,22 @@ object CommitLog {
   def multiAppendTxn(batches: Seq[(DataFrame, String)], coord: String,
       appId: String, batchId: Long): Map[String, Long] = {
     require(batches.nonEmpty, "multiAppendTxn needs at least one batch")
-    def watermark(root: String): Long =
-      currentVersion(root).map(readManifest(root, _))
-        .map(_.txnOrEmpty.getOrElse(appId, Long.MinValue))
-        .getOrElse(Long.MinValue)
     def currents: Map[String, Long] =
       batches.map { case (_, r) =>
         r -> currentVersion(r).getOrElse(0L)
       }.toMap
-    if (batches.forall { case (_, r) => watermark(r) >= batchId })
+    if (batches.forall { case (_, r) =>
+        covered(priorOf(r), Some(appId -> batchId)) })
       return currents // full replay — already committed
-    Files.createDirectories(Paths.get(coord))
-    val markerPath = Paths.get(coord)
-      .resolve(s"txn-${UUID.randomUUID()}.json").toAbsolutePath.toString
-    try {
+    try txnCommit(coord, "multi-table transaction") { marker =>
       // data work first, prepares metadata-only — see multiAppend phase 0
-      val prepared = batches.map { case (df, root) => prepareBatch(df, root) }
-      val versions = prepared.map { pb =>
-        pb.root -> withRetry() {
-          publishPrepared(pb, markerPath, _ + (appId -> batchId),
-            priorGuard = prior =>
-              if (prior.map(_.txnOrEmpty.getOrElse(appId, Long.MinValue))
-                  .getOrElse(Long.MinValue) >= batchId)
-                throw new TxnReplay) // racing identical txn won this table
-        }
-      }.toMap
-      val st = decideMarker(Paths.get(markerPath), "committed")
-      txnStateCache.put(markerPath, st)
-      if (st != "committed")
-        throw new TxnAbortedException(
-          s"multi-table transaction $markerPath was force-aborted by a " +
-            "concurrent resolver during prepare; no table shows any effect")
-      versions
+      batches.map { case (df, root) => prepareAppend(df, root, priorOf(root)) }
+        .map(pa => pa.root -> publishPrepared(pa, marker, Some(appId -> batchId)))
+        .toMap
     } catch {
-      case _: TxnReplay =>
-        // our prepares (if any) become no-ops; the winner has the data
-        val st = decideMarker(Paths.get(markerPath), "aborted")
-        txnStateCache.put(markerPath, st)
-        currents
+      // a racing identical txn won a table: the coordinator aborted our
+      // prepares (they fold as no-ops); the winner has the data
+      case _: TxnReplay => currents
     }
   }
 
@@ -3307,8 +3280,7 @@ object CommitLog {
     * manifest, so this is an optimization, not the correctness gate).
     */
   def txnWatermark(root: String, appId: String): Option[Long] =
-    currentVersion(root)
-      .flatMap(v => readManifest(root, v).txnOrEmpty.get(appId))
+    priorOf(root).flatMap(_.txnOrEmpty.get(appId))
 
   /** [[overwrite]] with the streaming txn watermark (the exactly-once
     * contract of [[appendTxn]], for sinks that REPLACE state per batch —
@@ -3316,55 +3288,46 @@ object CommitLog {
     * current version without committing.
     */
   def overwriteTxn(df: DataFrame, root: String, appId: String,
-      batchId: Long): Long = {
-    val base = currentVersion(root)
-    val prior = base.map(readManifest(root, _))
-    val last = prior.map(_.txnOrEmpty.getOrElse(appId, Long.MinValue))
-      .getOrElse(Long.MinValue)
-    if (batchId <= last) return base.get // replay — already committed
-    val v = base.getOrElse(0L) + 1
-    val spec = prior.map(_.partitionByOrNil).getOrElse(Nil)
-    prior.foreach(guardNewColumns(_, df.schema))
-    val add = if (df.isEmpty) Nil else stageWithStats(df, root, spec,
-      colMap = prior.map(_.colMapOrEmpty).getOrElse(Map.empty),
-      props = prior.map(_.propsOrEmpty).getOrElse(Map.empty))
-    enforceConstraints(df.sparkSession, root, prior, add, df.schema)
-    commitDelta(root, prior, Commit(v, "overwrite", df.schema.json, add,
-      prior.map(_.files).getOrElse(Nil), spec,
-      prior.map(_.txnOrEmpty).getOrElse(Map.empty) + (appId -> batchId)))
-    v
-  }
+      batchId: Long): Long =
+    overwriteOn(df, root, Nil, Map.empty, txn = Some(appId -> batchId))
 
   /** Replace the table contents with `df` (zero rows allowed) atomically. */
   def overwrite(df: DataFrame, root: String, partitionBy: Seq[String] = Nil,
-      setProps: Map[String, String] = Map.empty): Long = {
-    val base = currentVersion(root)
-    val prior = base.map(readManifest(root, _))
-    val v = base.getOrElse(0L) + 1
-    // overwrite replaces contents, so an explicit spec may differ from the
-    // table's previous one; no spec inherits it.
-    val spec =
-      if (partitionBy.nonEmpty) partitionBy
-      else prior.map(_.partitionByOrNil).getOrElse(Nil)
-    prior.foreach(guardNewColumns(_, df.schema))
-    // `setProps` lands ATOMICALLY with the data (the incremental-view
-    // refresh contract: the recorded mv.srcVersion must never be observable
-    // apart from the rows it describes); an overwrite commit carries the
-    // full post-commit map, overlaid on the prior one, and foldCommit
-    // reads it only when non-empty so prop-less overwrites (and every
-    // historical log) inherit exactly as before.
-    val props0 = prior.map(_.propsOrEmpty).getOrElse(Map.empty)
-    val newProps = if (setProps.isEmpty) Map.empty[String, String]
-      else { validateProps(setProps); props0 ++ setProps }
-    val add = if (df.isEmpty) Nil else stageWithStats(df, root, spec,
-      colMap = prior.map(_.colMapOrEmpty).getOrElse(Map.empty),
-      props = if (newProps.isEmpty) props0 else newProps)
-    enforceConstraints(df.sparkSession, root, prior, add, df.schema)
-    commitDelta(root, prior, Commit(v, "overwrite", df.schema.json, add,
-      prior.map(_.files).getOrElse(Nil), spec,
-      prior.map(_.txnOrEmpty).getOrElse(Map.empty),
-      props = newProps))
-    v
+      setProps: Map[String, String] = Map.empty): Long =
+    overwriteOn(df, root, partitionBy, setProps, txn = None)
+
+  /** [[overwrite]], and with `txn` = (appId, batchId) [[overwriteTxn]]
+    * (replay = no-op, as in [[appendOn]]).
+    */
+  private def overwriteOn(df: DataFrame, root: String,
+      partitionBy: Seq[String], setProps: Map[String, String],
+      txn: Option[(String, Long)]): Long = commitOn(root) { prior =>
+    if (covered(prior, txn)) None
+    else {
+      // overwrite replaces contents, so an explicit spec may differ from
+      // the table's previous one; no spec inherits it.
+      val spec =
+        if (partitionBy.nonEmpty) partitionBy
+        else prior.map(_.partitionByOrNil).getOrElse(Nil)
+      prior.foreach(guardNewColumns(_, df.schema))
+      // `setProps` lands ATOMICALLY with the data (the incremental-view
+      // refresh contract: the recorded mv.srcVersion must never be
+      // observable apart from the rows it describes); an overwrite commit
+      // carries the full post-commit map, overlaid on the prior one, and
+      // foldCommit reads it only when non-empty so prop-less overwrites
+      // (and every historical log) inherit exactly as before.
+      val props0 = prior.map(_.propsOrEmpty).getOrElse(Map.empty)
+      val newProps = if (setProps.isEmpty) Map.empty[String, String]
+        else { validateProps(setProps); props0 ++ setProps }
+      val add = if (df.isEmpty) Nil else stageWithStats(df, root, spec,
+        colMap = prior.map(_.colMapOrEmpty).getOrElse(Map.empty),
+        props = if (newProps.isEmpty) props0 else newProps)
+      enforceConstraints(df.sparkSession, root, prior, add, df.schema)
+      val c = nextCommit(prior, "overwrite")
+      Some(c.copy(schemaJson = df.schema.json, add = add,
+        remove = prior.map(_.files).getOrElse(Nil), partitionBy = spec,
+        txn = c.txn ++ txn, props = newProps))
+    }
   }
 
   /** PARTITION SPEC EVOLUTION (the published Iceberg concept): change the
@@ -3379,17 +3342,14 @@ object CommitLog {
     * is the "we should have partitioned by day, not month" fix that
     * costs one metadata write instead of a table rewrite.
     */
-  def setPartitionSpec(root: String, spec: Seq[String]): Long = {
-    val base = currentVersion(root)
-      .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val m = readManifest(root, base)
-    val schema = schemaOf(m)
-    validatePartitionSpec(schema, spec)
-    if (spec == m.partitionByOrNil) return base // no-op
-    commitDelta(root, Some(m), Commit(base + 1, "evolve-partition",
-      m.schemaJson, Nil, Nil, spec, m.txnOrEmpty))
-    base + 1
-  }
+  def setPartitionSpec(root: String, spec: Seq[String]): Long =
+    commitOn(root) { prior =>
+      val m = prior
+        .getOrElse(throw new IllegalStateException(s"no commits at $root"))
+      validatePartitionSpec(schemaOf(m), spec)
+      if (spec == m.partitionByOrNil) None // no-op
+      else Some(nextCommit(prior, "evolve-partition").copy(partitionBy = spec))
+    }
 
   /** SHALLOW CLONE (the published Delta CLONE): create `dst` as a
     * zero-copy snapshot of `src` at `version` (default: current). The
@@ -3413,11 +3373,10 @@ object CommitLog {
     * table-sized copy job.
     */
   def shallowClone(src: String, dst: String,
-      version: Option[Long] = None): Long = {
+      version: Option[Long] = None): Long = commitOn(dst) { prior =>
     val v = version.orElse(currentVersion(src))
       .getOrElse(throw new IllegalStateException(s"no commits at $src"))
-    require(currentVersion(dst).isEmpty,
-      s"clone target $dst already has commits")
+    require(prior.isEmpty, s"clone target $dst already has commits")
     val m = readManifest(src, v)
     val stats = m.statsOrNil.map(s => s.copy(path = absPath(src, s.path),
       bloom = s.bloomOpt.map(absPath(src, _)).orNull,
@@ -3425,12 +3384,12 @@ object CommitLog {
     val dvs = m.dvsOrEmpty.map { case (d, dv) =>
       absPath(src, d) -> absPath(src, dv)
     }
-    commitDelta(dst, None, Commit(1L, "clone", m.schemaJson, stats, Nil,
-      m.partitionByOrNil, Map.empty, constraints = m.constraintsOrEmpty,
-      dvs = dvs, colMap = m.colMapOrEmpty, retired = m.retiredOrNil,
-      props = m.propsOrEmpty,
-      cloneSrc = normRoot(src), cloneVer = v))
-    1L
+    // the clone is a new sink identity: no txn watermarks carry over
+    Some(nextCommit(None, "clone").copy(schemaJson = m.schemaJson,
+      add = stats, partitionBy = m.partitionByOrNil,
+      constraints = m.constraintsOrEmpty, dvs = dvs,
+      colMap = m.colMapOrEmpty, retired = m.retiredOrNil,
+      props = m.propsOrEmpty, cloneSrc = normRoot(src), cloneVer = v))
   }
 
   private def normRoot(root: String): String =
@@ -3464,47 +3423,45 @@ object CommitLog {
     * Localize the source (OPTIMIZE/compact) to retire the cross-root
     * references. At 100 TB the promote itself stays O(metadata).
     */
-  def fastForward(src: String, clone: String): Long = withRetry() {
-    val cv = currentVersion(clone).getOrElse(
-      throw new IllegalArgumentException(s"no CommitLog table at $clone"))
-    val c1 = readCommit(clone, 1L)
-    require(c1.op == "clone" && c1.cloneSrc != null,
-      s"$clone is not a shallow clone with a recorded origin " +
-        s"(first commit op '${c1.op}') — nothing to fast-forward")
-    val srcRoot = normRoot(src)
-    require(srcRoot == c1.cloneSrc,
-      s"$clone was cloned from ${c1.cloneSrc}, not $srcRoot")
-    val base = currentVersion(src).getOrElse(
-      throw new IllegalStateException(s"no commits at $src"))
-    require(base == c1.cloneVer,
-      s"source advanced to version $base past the clone point " +
-        s"${c1.cloneVer} — not a fast-forward; reconcile the branches " +
-        "explicitly (e.g. MERGE) instead")
-    val cur = readManifest(src, base)
-    val cm = readManifest(clone, cv)
-    // clone-relative → absolute into the clone; absolute-under-source →
-    // source-relative again (unchanged shared files keep their original
-    // identity, so stats/DV/bloom keys line up with pre-branch history)
-    def reroot(p: String): String = {
-      val abs = if (p.startsWith("/")) p else absPath(clone, p)
-      if (abs.startsWith(srcRoot + "/")) abs.substring(srcRoot.length + 1)
-      else abs
+  def fastForward(src: String, clone: String): Long =
+    commitOn(src, retry = true) { prior =>
+      val cv = currentVersion(clone).getOrElse(
+        throw new IllegalArgumentException(s"no CommitLog table at $clone"))
+      val c1 = readCommit(clone, 1L)
+      require(c1.op == "clone" && c1.cloneSrc != null,
+        s"$clone is not a shallow clone with a recorded origin " +
+          s"(first commit op '${c1.op}') — nothing to fast-forward")
+      val srcRoot = normRoot(src)
+      require(srcRoot == c1.cloneSrc,
+        s"$clone was cloned from ${c1.cloneSrc}, not $srcRoot")
+      val cur = prior.getOrElse(
+        throw new IllegalStateException(s"no commits at $src"))
+      require(cur.version == c1.cloneVer,
+        s"source advanced to version ${cur.version} past the clone point " +
+          s"${c1.cloneVer} — not a fast-forward; reconcile the branches " +
+          "explicitly (e.g. MERGE) instead")
+      val cm = readManifest(clone, cv)
+      // clone-relative → absolute into the clone; absolute-under-source →
+      // source-relative again (unchanged shared files keep their original
+      // identity, so stats/DV/bloom keys line up with pre-branch history)
+      def reroot(p: String): String = {
+        val abs = if (p.startsWith("/")) p else absPath(clone, p)
+        if (abs.startsWith(srcRoot + "/")) abs.substring(srcRoot.length + 1)
+        else abs
+      }
+      val stats = cm.statsOrNil.map(s => s.copy(path = reroot(s.path),
+        bloom = s.bloomOpt.map(reroot).orNull,
+        ndv = s.ndvOpt.map(reroot).orNull))
+      // the source's txn watermarks are kept (inherited)
+      Some(nextCommit(prior, "fast-forward").copy(schemaJson = cm.schemaJson,
+        add = stats,
+        remove = cur.files,
+        partitionBy = cm.partitionByOrNil,
+        constraints = cm.constraintsOrEmpty,
+        dvs = cm.dvsOrEmpty.map { case (d, dv) => reroot(d) -> reroot(dv) },
+        colMap = cm.colMapOrEmpty, retired = cm.retiredOrNil,
+        props = cm.propsOrEmpty))
     }
-    val stats = cm.statsOrNil.map(s => s.copy(path = reroot(s.path),
-      bloom = s.bloomOpt.map(reroot).orNull,
-      ndv = s.ndvOpt.map(reroot).orNull))
-    commitDelta(src, Some(cur), Commit(base + 1, "fast-forward",
-      cm.schemaJson,
-      add = stats,
-      remove = cur.files,
-      partitionBy = cm.partitionByOrNil,
-      txn = cur.txnOrEmpty,
-      constraints = cm.constraintsOrEmpty,
-      dvs = cm.dvsOrEmpty.map { case (d, dv) => reroot(d) -> reroot(dv) },
-      colMap = cm.colMapOrEmpty, retired = cm.retiredOrNil,
-      props = cm.propsOrEmpty))
-    base + 1
-  }
 
   /** Read a snapshot: latest by default, or a pinned historical version.
     * Always reads with the LOG schema, never parquet footer inference —
@@ -3525,19 +3482,18 @@ object CommitLog {
     * On a partitioned table the layout wins: one file per partition value
     * (`nFiles` is ignored — the partition spec is the compaction target).
     */
-  def compact(spark: SparkSession, root: String, nFiles: Int = 1): Long = {
-    val base = currentVersion(root)
-      .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val prior = readManifest(root, base)
-    val spec = prior.partitionByOrNil
-    val df0 = read(spark, root, Some(base))
-    val df = if (spec.isEmpty) df0.repartition(nFiles) else df0
-    val add = stageWithStats(df, root, spec, colMap = prior.colMapOrEmpty,
-      props = prior.propsOrEmpty)
-    commitDelta(root, Some(prior), Commit(base + 1, "compact", df.schema.json,
-      add, prior.files, spec, prior.txnOrEmpty))
-    base + 1
-  }
+  def compact(spark: SparkSession, root: String, nFiles: Int = 1): Long =
+    commitOn(root) { prior =>
+      val m = prior
+        .getOrElse(throw new IllegalStateException(s"no commits at $root"))
+      val spec = m.partitionByOrNil
+      val df0 = read(spark, root, Some(m.version))
+      val df = if (spec.isEmpty) df0.repartition(nFiles) else df0
+      val add = stageWithStats(df, root, spec, colMap = m.colMapOrEmpty,
+        props = m.propsOrEmpty)
+      Some(nextCommit(prior, "compact").copy(schemaJson = df.schema.json,
+        add = add, remove = m.files))
+    }
 
   // --------------------------------------------------------------------
   // DML: copy-on-write MERGE / DELETE
@@ -3749,10 +3705,9 @@ object CommitLog {
       deleteFlag: Option[String],
       insertUnmatched: Boolean,
       replaceMatched: Boolean = true,
-      bySource: Option[BySourceClause] = None): Long = {
-    val base = currentVersion(root)
+      bySource: Option[BySourceClause] = None): Long = commitOn(root) { prior =>
+    val m = prior
       .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val m = readManifest(root, base)
     val schema = schemaOf(m)
     val dataCols = source.schema.fieldNames.filterNot(deleteFlag.contains)
     require(dataCols.sorted.sameElements(schema.fieldNames.sorted),
@@ -3843,10 +3798,9 @@ object CommitLog {
 
       val add = stageWithStats(merged, root, m.partitionByOrNil,
         colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
-      enforceConstraints(spark, root, Some(m), add, schema)
-      commitDelta(root, Some(m), Commit(base + 1, "merge", schema.json,
-        add, touched, m.partitionByOrNil, m.txnOrEmpty))
-      base + 1
+      enforceConstraints(spark, root, prior, add, schema)
+      Some(nextCommit(prior, "merge").copy(schemaJson = schema.json,
+        add = add, remove = touched))
     } finally src.unpersist()
   }
 
@@ -3857,48 +3811,45 @@ object CommitLog {
     * staged parquet can never contradict the log schema.
     */
   def update(spark: SparkSession, root: String,
-      set: Seq[(String, Column)], cond: Column): Long = {
-    val base = currentVersion(root)
+      set: Seq[(String, Column)], cond: Column): Long = commitOn(root) { prior =>
+    val m = prior
       .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val m = readManifest(root, base)
     val schema = schemaOf(m)
     val bad = set.map(_._1).filterNot(n => schema.fieldNames.contains(n))
     require(bad.isEmpty, s"UPDATE of unknown column(s): ${bad.mkString(",")}")
     val touched = touchedFiles(spark, root, m)(_.filter(cond))
-    if (touched.isEmpty) return base // nothing matches: no-op, no commit
-    val guard = coalesce(cond, lit(false))
-    val assign = set.toMap
-    val updated = readFiles(spark, root, m, touched).select(
-      schema.fields.toIndexedSeq.map { f =>
-        assign.get(f.name) match {
-          case Some(v) => when(guard, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)
-    val add = stageWithStats(updated, root, m.partitionByOrNil,
-      colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
-    enforceConstraints(spark, root, Some(m), add, schema)
-    commitDelta(root, Some(m), Commit(base + 1, "update", m.schemaJson,
-      add, touched, m.partitionByOrNil, m.txnOrEmpty))
-    base + 1
+    if (touched.isEmpty) None // nothing matches: no-op, no commit
+    else {
+      val guard = coalesce(cond, lit(false))
+      val assign = set.toMap
+      val updated = readFiles(spark, root, m, touched).select(
+        schema.fields.toIndexedSeq.map { f =>
+          assign.get(f.name) match {
+            case Some(v) => when(guard, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+            case None => col(f.name)
+          }
+        }: _*)
+      val add = stageWithStats(updated, root, m.partitionByOrNil,
+        colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
+      enforceConstraints(spark, root, prior, add, schema)
+      Some(nextCommit(prior, "update").copy(add = add, remove = touched))
+    }
   }
 
   /** Copy-on-write DELETE: rewrite only files containing a matching row. */
-  def delete(spark: SparkSession, root: String, cond: Column): Long = {
-    val base = currentVersion(root)
-      .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val m = readManifest(root, base)
-    val touched = touchedFiles(spark, root, m)(_.filter(cond))
-    val kept = readFiles(spark, root, m, touched)
-      .filter(!coalesce(cond, lit(false)))
-    val add =
-      if (touched.isEmpty) Nil
-      else stageWithStats(kept, root, m.partitionByOrNil,
-        colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
-    commitDelta(root, Some(m), Commit(base + 1, "delete", m.schemaJson,
-      add, touched, m.partitionByOrNil, m.txnOrEmpty))
-    base + 1
-  }
+  def delete(spark: SparkSession, root: String, cond: Column): Long =
+    commitOn(root) { prior =>
+      val m = prior
+        .getOrElse(throw new IllegalStateException(s"no commits at $root"))
+      val touched = touchedFiles(spark, root, m)(_.filter(cond))
+      val kept = readFiles(spark, root, m, touched)
+        .filter(!coalesce(cond, lit(false)))
+      val add =
+        if (touched.isEmpty) Nil
+        else stageWithStats(kept, root, m.partitionByOrNil,
+          colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
+      Some(nextCommit(prior, "delete").copy(add = add, remove = touched))
+    }
 
   /** Predicate-scoped atomic overwrite (the published Delta `replaceWhere`
     * concept): ONE commit deletes every row matching `cond` and lands `df`
@@ -3911,10 +3862,9 @@ object CommitLog {
     * own scope, so it is refused here rather than discovered as drift.
     */
   def replaceWhere(spark: SparkSession, root: String, cond: Column,
-      df: DataFrame): Long = {
-    val base = currentVersion(root)
+      df: DataFrame): Long = commitOn(root) { prior =>
+    val m = prior
       .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val m = readManifest(root, base)
     val schema = schemaOf(m)
     require(df.filter(!coalesce(cond, lit(false))).isEmpty,
       "replaceWhere: every input row must satisfy the replace predicate " +
@@ -3928,10 +3878,8 @@ object CommitLog {
       if (touched.isEmpty && df.isEmpty) Nil
       else stageWithStats(merged, root, m.partitionByOrNil,
         colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
-    enforceConstraints(spark, root, Some(m), add, schema)
-    commitDelta(root, Some(m), Commit(base + 1, "replaceWhere",
-      m.schemaJson, add, touched, m.partitionByOrNil, m.txnOrEmpty))
-    base + 1
+    enforceConstraints(spark, root, prior, add, schema)
+    Some(nextCommit(prior, "replaceWhere").copy(add = add, remove = touched))
   }
 
   /** Dynamic-partition overwrite (Spark's `partitionOverwriteMode=dynamic`
@@ -4022,18 +3970,15 @@ object CommitLog {
     * (or any rewrite: compact/optimize/merge touching the file)
     * materializes them away.
     */
-  def deleteDV(spark: SparkSession, root: String, cond: Column): Long = {
-    val base = currentVersion(root)
-      .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val m = readManifest(root, base)
-    stageDvDelete(spark, root, m, cond) match {
-      case None => base // nothing matches: no-op, no commit
-      case Some((fullGone, dvEntries)) =>
-        commitDelta(root, Some(m), Commit(base + 1, "delete-dv", m.schemaJson,
-          Nil, fullGone, m.partitionByOrNil, m.txnOrEmpty, dvs = dvEntries))
-        base + 1
+  def deleteDV(spark: SparkSession, root: String, cond: Column): Long =
+    commitOn(root) { prior =>
+      val m = prior
+        .getOrElse(throw new IllegalStateException(s"no commits at $root"))
+      // None: nothing matches — no-op, no commit
+      stageDvDelete(spark, root, m, cond).map { case (fullGone, dvEntries) =>
+        nextCommit(prior, "delete-dv").copy(remove = fullGone, dvs = dvEntries)
+      }
     }
-  }
 
   /** The staging core of a merge-on-read delete against snapshot `m`:
     * returns None when no file holds a matching row, otherwise the files
@@ -4118,31 +4063,19 @@ object CommitLog {
     require(tables.map(_._1).distinct.size == tables.size,
       "one entry per table root")
     require(keys.nonEmpty, "forgetKeys needs at least one key value")
-    Files.createDirectories(Paths.get(coord))
-    val markerPath = Paths.get(coord)
-      .resolve(s"txn-${UUID.randomUUID()}.json").toAbsolutePath.toString
-    val versions = tables.map { case (root, keyCol) =>
-      root -> withRetry() {
-        val base = currentVersion(root).getOrElse(
-          throw new IllegalStateException(s"no commits at $root"))
-        val m = readManifest(root, base)
-        stageDvDelete(spark, root, m, col(keyCol).isin(keys: _*)) match {
-          case None => base // no matching rows here — nothing to erase
-          case Some((fullGone, dvEntries)) =>
-            publish(root, Commit(base + 1, "delete-dv", m.schemaJson,
-              Nil, fullGone, m.partitionByOrNil, m.txnOrEmpty,
-              dvs = dvEntries, multiTxn = markerPath))
-            base + 1
+    txnCommit(coord, "forgetKeys transaction") { marker =>
+      tables.map { case (root, keyCol) =>
+        root -> commitOn(root, retry = true, marker = Some(marker)) { prior =>
+          val m = prior.getOrElse(
+            throw new IllegalStateException(s"no commits at $root"))
+          // None: no matching rows here — nothing to erase
+          stageDvDelete(spark, root, m, col(keyCol).isin(keys: _*)).map {
+            case (fullGone, dvEntries) => nextCommit(prior, "delete-dv")
+              .copy(remove = fullGone, dvs = dvEntries)
+          }
         }
-      }
-    }.toMap
-    val st = decideMarker(Paths.get(markerPath), "committed")
-    txnStateCache.put(markerPath, st)
-    if (st != "committed")
-      throw new TxnAbortedException(
-        s"forgetKeys transaction $markerPath was force-aborted by a " +
-          "concurrent resolver during prepare; no table shows any effect")
-    versions
+      }.toMap
+    }
   }
 
   /** Merge-on-read UPDATE: ONE commit in which the matched rows' positions
@@ -4155,10 +4088,9 @@ object CommitLog {
     * later rewrite of a DV'd file materializes its deletes away.
     */
   def updateDV(spark: SparkSession, root: String,
-      set: Seq[(String, Column)], cond: Column): Long = {
-    val base = currentVersion(root)
+      set: Seq[(String, Column)], cond: Column): Long = commitOn(root) { prior =>
+    val m = prior
       .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val m = readManifest(root, base)
     val schema = schemaOf(m)
     val bad = set.map(_._1).filterNot(n => schema.fieldNames.contains(n))
     require(bad.isEmpty, s"UPDATE of unknown column(s): ${bad.mkString(",")}")
@@ -4173,9 +4105,8 @@ object CommitLog {
     // a suffix of a DIFFERENT file's absolute path (a/b.parquet vs
     // x/a/b.parquet, both in the manifest) would otherwise mis-map
     val touched = m.files.filter(f => touchedAbs.contains(absPath(root, f)))
-    if (touched.isEmpty) { matched.unpersist(); return base } // no-op
-    val absToRel = touched.map(f => (absPath(root, f), f))
-    try {
+    try if (touched.isEmpty) None else { // nothing matches: no-op
+      val absToRel = touched.map(f => (absPath(root, f), f))
       val newDead = matched
         .join(broadcast(spark.createDataFrame(absToRel).toDF(TagFile, "__dv_rel")),
           TagFile)
@@ -4204,10 +4135,9 @@ object CommitLog {
         }: _*)
         val add = stageWithStats(updated, root, m.partitionByOrNil,
           colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
-        enforceConstraints(spark, root, Some(m), add, schema)
-        commitDelta(root, Some(m), Commit(base + 1, "update-dv", m.schemaJson,
-          add, fullGone, m.partitionByOrNil, m.txnOrEmpty, dvs = dvEntries))
-        base + 1
+        enforceConstraints(spark, root, prior, add, schema)
+        Some(nextCommit(prior, "update-dv").copy(add = add, remove = fullGone,
+          dvs = dvEntries))
       } finally dead.unpersist()
     } finally matched.unpersist()
   }
@@ -4238,19 +4168,19 @@ object CommitLog {
     * merge-on-read counterpart of OPTIMIZE: run it when accumulated DVs
     * make the scan-time anti-join cost noticeable.
     */
-  def purgeDeletionVectors(spark: SparkSession, root: String): Long = {
-    val base = currentVersion(root)
-      .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val m = readManifest(root, base)
-    val dvFiles = m.dvsOrEmpty.keys.toSeq.sorted
-    if (dvFiles.isEmpty) return base
-    val df = readFiles(spark, root, m, dvFiles) // DV-applied live rows
-    val add = stageWithStats(df, root, m.partitionByOrNil,
-      colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
-    commitDelta(root, Some(m), Commit(base + 1, "purge-dv", m.schemaJson,
-      add, dvFiles, m.partitionByOrNil, m.txnOrEmpty))
-    base + 1
-  }
+  def purgeDeletionVectors(spark: SparkSession, root: String): Long =
+    commitOn(root) { prior =>
+      val m = prior
+        .getOrElse(throw new IllegalStateException(s"no commits at $root"))
+      val dvFiles = m.dvsOrEmpty.keys.toSeq.sorted
+      if (dvFiles.isEmpty) None
+      else {
+        val df = readFiles(spark, root, m, dvFiles) // DV-applied live rows
+        val add = stageWithStats(df, root, m.partitionByOrNil,
+          colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
+        Some(nextCommit(prior, "purge-dv").copy(add = add, remove = dvFiles))
+      }
+    }
 
   // --------------------------------------------------------------------
   // Stats-pruned scan (data skipping)
@@ -4706,53 +4636,55 @@ object CommitLog {
     require(cols.nonEmpty && cols.size <= 4, "cluster on 1-4 numeric columns")
     require(curve == "zorder" || curve == "hilbert",
       s"curve must be zorder or hilbert, got $curve")
-    val base = currentVersion(root)
-      .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val prior = readManifest(root, base)
-    val scoped = scopePaths.map(_.toSeq.sorted)
-    if (scoped.exists(_.isEmpty)) return base // no debt — nothing to do
-    val df = scoped match {
-      case Some(paths) => readFiles(spark, root, prior, paths)
-      case None => read(spark, root, Some(base))
-    }
-    val aggCols = cols.zipWithIndex.flatMap { case (c, i) =>
-      Seq(min(col(c)).cast("double").as(s"mn$i"),
-        max(col(c)).cast("double").as(s"mx$i"))
-    }
-    val ranges = df.agg(aggCols.head, aggCols.tail: _*).collect()(0)
-    // 16-bit normalized coordinate per column, bit-interleaved into z
-    val coords = cols.zipWithIndex.map { case (c, i) =>
-      val mn = ranges.getAs[Double](s"mn$i")
-      val span = math.max(ranges.getAs[Double](s"mx$i") - mn, java.lang.Double.MIN_VALUE)
-      least(floor((col(c).cast("double") - lit(mn)) / lit(span) * 65536.0), lit(65535.0))
-        .cast("long").as(s"u$i")
-    }
-    val k = cols.size
-    val zExpr =
-      if (curve == "hilbert") {
-        graft.functions.GraftFunctions.register(spark)
-        expr(s"hilbert_index(array(${cols.indices.map(i => s"u$i").mkString(", ")}))")
-      } else (0 until 16).flatMap { b =>
-        (0 until k).map { i =>
-          shiftleft(shiftright(col(s"u$i"), b).bitwiseAND(lit(1L)), b * k + i)
+    commitOn(root) { prior =>
+      val m = prior
+        .getOrElse(throw new IllegalStateException(s"no commits at $root"))
+      val scoped = scopePaths.map(_.toSeq.sorted)
+      // an empty scope: no debt — nothing to do
+      if (scoped.exists(_.isEmpty)) None
+      else {
+        val df = scoped match {
+          case Some(paths) => readFiles(spark, root, m, paths)
+          case None => read(spark, root, Some(m.version))
         }
-      }.reduce[Column](_.bitwiseOR(_))
-    val out = df
-      .select((df.columns.map(col) ++ coords).toIndexedSeq: _*)
-      .withColumn("_graft_z", zExpr)
-      .repartitionByRange(nFiles, col("_graft_z"))
-      .sortWithinPartitions("_graft_z")
-      .drop((cols.indices.map(i => s"u$i") :+ "_graft_z"): _*)
-    // preArranged: the z-range layout IS the point — staging must not
-    // re-shuffle it (the partitionBy writer still splits per value, so a
-    // partitioned table gets z-clustered files within each partition).
-    val add = stageWithStats(out, root, prior.partitionByOrNil,
-      preArranged = true, colMap = prior.colMapOrEmpty,
-      props = prior.propsOrEmpty)
-    commitDelta(root, Some(prior), Commit(base + 1, "cluster", df.schema.json,
-      add, scoped.getOrElse(prior.files), prior.partitionByOrNil,
-      prior.txnOrEmpty))
-    base + 1
+        val aggCols = cols.zipWithIndex.flatMap { case (c, i) =>
+          Seq(min(col(c)).cast("double").as(s"mn$i"),
+            max(col(c)).cast("double").as(s"mx$i"))
+        }
+        val ranges = df.agg(aggCols.head, aggCols.tail: _*).collect()(0)
+        // 16-bit normalized coordinate per column, bit-interleaved into z
+        val coords = cols.zipWithIndex.map { case (c, i) =>
+          val mn = ranges.getAs[Double](s"mn$i")
+          val span = math.max(ranges.getAs[Double](s"mx$i") - mn, java.lang.Double.MIN_VALUE)
+          least(floor((col(c).cast("double") - lit(mn)) / lit(span) * 65536.0), lit(65535.0))
+            .cast("long").as(s"u$i")
+        }
+        val k = cols.size
+        val zExpr =
+          if (curve == "hilbert") {
+            graft.functions.GraftFunctions.register(spark)
+            expr(s"hilbert_index(array(${cols.indices.map(i => s"u$i").mkString(", ")}))")
+          } else (0 until 16).flatMap { b =>
+            (0 until k).map { i =>
+              shiftleft(shiftright(col(s"u$i"), b).bitwiseAND(lit(1L)), b * k + i)
+            }
+          }.reduce[Column](_.bitwiseOR(_))
+        val out = df
+          .select((df.columns.map(col) ++ coords).toIndexedSeq: _*)
+          .withColumn("_graft_z", zExpr)
+          .repartitionByRange(nFiles, col("_graft_z"))
+          .sortWithinPartitions("_graft_z")
+          .drop((cols.indices.map(i => s"u$i") :+ "_graft_z"): _*)
+        // preArranged: the z-range layout IS the point — staging must not
+        // re-shuffle it (the partitionBy writer still splits per value, so a
+        // partitioned table gets z-clustered files within each partition).
+        val add = stageWithStats(out, root, m.partitionByOrNil,
+          preArranged = true, colMap = m.colMapOrEmpty,
+          props = m.propsOrEmpty)
+        Some(nextCommit(prior, "cluster").copy(schemaJson = df.schema.json,
+          add = add, remove = scoped.getOrElse(m.files)))
+      }
+    }
   }
 
   /** Incremental clustering — liquid clustering's actual maintenance
@@ -4795,21 +4727,21 @@ object CommitLog {
     * is physically reclaimed. Fails cleanly if `toVersion`'s record chain
     * was vacuumed away.
     */
-  def restore(root: String, toVersion: Long): Long = {
-    val base = currentVersion(root)
+  def restore(root: String, toVersion: Long): Long = commitOn(root) { prior =>
+    val cur = prior
       .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    require(toVersion <= base, s"cannot restore to future version $toVersion")
-    val cur = readManifest(root, base)
+    require(toVersion <= cur.version,
+      s"cannot restore to future version $toVersion")
     val target = readManifest(root, toVersion)
     val curPaths = cur.files.toSet
     val targetPaths = target.files.toSet
-    commitDelta(root, Some(cur), Commit(base + 1, "restore", target.schemaJson,
+    // the txn map is inherited: writer watermarks are NOT rolled back — a
+    // replayed streaming batch id stays consumed (restore undoes data, not
+    // idempotence history)
+    Some(nextCommit(prior, "restore").copy(schemaJson = target.schemaJson,
       add = target.statsOrNil.filterNot(s => curPaths(s.path)),
       remove = cur.files.filterNot(targetPaths),
       partitionBy = target.partitionByOrNil,
-      txn = cur.txnOrEmpty, // writer watermarks are NOT rolled back:
-      // a replayed streaming batch id stays consumed (restore undoes data,
-      // not idempotence history)
       constraints = target.constraintsOrEmpty, // metadata reverts WITH the
       // data: the target snapshot was validated against its own CHECK set;
       // constraints added afterward never saw these rows (foldCommit applies
@@ -4818,7 +4750,6 @@ object CommitLog {
       colMap = target.colMapOrEmpty, // and the column mapping: the target's
       retired = target.retiredOrNil, // names come back with its data
       props = target.propsOrEmpty)) // properties revert with the metadata
-    base + 1
   }
 
   /** First version of the contiguous commit-file run ending at `cur` —
@@ -5207,10 +5138,9 @@ object CommitLog {
   def optimize(spark: SparkSession, root: String,
       targetBytes: Long = 128L * 1024 * 1024,
       where: Option[Column] = None,
-      scopePaths: Option[Set[String]] = None): Long = {
-    val base = currentVersion(root)
+      scopePaths: Option[Set[String]] = None): Long = commitOn(root) { prior =>
+    val m = prior
       .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val m = readManifest(root, base)
     val spec = m.partitionByOrNil
     // OPTIMIZE ... WHERE: restrict the candidate set to files the
     // predicate might touch (manifest-stats + transform pruning — a
@@ -5243,23 +5173,25 @@ object CommitLog {
       if (spec.isEmpty) { if (smallAll.size <= 1) Nil else smallAll }
       else smallAll.groupBy(_.partitionsOrEmpty).valuesIterator
         .filter(_.size >= 2).flatten.toSeq
-    if (small.isEmpty) return base // nothing worth rewriting
-    val smallBytes = small.map(_.bytes).sum
-    val smallRows = math.max(1L, small.map(_.rows).sum)
-    val df = readFiles(spark, root, m, small.map(_.path))
-    val n = math.max(1, math.ceil(smallBytes.toDouble / targetBytes).toInt)
-    val out = if (spec.isEmpty) df.repartition(n) else df
-    // Cap rows per output file from the candidates' observed bytes/row, so
-    // a partition whose small files sum far past the target still splits
-    // into ~target-sized files instead of one oversized single-task write.
-    val rowsPerFile = math.max(1L,
-      (targetBytes.toDouble / (smallBytes.toDouble / smallRows)).toLong)
-    val add = stageWithStats(out, root, spec,
-      maxRecordsPerFile = rowsPerFile, colMap = m.colMapOrEmpty,
-      props = m.propsOrEmpty)
-    commitDelta(root, Some(m), Commit(base + 1, "optimize", m.schemaJson,
-      add, small.map(_.path), spec, m.txnOrEmpty))
-    base + 1
+    if (small.isEmpty) None // nothing worth rewriting
+    else {
+      val smallBytes = small.map(_.bytes).sum
+      val smallRows = math.max(1L, small.map(_.rows).sum)
+      val df = readFiles(spark, root, m, small.map(_.path))
+      val n = math.max(1, math.ceil(smallBytes.toDouble / targetBytes).toInt)
+      val out = if (spec.isEmpty) df.repartition(n) else df
+      // Cap rows per output file from the candidates' observed bytes/row,
+      // so a partition whose small files sum far past the target still
+      // splits into ~target-sized files instead of one oversized
+      // single-task write.
+      val rowsPerFile = math.max(1L,
+        (targetBytes.toDouble / (smallBytes.toDouble / smallRows)).toLong)
+      val add = stageWithStats(out, root, spec,
+        maxRecordsPerFile = rowsPerFile, colMap = m.colMapOrEmpty,
+        props = m.propsOrEmpty)
+      Some(nextCommit(prior, "optimize").copy(add = add,
+        remove = small.map(_.path)))
+    }
   }
 
   // --------------------------------------------------------------------
@@ -5323,35 +5255,33 @@ object CommitLog {
     * bytes, which needs a rewrite, not a metadata edit. Returns the new
     * version (current one if nothing to repair).
     */
-  def fsckRepair(root: String): Long = withRetry() {
-    val base = currentVersion(root)
+  def fsckRepair(root: String): Long = commitOn(root, retry = true) { prior =>
+    val m = prior
       .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val m = readManifest(root, base)
     val issues = fsck(root)
-    if (issues.isEmpty) return base
-    val dead = issues.collect {
-      case FsckIssue("missing-file" | "missing-dv", p, _) => p
-    }.toSet
-    val sidecarless = issues.collect {
-      case FsckIssue("missing-bloom" | "missing-ndv", p, _) => p
-    }.toSet -- dead
-    val readd = m.statsOrNil.filter(s => sidecarless(s.path)).map { s =>
-      val dropBloom = s.bloomOpt.exists(b =>
-        !Files.isRegularFile(Paths.get(dataPath(root, b))))
-      val dropNdv = s.ndvOpt.exists(nv =>
-        !Files.isRegularFile(Paths.get(dataPath(root, nv))))
-      s.copy(bloom = if (dropBloom) null else s.bloom,
-        ndv = if (dropNdv) null else s.ndv)
+    if (issues.isEmpty) None
+    else {
+      val dead = issues.collect {
+        case FsckIssue("missing-file" | "missing-dv", p, _) => p
+      }.toSet
+      val sidecarless = issues.collect {
+        case FsckIssue("missing-bloom" | "missing-ndv", p, _) => p
+      }.toSet -- dead
+      val readd = m.statsOrNil.filter(s => sidecarless(s.path)).map { s =>
+        val dropBloom = s.bloomOpt.exists(b =>
+          !Files.isRegularFile(Paths.get(dataPath(root, b))))
+        val dropNdv = s.ndvOpt.exists(nv =>
+          !Files.isRegularFile(Paths.get(dataPath(root, nv))))
+        s.copy(bloom = if (dropBloom) null else s.bloom,
+          ndv = if (dropNdv) null else s.ndv)
     }
     // a re-added entry must carry its LIVE deletion vector through the
     // remove/re-add (fold drops removed paths' DV mappings) — losing it
     // would resurrect deleted rows
     val keepDvs = m.dvsOrEmpty.filter { case (f, _) => sidecarless(f) }
-    commitDelta(root, Some(m), Commit(base + 1, "fsck", m.schemaJson,
-      add = readd, remove = (dead ++ sidecarless).toSeq.sorted,
-      partitionBy = m.partitionByOrNil, txn = m.txnOrEmpty,
-      dvs = keepDvs))
-    base + 1
+    Some(nextCommit(prior, "fsck").copy(add = readd,
+      remove = (dead ++ sidecarless).toSeq.sorted, dvs = keepDvs))
+    }
   }
 
   // --------------------------------------------------------------------

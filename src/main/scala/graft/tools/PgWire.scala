@@ -1582,24 +1582,32 @@ object PgWire {
 
   // -------------------------------------------------------------- errors
 
-  private def sendError(out: DataOutputStream, e: Throwable): Unit = {
-    val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-    val state =
-      if (msg.toLowerCase(java.util.Locale.ROOT).contains("cancel"))
-        "57014" // query_canceled — a CancelRequest landed
-      else e match {
-        case _: PgTxn.PgTxnAbortedException => "25P02"
-        case _: graft.sources.CommitLog.TxnSerializationException => "40001"
-        case _: PgTxn.PgTxnNoBlockException => "25P01"
-        case _: PgTxn.PgTxnNoSavepointException => "3B001"
-        case _: UnsupportedOperationException => "0A000"
-        case _: org.apache.spark.sql.catalyst.parser.ParseException => "42601"
-        case _: org.apache.spark.sql.AnalysisException => "42P01"
-        case _: IllegalArgumentException => "22023"
-        case _ => "XX000"
-      }
-    errorMsg(out, state, msg)
-  }
+  private def sendError(out: DataOutputStream, e: Throwable): Unit =
+    errorMsg(out, sqlState(e), errorText(e))
+
+  private def errorText(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
+
+  /** The SQLSTATE a failure reaches clients as. Both commit races are
+    * 40001 (serialization_failure), the code pg clients retry on: a block
+    * that lost snapshot isolation, and an autocommit statement whose
+    * commit lost its version to a concurrent writer.
+    */
+  private[tools] def sqlState(e: Throwable): String =
+    if (errorText(e).toLowerCase(java.util.Locale.ROOT).contains("cancel"))
+      "57014" // query_canceled — a CancelRequest landed
+    else e match {
+      case _: PgTxn.PgTxnAbortedException => "25P02"
+      case _: graft.sources.CommitLog.TxnSerializationException |
+           _: graft.sources.CommitLog.CommitConflictException => "40001"
+      case _: PgTxn.PgTxnNoBlockException => "25P01"
+      case _: PgTxn.PgTxnNoSavepointException => "3B001"
+      case _: UnsupportedOperationException => "0A000"
+      case _: org.apache.spark.sql.catalyst.parser.ParseException => "42601"
+      case _: org.apache.spark.sql.AnalysisException => "42P01"
+      case _: IllegalArgumentException => "22023"
+      case _ => "XX000"
+    }
 
   private def errorMsg(out: DataOutputStream, state: String, msg: String): Unit = {
     new Msg('E').byte('S').cstr("ERROR").byte('V').cstr("ERROR")

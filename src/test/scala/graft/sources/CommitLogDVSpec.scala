@@ -148,6 +148,23 @@ class CommitLogDVSpec extends SparkTestBase {
     assert(e.getMessage.contains("delete-dv"))
   }
 
+  test("a set-props commit after a DV delete carries no DVs: changes() " +
+      "passes it and changedFileStats removes nothing for it") {
+    val root = tmpTable()
+    append1(spark.range(10).toDF("id"), root)
+    deleteDV(spark, root, col("id") === 4)
+    setTableProperties(root, Map("owner" -> "x"))
+    append(spark.range(10, 11).toDF("id"), root)
+    val cur = currentVersion(root).get
+    assert(changes(spark, root, cur - 2, cur).collect().map(_.getLong(0))
+      .toSeq == Seq(10L))
+    val props = changedFileStats(root, cur - 2, cur)
+      .find(_._2 == "set-props").get
+    assert(props._3.isEmpty && props._4.isEmpty)
+    // the DV itself still holds
+    assert(ids(root) == (0L to 10L).filter(_ != 4L))
+  }
+
   test("changedFileStats surfaces DV'd files as removed-range stats") {
     val root = tmpTable()
     append1(spark.range(10).toDF("id"), root)

@@ -121,6 +121,19 @@ class CommitLogMultiTxnSpec extends SparkTestBase {
     } finally spark.conf.unset(CommitLog.TxnGraceConf)
   }
 
+  test("a prepare landing on a checkpoint version after vacuumLog leaves " +
+      "later versions resolvable") {
+    val (a, coord) = (tmp("mt-a6"), tmp("mt-coord6"))
+    def row(i: Long) = Seq((i, s"r$i")).toDF("id", "v")
+    (1L to 4L).foreach(i => CommitLog.append(row(i), a))
+    CommitLog.vacuumLog(a, -1L) // checkpoint at v4, commits below it gone
+    (5L to 9L).foreach(i => CommitLog.append(row(i), a))
+    // the prepare takes v10 and, by design, writes no checkpoint there
+    assert(CommitLog.multiAppend(Seq(row(10L) -> a), coord) == Map(a -> 10L))
+    (11L to 15L).foreach(i => CommitLog.append(row(i), a))
+    assert(CommitLog.read(spark, a).count() == 15)
+  }
+
   test("consistentSnapshot pins a quiescent cut that advances with a txn") {
     val (a, b, coord) = (tmp("mt-a4"), tmp("mt-b4"), tmp("mt-coord4"))
     CommitLog.multiAppend(Seq(

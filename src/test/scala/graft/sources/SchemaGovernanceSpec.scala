@@ -26,6 +26,12 @@ class SchemaGovernanceSpec extends SparkTestBase {
         "id", "CAST(id AS DOUBLE) AS v", "id AS extra"), t)
     }
     assert(extra.getMessage.contains("strict"))
+    // a multi-table (and pg-wire block) insert takes the same preparation
+    val extraTxn = intercept[IllegalArgumentException] {
+      CommitLog.multiAppend(Seq(spark.range(5).selectExpr(
+        "id", "CAST(id AS DOUBLE) AS v", "id AS extra") -> t), tmp())
+    }
+    assert(extraTxn.getMessage.contains("strict"))
     intercept[IllegalArgumentException] {
       CommitLog.append(spark.range(5).selectExpr("id"), t) // omits v
     }
@@ -59,16 +65,18 @@ class SchemaGovernanceSpec extends SparkTestBase {
     }
     CommitLog.setTableProperties(t,
       Map("generate.tripled" -> "CAST(id * 3 AS BIGINT)"))
-    // writer omits the column → computed
+    // writer omits the column → computed, on the multi-table path too
     CommitLog.append(spark.range(5).selectExpr("id + 10 AS id"), t)
+    CommitLog.multiAppend(Seq(
+      spark.range(1).selectExpr("id + 20 AS id") -> t), tmp())
     val rows = CommitLog.read(spark, t)
       .select("id", "tripled").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(rows(12L) == 36L && rows(3L) == 9L)
+    assert(rows(12L) == 36L && rows(3L) == 9L && rows(20L) == 60L)
     // writer provides consistent values → accepted
     CommitLog.append(spark.range(2).selectExpr(
       "id + 100 AS id", "CAST((id + 100) * 3 AS BIGINT) AS tripled"), t)
-    assert(CommitLog.read(spark, t).count() == 12)
+    assert(CommitLog.read(spark, t).count() == 13)
     // writer contradicts the expression → abort, no commit
     val v = CommitLog.currentVersion(t)
     val e = intercept[IllegalArgumentException] {
@@ -76,6 +84,12 @@ class SchemaGovernanceSpec extends SparkTestBase {
         "CAST(999 AS BIGINT) AS id", "CAST(5 AS BIGINT) AS tripled"), t)
     }
     assert(e.getMessage.contains("contradict"))
+    val eTxn = intercept[IllegalArgumentException] {
+      CommitLog.multiAppend(Seq(spark.range(1).selectExpr(
+        "CAST(999 AS BIGINT) AS id", "CAST(5 AS BIGINT) AS tripled") -> t),
+        tmp())
+    }
+    assert(eTxn.getMessage.contains("contradict"))
     assert(CommitLog.currentVersion(t) == v)
   }
 }

@@ -1681,4 +1681,13 @@ class PgWireSpec extends SparkTestBase {
       c.close()
     } finally server.stop()
   }
+
+  test("both commit races reach clients as SQLSTATE 40001") {
+    import graft.sources.CommitLog
+    assert(PgWire.sqlState(
+      new CommitLog.TxnSerializationException("stale block")) == "40001")
+    assert(PgWire.sqlState(new CommitLog.CommitConflictException(
+      "version 7 was committed concurrently at /t")) == "40001")
+    assert(PgWire.sqlState(new RuntimeException("boom")) == "XX000")
+  }
 }
