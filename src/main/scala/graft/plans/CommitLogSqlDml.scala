@@ -1,18 +1,17 @@
 package graft.plans
 
 import org.apache.spark.sql.{GraftBridge, Row, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Cast, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.TimestampType
 
 import graft.sources.CommitLog
-import graft.sources.commitlog.{CommitLogFileIndex, DefaultSource}
+import graft.sources.commitlog.CommitLogRelation
 
 /** SQL-level row DML and time travel for CommitLog tables.
   *
@@ -51,27 +50,15 @@ object CommitLogSqlDml {
     * InsertableRelation write path).
     */
   object CommitLogTarget {
-    def unapply(plan: LogicalPlan): Option[String] = plan match {
-      case SubqueryAlias(_, child) => unapply(child)
-      case v: View => unapply(v.child)
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation => h.location match {
-          case idx: CommitLogFileIndex =>
-            if (idx.pinned.isDefined) throw new IllegalArgumentException(
-              "cannot run DML through a version-pinned (time travel) relation")
-            Some(idx.root)
-          case _ => None
-        }
-        // a snapshot carrying deletion vectors resolves to the
-        // merge-on-read relation — DML targets it the same way
-        case mor: graft.sources.commitlog.MergeOnReadRelation =>
-          if (mor.pinned.isDefined) throw new IllegalArgumentException(
-            "cannot run DML through a version-pinned (time travel) relation")
-          Some(mor.root)
-        case _ => None
+    def unapply(plan: LogicalPlan): Option[String] =
+      CommitLogRelation.rootOf(plan).map(writable)
+
+    private[plans] def writable(found: (String, Option[Long])): String =
+      found match {
+        case (root, None) => root
+        case _ => throw new IllegalArgumentException(
+          "cannot run DML through a version-pinned (time travel) relation")
       }
-      case _ => None
-    }
   }
 
   /** Rebind a resolved expression by NAME: the commands re-read the table
@@ -421,8 +408,8 @@ object CommitLogSqlDml {
 
     override def apply(plan: LogicalPlan): LogicalPlan = plan transformUp {
       case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, ver) =>
-        commitLogRoot(u.multipartIdentifier) match {
-          case Some(root) =>
+        CommitLogRelation.tableRoot(spark, u.multipartIdentifier) match {
+          case Some((root, _)) =>
             val v: Long = ver match {
               case Some(s) if s.nonEmpty && s.forall(_.isDigit) => s.toLong
               case Some(tag) => CommitLog.tags(root).getOrElse(tag,
@@ -430,9 +417,8 @@ object CommitLogSqlDml {
                   s"VERSION AS OF '$tag': no such version or tag at $root"))
               case None => CommitLog.versionAsOf(root, evalTsMs(ts.get))
             }
-            val rel = new DefaultSource().createRelation(
-              spark.sqlContext, Map("path" -> root, "version" -> v.toString))
-            SubqueryAlias(u.multipartIdentifier.last, LogicalRelation(rel))
+            SubqueryAlias(u.multipartIdentifier.last,
+              LogicalRelation(CommitLogRelation.route(spark, root, Some(v))))
           case None => tt
         }
     }
@@ -446,49 +432,5 @@ object CommitLogSqlDml {
         s"TIMESTAMP AS OF: cannot interpret ${e.sql} as a timestamp")
       Math.floorDiv(micros.asInstanceOf[Long], 1000L)
     }
-
-    /** Resolve a (possibly qualified) identifier to a commitlog table root:
-      * temp views and `USING graft-commitlog` catalog tables both qualify.
-      */
-    private def commitLogRoot(ident: Seq[String]): Option[String] = {
-      val cat = spark.sessionState.catalog
-      def dig(p: LogicalPlan): Option[String] = p.collectFirst {
-        case lr: LogicalRelation => lr.relation match {
-          case h: HadoopFsRelation => h.location match {
-            case idx: CommitLogFileIndex => Some(idx.root)
-            case _ => None
-          }
-          case _ => None
-        }
-      }.flatten
-      val globalTempDb =
-        spark.conf.get("spark.sql.globalTempDatabase", "global_temp")
-      val fromTempView = ident match {
-        case Seq(name) => cat.getTempView(name).flatMap(dig)
-        case Seq(db, name) if resolverEq(db, globalTempDb) =>
-          cat.getGlobalTempView(name).flatMap(dig)
-        case _ => None
-      }
-      fromTempView.orElse {
-        val id = ident match {
-          case Seq(name) => Some(TableIdentifier(name))
-          case Seq(db, name) => Some(TableIdentifier(name, Some(db)))
-          case _ => None
-        }
-        id.flatMap { tid =>
-          try {
-            val meta = cat.getTableMetadata(tid)
-            if (meta.provider.exists(_.equalsIgnoreCase("graft-commitlog")))
-              meta.storage.properties.get("path")
-                .orElse(meta.storage.locationUri.map(u =>
-                  java.nio.file.Paths.get(u).toString))
-            else None
-          } catch { case _: Exception => None }
-        }
-      }
-    }
-
-    private def resolverEq(a: String, b: String): Boolean =
-      spark.sessionState.conf.resolver(a, b)
   }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType, StructType}
 
 import graft.sources.CommitLog
+import graft.sources.commitlog.CommitLogRelation
 
 /** SQL-level table MAINTENANCE for commitlog tables — `OPTIMIZE` and
   * `VACUUM` as statements, completing the JDBC persona's lake-management
@@ -35,9 +36,10 @@ import graft.sources.CommitLog
   *   ALTER TABLE <t> ADD CONSTRAINT <n> CHECK (<e>) → [[CommitLog.addConstraint]]
   *   ALTER TABLE <t> DROP CONSTRAINT <n>            → [[CommitLog.dropConstraint]]
   *
-  * The table name resolves through the session catalog at RUN time
-  * (`spark.table` → analyzed plan → [[CommitLogSqlDml.CommitLogTarget]]),
-  * so both persistent-catalog tables and GraftCatalog identifiers work,
+  * The table name resolves through the catalogs at RUN time
+  * ([[CommitLogRelation.tableRoot]]: temp and persistent views,
+  * persistent-catalog tables and GraftCatalog identifiers all work, an
+  * unqualified name in the session's current catalog and namespace),
   * and a non-commitlog table fails with a clear message instead of a
   * parse error. `RETAIN n HOURS` maps onto the vacuum retention guard
   * (young orphans within the window survive — the same
@@ -212,21 +214,14 @@ object CommitLogSqlMaintenance {
       delegate.parseTableSchema(sqlText)
   }
 
-  /** Resolve a multipart identifier to its commitlog root via the session
-    * catalog — quoting parts that need it, unwrapping whatever relation
-    * the analyzer produces.
+  /** Resolve a multipart identifier to its commitlog root
+    * ([[CommitLogRelation.tableRoot]]); anything else fails with a clear
+    * message.
     */
-  private def rootOf(spark: SparkSession, parts: Seq[String]): String = {
-    val name = parts
-      .map(p => if (p.matches("[A-Za-z0-9_]+")) p else s"`${p.replace("`", "``")}`")
-      .mkString(".")
-    spark.table(name).queryExecution.analyzed match {
-      case CommitLogSqlDml.CommitLogTarget(root) => root
-      case _ => throw new UnsupportedOperationException(
-        s"$name is not a commitlog table — OPTIMIZE/VACUUM apply to " +
-          "graft-commitlog tables only")
-    }
-  }
+  private def rootOf(spark: SparkSession, parts: Seq[String]): String =
+    rootOpt(spark, parts).getOrElse(throw new UnsupportedOperationException(
+      s"${parts.mkString(".")} is not a commitlog table — OPTIMIZE/VACUUM " +
+        "apply to graft-commitlog tables only"))
 
   /** `OPTIMIZE t` → bin-packing compaction; `OPTIMIZE t ZORDER BY (…)` →
     * interleaved-bits clustering rewrite; `OPTIMIZE t HILBERT BY (…)` →
@@ -376,26 +371,8 @@ object CommitLogSqlMaintenance {
       Seq(AttributeReference("version", LongType, nullable = false)())
     override def run(spark: SparkSession): Seq[Row] = {
       val srcRoot = rootOf(spark, src)
-      require(dst.size >= 2,
-        "SHALLOW CLONE target must be a catalog identifier (catalog.[ns.]table)")
-      val cat = try spark.sessionState.catalogManager.catalog(dst.head) catch {
-        case _: Exception => throw new UnsupportedOperationException(
-          s"'${dst.head}' is not a registered catalog — SHALLOW CLONE " +
-            "targets live in a graft catalog, which supplies the location")
-      }
-      val gcat = cat match {
-        case g: graft.sources.commitlog.GraftCatalog => g
-        case other => throw new UnsupportedOperationException(
-          s"catalog '${dst.head}' (${other.getClass.getSimpleName}) is not " +
-            "a GraftCatalog — SHALLOW CLONE needs one to place the new table")
-      }
-      val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
-        dst.tail.init.toArray, dst.last)
-      require(!gcat.tableExists(ident),
-        s"table ${dst.mkString(".")} already exists")
-      val dir = gcat.locationFor(ident)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      Seq(Row(CommitLog.shallowClone(srcRoot, dir, version)))
+      Seq(Row(CommitLog.shallowClone(srcRoot,
+        placement(spark, dst, "SHALLOW CLONE"), version)))
     }
   }
 
@@ -410,24 +387,7 @@ object CommitLogSqlMaintenance {
     override val output: Seq[Attribute] =
       Seq(AttributeReference("version", LongType, nullable = false)())
     override def run(spark: SparkSession): Seq[Row] = {
-      require(dst.size >= 2,
-        "IMPORT TABLE target must be a catalog identifier (catalog.[ns.]table)")
-      val gcat = (try spark.sessionState.catalogManager.catalog(dst.head) catch {
-        case _: Exception => throw new UnsupportedOperationException(
-          s"'${dst.head}' is not a registered catalog — IMPORT TABLE " +
-            "targets live in a graft catalog, which supplies the location")
-      }) match {
-        case g: graft.sources.commitlog.GraftCatalog => g
-        case other => throw new UnsupportedOperationException(
-          s"catalog '${dst.head}' (${other.getClass.getSimpleName}) is not " +
-            "a GraftCatalog — IMPORT TABLE needs one to place the new table")
-      }
-      val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
-        dst.tail.init.toArray, dst.last)
-      require(!gcat.tableExists(ident),
-        s"table ${dst.mkString(".")} already exists")
-      val dir = gcat.locationFor(ident)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = placement(spark, dst, "IMPORT TABLE")
       val v = format match {
         case "DELTA" =>
           graft.sources.interop.DeltaImport.importTable(spark, path, dir)
@@ -575,14 +535,33 @@ object CommitLogSqlMaintenance {
     * commitlog table; None (no throw) otherwise — the constraint commands
     * use this to decide between our path and the delegate's.
     */
-  private def rootOpt(spark: SparkSession, parts: Seq[String]): Option[String] = {
-    val name = parts
-      .map(p => if (p.matches("[A-Za-z0-9_]+")) p else s"`${p.replace("`", "``")}`")
-      .mkString(".")
-    scala.util.Try(spark.table(name).queryExecution.analyzed).toOption.flatMap {
-      case CommitLogSqlDml.CommitLogTarget(root) => Some(root)
-      case _ => None
+  private def rootOpt(spark: SparkSession, parts: Seq[String]): Option[String] =
+    CommitLogRelation.tableRoot(spark, parts).map(CommitLogSqlDml.CommitLogTarget.writable)
+
+  /** The directory a new table `dst` (catalog.[ns.]table) gets from its
+    * graft catalog — the placement rule SHALLOW CLONE and IMPORT TABLE
+    * share (`what` names the statement in errors).
+    */
+  private def placement(spark: SparkSession, dst: Seq[String], what: String): String = {
+    require(dst.size >= 2,
+      s"$what target must be a catalog identifier (catalog.[ns.]table)")
+    val gcat = (try spark.sessionState.catalogManager.catalog(dst.head) catch {
+      case _: Exception => throw new UnsupportedOperationException(
+        s"'${dst.head}' is not a registered catalog — $what " +
+          "targets live in a graft catalog, which supplies the location")
+    }) match {
+      case g: graft.sources.commitlog.GraftCatalog => g
+      case other => throw new UnsupportedOperationException(
+        s"catalog '${dst.head}' (${other.getClass.getSimpleName}) is not " +
+          s"a GraftCatalog — $what needs one to place the new table")
     }
+    val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
+      dst.tail.init.toArray, dst.last)
+    require(!gcat.tableExists(ident),
+      s"table ${dst.mkString(".")} already exists")
+    val dir = gcat.locationFor(ident)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    dir
   }
 
   /** `ALTER TABLE t ADD CONSTRAINT name CHECK (expr)` → validate existing

@@ -4,12 +4,10 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSet, EqualTo, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 import graft.sources.CommitLog
-import graft.sources.commitlog.CommitLogFileIndex
 
 /** Eliminate joins the table's DECLARED relational constraints prove
   * redundant — the classic warehouse-optimizer use of RELY constraints
@@ -52,28 +50,6 @@ object JoinElimination extends Rule[LogicalPlan] {
     org.apache.spark.sql.SparkSession.getActiveSession
       .forall(_.conf.get(EnabledConf, "true") != "false")
 
-  /** (root, pinned) of a commitlog relation reachable through
-    * attribute-only Projects (and, when `throughFilter`, Filters) —
-    * attribute names are preserved along such a walk, so an attribute of
-    * the walked plan's output names the table column directly.
-    */
-  private def walk(plan: LogicalPlan, throughFilter: Boolean)
-      : Option[(String, Option[Long])] = plan match {
-    case Project(pl, child) if pl.forall(_.isInstanceOf[AttributeReference]) =>
-      walk(child, throughFilter)
-    case Filter(_, child) if throughFilter => walk(child, throughFilter)
-    case lr: LogicalRelation => lr.relation match {
-      case h: HadoopFsRelation => h.location match {
-        case idx: CommitLogFileIndex => Some((idx.root, idx.pinned))
-        case _ => None
-      }
-      case mor: graft.sources.commitlog.MergeOnReadRelation =>
-        Some((mor.root, mor.pinned))
-      case _ => None
-    }
-    case _ => None
-  }
-
   private def trust(root: String): CommitLog.ConstraintTrust =
     try CommitLog.constraintTrustOf(root)
     catch { case NonFatal(_) => CommitLog.ConstraintTrust(Map.empty, 0L, 0L) }
@@ -111,7 +87,7 @@ object JoinElimination extends Rule[LogicalPlan] {
         // needs only PK UNIQUENESS on dim: appends re-validate it and pure
         // deletes cannot break it, so the staleness watermark is modifyV
         for {
-          (dimRoot, pinned) <- walk(dim, throughFilter = true)
+          (dimRoot, pinned) <- MetadataAggregate.relationOf(dim, throughFilter = true)
           if pinned.isEmpty
           dimT = trust(dimRoot)
           if dimT.props.get("constraint.pk").contains(pk.name)
@@ -125,12 +101,12 @@ object JoinElimination extends Rule[LogicalPlan] {
         // validation (fact modifyV vs the fk stamp — fact deletes are
         // fine, fewer rows still all have parents)
         for {
-          (dimRoot, dimPin) <- walk(dim, throughFilter = false)
+          (dimRoot, dimPin) <- MetadataAggregate.relationOf(dim)
           if dimPin.isEmpty
           dimT = trust(dimRoot)
           if dimT.props.get("constraint.pk").contains(pk.name)
           if stampFresh(dimT, "constraint.pk.v", dimT.modifyV)
-          (factRoot, factPin) <- walk(fact, throughFilter = true)
+          (factRoot, factPin) <- MetadataAggregate.relationOf(fact, throughFilter = true)
           if factPin.isEmpty
           factT = trust(factRoot)
           if factT.props.get(s"constraint.fk.${fk.name}")

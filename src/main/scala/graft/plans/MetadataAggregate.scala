@@ -4,12 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 import graft.sources.CommitLog
-import graft.sources.commitlog.CommitLogFileIndex
+import graft.sources.commitlog.CommitLogRelation
 
 /** Answer `SELECT count(*) / count(c) / min(c) / max(c) FROM commitlog_t`
   * from the MANIFEST instead of scanning data — the aggregate-pushdown
@@ -39,25 +38,19 @@ object MetadataAggregate extends Rule[LogicalPlan] {
 
   private[plans] val EnabledConf = "spark.graft.metadataAgg.enabled"
 
-  private[plans] def relationOf(plan: LogicalPlan): Option[(String, Option[Long])] =
-    plan match {
-      case Project(projList, child)
-          if projList.forall(_.isInstanceOf[AttributeReference]) =>
-        relationOf(child)
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation => h.location match {
-          case idx: CommitLogFileIndex => Some((idx.root, idx.pinned))
-          case _ => None
-        }
-        // column-mapped (renamed) tables resolve through the merge-on-read
-        // relation even with no DVs; metadataAggAnswers itself declines
-        // any snapshot that actually carries deletion vectors
-        case mor: graft.sources.commitlog.MergeOnReadRelation =>
-          Some((mor.root, mor.pinned))
-        case _ => None
-      }
-      case _ => None
-    }
+  /** (root, pinned) of a commitlog relation reachable through
+    * attribute-only Projects (and, when `throughFilter`, Filters) —
+    * attribute names are preserved along such a walk, so an attribute of
+    * the walked plan's output names the table column directly.
+    */
+  private[plans] def relationOf(plan: LogicalPlan, throughFilter: Boolean = false)
+      : Option[(String, Option[Long])] = plan match {
+    case Project(projList, child)
+        if projList.forall(_.isInstanceOf[AttributeReference]) =>
+      relationOf(child, throughFilter)
+    case Filter(_, child) if throughFilter => relationOf(child, throughFilter)
+    case _ => CommitLogRelation.rootOf(plan)
+  }
 
   private sealed trait Kind
   private case object CountStar extends Kind

@@ -59,8 +59,9 @@ object CatalogOps {
   /** Register a CommitLog table in the persistent catalog
     * (`CREATE TABLE … USING graft-commitlog`): after this, `spark.table
     * ("db.t")`, SQL by name, and `INSERT INTO db.t` all resolve through
-    * the format's data source — reads are the FileIndex-driven vectorized
-    * scan (current snapshot per query), writes land atomic commits. The
+    * the format's data source — reads take the relation the current
+    * snapshot needs, re-routed per query under `GraftExtensions` (DVs,
+    * new columns: `CommitLogRelation.current`); writes land commits. The
     * catalog stores only the pointer (provider + path); the log stays the
     * single source of truth, so external writers' commits are visible
     * with no re-registration.

@@ -2,13 +2,11 @@ package graft.sources.commitlog
 
 import java.nio.file.{Files, Paths}
 
-
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileIndex, PartitionDirectory}
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Source => V1Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources._
@@ -20,7 +18,7 @@ import graft.sources.CommitLog
   * surface over [[graft.sources.CommitLog]] tables:
   *
   * {{{
-  *   spark.read.format("graft-commitlog").load(root)              // latest snapshot, per scan
+  *   spark.read.format("graft-commitlog").load(root)              // latest snapshot, per query
   *   spark.read.format("graft-commitlog")
   *     .option("version", 3).load(root)                           // time travel
   *   df.write.format("graft-commitlog").mode("append")
@@ -33,16 +31,18 @@ import graft.sources.CommitLog
   * problem (a log-indexed parquet table under a stock Spark runtime):
   *
   *  - **Reads** resolve a snapshot into a [[CommitLogFileIndex]] wrapped in
-  *    a `HadoopFsRelation` over the builtin `ParquetFileFormat`. Execution
+  *    a `HadoopFsRelation` over the builtin `ParquetFileFormat` (or the
+  *    relation [[CommitLogRelation.route]] picks for DVs). Execution
   *    is Spark's own `FileSourceScanExec`: vectorized columnar parquet
   *    reads inside whole-stage codegen, with pushed filters — strictly
   *    better than any hand-rolled row-producing scan (the previous V1
   *    `PrunedFilteredScan` here ended in `.rdd`, which boxed every value
   *    and severed codegen above the scan). Catalyst hands the index each
   *    query's data filters, so manifest-stats file skipping happens
-  *    per-scan, and an unpinned index re-resolves `currentVersion` per
-  *    scan — a `CREATE TEMPORARY VIEW` now tracks the table instead of
-  *    freezing at DDL time.
+  *    per-scan, an unpinned index re-resolves `currentVersion` per scan,
+  *    and every query re-routes an unpinned relation
+  *    ([[CommitLogRelation.current]]) — a `CREATE TEMPORARY VIEW` tracks
+  *    the table, DVs included, instead of freezing at DDL time.
   *  - **Writes** commit through the log, never around it: the relation
   *    mixes in [[InsertableRelation]] (SQL `INSERT INTO`/`INSERT
   *    OVERWRITE` plan `InsertIntoDataSourceCommand` against it) and the
@@ -75,28 +75,22 @@ class DefaultSource extends RelationProvider with SchemaRelationProvider
     * relation at the declared schema — the pg-style "create the table,
     * then INSERT into it (possibly inside a transaction block)" shape,
     * which the infer-only RelationProvider path refuses with "no
-    * commits". Once commits exist the manifest is the schema authority
-    * and this delegates to the inferring path unchanged.
+    * commits". Once commits exist the manifest is the schema authority.
     */
   override def createRelation(
       sqlContext: SQLContext,
       parameters: Map[String, String],
-      schema: StructType): BaseRelation = {
-    val root = rootOf(parameters)
-    val pinned = parameters.get("version").map(_.toLong)
-    if (CommitLog.currentVersion(root).isEmpty && pinned.isEmpty)
-      new EmptyCommitLogRelation(sqlContext.sparkSession, root, schema)
-    else createRelation(sqlContext, parameters)
-  }
+      schema: StructType): BaseRelation =
+    relation(sqlContext.sparkSession, parameters, Some(schema))
 
-  private def rootOf(parameters: Map[String, String]): String = {
-    val p = parameters.getOrElse("path",
-      throw new IllegalArgumentException("graft-commitlog requires a path"))
-    // the session catalog normalizes table locations to file: URIs; the
-    // log walks the local filesystem via NIO, so fold them back to a path
-    if (p.startsWith("file:")) java.nio.file.Paths.get(new java.net.URI(p)).toString
-    else p
-  }
+  override def createRelation(
+      sqlContext: SQLContext,
+      parameters: Map[String, String]): BaseRelation =
+    relation(sqlContext.sparkSession, parameters, None)
+
+  private def rootOf(parameters: Map[String, String]): String =
+    CommitLogRelation.localPath(parameters.getOrElse("path",
+      throw new IllegalArgumentException("graft-commitlog requires a path")))
 
   /** Partition columns arrive from `DataFrameWriter.partitionBy` encoded
     * under `__partition_columns` (the V1-source convention), or explicitly
@@ -109,10 +103,8 @@ class DefaultSource extends RelationProvider with SchemaRelationProvider
         .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty)))
       .getOrElse(Nil)
 
-  override def createRelation(
-      sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
-    val spark = sqlContext.sparkSession
+  private def relation(spark: SparkSession, parameters: Map[String, String],
+      declared: Option[StructType]): BaseRelation = {
     val root = rootOf(parameters)
     // `version` pins a numeric snapshot; `tag` resolves a named one (the
     // tagged version is resolved at relation creation — a retag later does
@@ -154,31 +146,10 @@ class DefaultSource extends RelationProvider with SchemaRelationProvider
         .getOrElse(throw new IllegalStateException(s"no commits at $root"))
       return new ChangesRelation(spark, root, f.toLong, toV)
     }
-    // A snapshot carrying deletion vectors cannot be served by a plain
-    // file scan (the FileIndex can only choose FILES; dead positions need
-    // the anti-join read). Route it through the merge-on-read relation —
-    // filters still prune via manifest stats inside readPruned, and
-    // needConversion=false hands Spark the inner plan's InternalRows, so
-    // codegen below the boundary is preserved. DV-free snapshots keep the
-    // vectorized HadoopFsRelation path unchanged.
-    val resolved = version.orElse(CommitLog.currentVersion(root))
-    // DVs and column mappings both need the manifest-aware read (dead
-    // positions / physical→logical rename) — neither fits a raw file scan
-    val needsMor = resolved.exists { v =>
-      val m = CommitLog.readManifest(root, v)
-      m.dvsOrEmpty.nonEmpty || m.colMapOrEmpty.nonEmpty
-    }
-    if (needsMor) return new MergeOnReadRelation(spark, root, version)
-    val index = new CommitLogFileIndex(spark, root, version)
-    new HadoopFsRelation(index, new StructType(), index.initialSchema, None,
-      new ParquetFileFormat, parameters)(spark) with InsertableRelation {
-      override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-        require(version.isEmpty,
-          "cannot INSERT through a version-pinned (time travel) relation")
-        if (overwrite) CommitLog.overwrite(data, root)
-        else CommitLog.append(data, root)
-      }
-    }
+    // the declared schema stands in only until the first commit
+    val fixed = declared.filter(_ =>
+      version.isEmpty && CommitLog.currentVersion(root).isEmpty)
+    CommitLogRelation.route(spark, root, version, fixed, parameters)
   }
 
   override def createRelation(
@@ -233,24 +204,14 @@ class DefaultSource extends RelationProvider with SchemaRelationProvider
   * skipping costs a metadata read, composes with the parquet row-group
   * pruning that happens inside surviving files, and at 100 TB never lists
   * a directory (file sizes come from the manifest, not the filesystem).
+  * The schema is fixed per plan ([[CommitLogRelation.route]]); extra
+  * columns in later files are simply not requested.
   */
 class CommitLogFileIndex(
     spark: SparkSession,
     val root: String,
-    val pinned: Option[Long]) extends FileIndex {
-
-  private def versionAt(): Long =
-    pinned.orElse(CommitLog.currentVersion(root))
-      .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-
-  /** Schema at relation-creation time (schema is fixed per plan; files
-    * added later with extra columns still read — extra columns in a
-    * parquet file are simply not requested). Metadata-only resolution —
-    * a slim (parquet-checkpoint) table never materializes its file
-    * stats for schema probing.
-    */
-  val initialSchema: StructType =
-    CommitLog.manifestSchema(CommitLog.metaManifest(root, versionAt()))
+    val pinned: Option[Long],
+    val routedAt: Option[Long]) extends FileIndex {
 
   override def rootPaths: Seq[HPath] = Seq(new HPath(Paths.get(root).toUri))
 
@@ -288,11 +249,10 @@ class CommitLogFileIndex(
     val v1Filters = dataFilters.flatMap(GraftBridge.toSourceFilter)
     val (meta, pairs) =
       CommitLog.scanListing(spark, root, pinned, v1Filters.toArray)
-    // This relation was created against a DV-free snapshot (createRelation
-    // routes DV snapshots to the merge-on-read relation). An unpinned
-    // index re-resolves per scan, so a deletion-vector commit landing
-    // AFTER relation creation would make this file-level listing serve
-    // dead rows — fail loudly instead; a fresh read/query plans correctly.
+    // This relation was routed against a DV-free snapshot, and every new
+    // analysis re-routes it (CommitLogRelation.current). Only a plan
+    // analyzed BEFORE a deletion-vector commit reaches here with one:
+    // its file-level listing would serve dead rows — fail loudly instead.
     if (meta.dvsOrEmpty.nonEmpty || meta.colMapOrEmpty.nonEmpty)
       throw new IllegalStateException(
         s"snapshot v${meta.version} at $root now carries deletion vectors " +
@@ -312,17 +272,18 @@ class CommitLogFileIndex(
 /** Relation for a registered commitlog table whose root has no commits
   * yet: schema is the CREATE-declared one, scans are empty, inserts land
   * the first commit. Built only when the root was commit-free at
-  * RESOLUTION time; because a relation instance can outlive a concurrent
-  * first commit (Spark caches resolved data-source tables per session),
-  * the scan re-probes the log and serves real rows if any have appeared —
-  * correct rows in the transition window, vectorized scans from the next
-  * resolution on.
+  * RESOLUTION time; the next query after the first commit re-routes it
+  * ([[CommitLogRelation.current]]). A plan analyzed before that commit
+  * still scans here, so the scan re-probes the log and serves real rows
+  * if any have appeared — correct rows in the transition window.
   */
 class EmptyCommitLogRelation(
     spark: SparkSession,
     val root: String,
     override val schema: StructType) extends BaseRelation
-    with TableScan with InsertableRelation {
+    with TableScan with CommitLogInsert {
+
+  def pinned: Option[Long] = None
 
   override def sqlContext: SQLContext = spark.sqlContext
 
@@ -340,10 +301,6 @@ class EmptyCommitLogRelation(
         aligned.rdd
       case None => spark.sparkContext.emptyRDD[org.apache.spark.sql.Row]
     }
-
-  override def insert(data: DataFrame, overwrite: Boolean): Unit =
-    if (overwrite) CommitLog.overwrite(data, root)
-    else CommitLog.append(data, root)
 }
 
 /** V1 relation for snapshots that carry deletion vectors: delegates to the
@@ -358,26 +315,19 @@ class EmptyCommitLogRelation(
 class MergeOnReadRelation(
     spark: SparkSession,
     val root: String,
-    val pinned: Option[Long]) extends BaseRelation
-    with PrunedFilteredScan with InsertableRelation {
+    val pinned: Option[Long],
+    val routedAt: Option[Long],
+    override val schema: StructType) extends BaseRelation
+    with PrunedFilteredScan with CommitLogInsert {
 
   override def sqlContext: SQLContext = spark.sqlContext
-
-  override val schema: StructType = {
-    val v = pinned.orElse(CommitLog.currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    CommitLog.manifestSchema(CommitLog.readManifest(root, v))
-  }
 
   override def needConversion: Boolean = false
 
   override def buildScan(
       requiredColumns: Array[String],
       filters: Array[Filter]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val cond = filters.flatMap(GraftTable.toColumnOpt)
-      .reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true))
-    val df = CommitLog.readPruned(spark, root, cond, pinned)
+    val df = CommitLog.readPruned(spark, root, GraftTable.pushed(filters), pinned)
     val projected = df.select(requiredColumns.toIndexedSeq
       .map(org.apache.spark.sql.functions.col): _*)
     // needConversion=false: Spark accepts InternalRows from a V1 scan —
@@ -385,6 +335,15 @@ class MergeOnReadRelation(
     projected.queryExecution.toRdd
       .asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
   }
+}
+
+/** INSERT through a CommitLog read relation: one append commit (an
+  * overwrite commit for `INSERT OVERWRITE`); a version-pinned (time
+  * travel) relation refuses it.
+  */
+private[commitlog] trait CommitLogInsert extends InsertableRelation {
+  def root: String
+  def pinned: Option[Long]
 
   override def insert(data: DataFrame, overwrite: Boolean): Unit = {
     require(pinned.isEmpty,
@@ -420,11 +379,8 @@ class ChangesRelation(
   override def buildScan(
       requiredColumns: Array[String],
       filters: Array[Filter]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val cond = filters.flatMap(GraftTable.toColumnOpt)
-      .reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true))
     val projected = frame
-      .filter(cond)
+      .filter(GraftTable.pushed(filters))
       .select(requiredColumns.toIndexedSeq
         .map(org.apache.spark.sql.functions.col): _*)
     projected.queryExecution.toRdd

@@ -44,9 +44,10 @@ import graft.sources.CommitLog
   * Execution reuses the proven V1 engine end-to-end (the Delta-published
   * catalog pattern, without replacing `spark_catalog`):
   *  - reads: [[graft.plans.GraftExtensions]] rewrites a resolved
-  *    [[GraftTable]] relation onto the V1 `HadoopFsRelation` — Spark's
-  *    vectorized, codegen'd parquet scan with manifest-stats pruning, not
-  *    a hand-rolled row-at-a-time V2 `Batch`;
+  *    [[GraftTable]] relation onto the V1 relation
+  *    [[CommitLogRelation.route]] picks — Spark's vectorized, codegen'd
+  *    parquet scan with manifest-stats pruning, not a hand-rolled
+  *    row-at-a-time V2 `Batch`;
   *  - writes: `V1_BATCH_WRITE` + [[V1Write]] land `INSERT INTO` /
   *    `INSERT OVERWRITE` / `df.writeTo` on the same atomic
   *    `CommitLog.append`/`overwrite` commits as every other path;
@@ -364,11 +365,9 @@ case class GraftTable(rootDir: String, tableName: String, pinned: Option[Long])
 
   override def name(): String = tableName
 
-  override def schema(): StructType = {
-    val v = pinned.orElse(CommitLog.currentVersion(rootDir)).getOrElse(
-      throw new IllegalStateException(s"no commits at $rootDir"))
-    CommitLog.manifestSchema(CommitLog.readManifest(rootDir, v))
-  }
+  /** The columns of the V1 relation reads fall back to. */
+  override def schema(): StructType =
+    CommitLogRelation.route(spark, rootDir, pinned).schema
 
   override def partitioning(): Array[Transform] = {
     val v = pinned.orElse(CommitLog.currentVersion(rootDir))
@@ -416,10 +415,6 @@ case class GraftTable(rootDir: String, tableName: String, pinned: Option[Long])
       TableCapability.TRUNCATE,
       TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.OVERWRITE_DYNAMIC)
-
-  /** Options for the V1 relation this table falls back to. */
-  def v1Options: Map[String, String] =
-    Map("path" -> rootDir) ++ pinned.map(v => "version" -> v.toString)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate with SupportsOverwrite
@@ -489,10 +484,12 @@ object GraftTable {
       for { a <- acc; c <- toColumn(f) } yield a && c
     }
 
-  /** Best-effort single-filter translation, for callers where partial
-    * translation is safe (V1 scans re-apply every filter above the scan).
+  /** The conjunction of the pushed filters that translate, for V1 scans
+    * (partial translation is safe: Spark re-applies every filter above
+    * the scan).
     */
-  def toColumnOpt(f: Filter): Option[Column] = toColumn(f)
+  def pushed(filters: Array[Filter]): Column =
+    filters.flatMap(toColumn).reduceOption(_ && _).getOrElse(lit(true))
 
   private def toColumn(f: Filter): Option[Column] = f match {
     case _: sources.AlwaysTrue => Some(lit(true))

@@ -232,11 +232,7 @@ object PgCatalog {
       val fields =
         try schema.fields
         catch { case scala.util.control.NonFatal(_) => Array.empty[StructField] }
-      val root = meta.filter(_.provider.exists(
-          _.equalsIgnoreCase("graft-commitlog")))
-        .flatMap(m => m.storage.properties.get("path")
-          .orElse(m.storage.locationUri.map(u =>
-            java.nio.file.Paths.get(u).toString)))
+      val root = meta.flatMap(graft.sources.commitlog.CommitLogRelation.catalogRoot)
       val (props, checks) = root match {
         case Some(r) =>
           try {

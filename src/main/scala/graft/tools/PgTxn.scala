@@ -1,6 +1,7 @@
 package graft.tools
 
 import scala.collection.mutable
+import scala.util.Try
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
@@ -8,13 +9,12 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{CurrentDate, CurrentTime, CurrentTimestampLike, CurrentTimeZone, Exists, Expression, InSubquery, ListQuery, Literal, LocalTimestamp, ScalarSubquery, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, InsertIntoStatement, LogicalPlan, MergeIntoTable, Project, SubqueryAlias, UpdateTable}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types.StructType
 
 import graft.plans.CommitLogSqlDml
 import graft.sources.CommitLog
-import graft.sources.commitlog.{CommitLogFileIndex, MergeOnReadRelation}
+import graft.sources.commitlog.CommitLogRelation
 
 /** Per-connection transaction state for the [[PgWire]] endpoint —
   * BEGIN/COMMIT/ROLLBACK with REAL multi-statement atomicity instead of
@@ -281,13 +281,7 @@ final class PgTxn(session: SparkSession) {
       .flatMap { t =>
         try {
           val meta = cat.getTableMetadata(TableIdentifier(t.name, Some(db)))
-          if (meta.provider.exists(_.equalsIgnoreCase("graft-commitlog")))
-            // Spark promotes the `path` OPTION into storage.locationUri
-            meta.storage.properties.get("path")
-              .orElse(meta.storage.locationUri.map(u =>
-                java.nio.file.Paths.get(u).toString))
-              .map(r => (t.name, r, meta.schema))
-          else None
+          CommitLogRelation.catalogRoot(meta).map(r => (t.name, r, meta.schema))
         } catch { case NonFatal(_) => None }
       }
     // a table with no commits yet has nothing to pin, but it still
@@ -387,15 +381,7 @@ final class PgTxn(session: SparkSession) {
     val name = parts.map(p =>
       if (p.matches("[A-Za-z0-9_]+")) p else s"`${p.replace("`", "``")}`")
       .mkString(".")
-    val resolverPre = session.sessionState.conf.resolver
-    // an unqualified name may resolve to OUR shadow view, whose pinned
-    // plan no longer carries the commitlog index — the shadow map is the
-    // authority for those
-    val shadowRoot =
-      if (parts.size == 1)
-        shadows.collectFirst { case (nm, r) if resolverPre(nm, parts.head) => r }
-      else None
-    val root = shadowRoot.orElse(rootOfName(name)).getOrElse(
+    val root = rootOfName(parts).getOrElse(
       throw new UnsupportedOperationException(
         s"$name is not a commitlog table — only commitlog tables " +
           "participate in transaction blocks"))
@@ -777,15 +763,9 @@ final class PgTxn(session: SparkSession) {
     * current schema — [[PgCopy]]'s target face, valid in or out of a
     * block (shadows only exist while one is open).
     */
-  private[tools] def resolveTable(name: String): Option[(String, StructType)] = {
-    val resolver = session.sessionState.conf.resolver
-    val bare = name.stripPrefix("`").stripSuffix("`")
-    val fromShadow =
-      if (!name.contains("."))
-        shadows.collectFirst { case (nm, r) if resolver(nm, bare) => r }
-      else None
-    fromShadow.orElse(rootOfName(name)).map(r => (r, tableSchema(r, name)))
-  }
+  private[tools] def resolveTable(name: String): Option[(String, StructType)] =
+    Try(session.sessionState.sqlParser.parseMultipartIdentifier(name)).toOption
+      .flatMap(rootOfName).map(r => (r, tableSchema(r, name)))
 
   /** Stage one already-aligned batch into the open block ([[PgCopy]]'s
     * COPY FROM inside BEGIN): same contract as a staged INSERT.
@@ -806,30 +786,22 @@ final class PgTxn(session: SparkSession) {
       case None => session.table(name).schema
     }
 
-  /** Resolve a (possibly shadowed) table name to its commitlog root.
-    * Digs through view/alias layers and tolerates a version-pinned
-    * relation — OUR shadow views are pinned by design, and staging into
-    * a shadowed table is exactly the point (the DML-refuses-pinned rule
-    * guards time-travel reads, not transaction staging).
+  /** Resolve a (possibly shadowed) table name to its commitlog root. An
+    * unqualified name may resolve to OUR shadow view, whose pinned plan no
+    * longer carries the commitlog relation — the shadow map is the
+    * authority for those; any other name goes through
+    * [[CommitLogRelation.tableRoot]], tolerating a version-pinned relation
+    * (the DML-refuses-pinned rule guards time-travel reads, not
+    * transaction staging).
     */
-  private def rootOfName(name: String): Option[String] =
-    try {
-      session.table(name).queryExecution.analyzed.collectFirst {
-        case lr: LogicalRelation => lr.relation match {
-          case h: HadoopFsRelation => h.location match {
-            case idx: CommitLogFileIndex => Some(idx.root)
-            case _ => None
-          }
-          case mor: MergeOnReadRelation => Some(mor.root)
-          case e: graft.sources.commitlog.EmptyCommitLogRelation => Some(e.root)
-          case _ => None
-        }
-        // catalog tables resolve through the V2 route (GraftTable)
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-            if r.table.isInstanceOf[graft.sources.commitlog.GraftTable] =>
-          Some(r.table.asInstanceOf[graft.sources.commitlog.GraftTable].rootDir)
-      }.flatten
-    } catch { case NonFatal(_) => None }
+  private def rootOfName(parts: Seq[String]): Option[String] = {
+    val resolver = session.sessionState.conf.resolver
+    val shadowed = parts match {
+      case Seq(n) => shadows.collectFirst { case (nm, r) if resolver(nm, n) => r }
+      case _ => None
+    }
+    shadowed.orElse(CommitLogRelation.tableRoot(session, parts).map(_._1))
+  }
 }
 
 object PgTxn {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 import graft.sources.CommitLog
-import graft.sources.commitlog.CommitLogFileIndex
+import graft.sources.commitlog.CommitLogRelation
 
 /** Version-keyed query result cache — the serving-layer reuse primitive
   * (the published Snowflake/Databricks result-reuse idea, made exact by
@@ -53,17 +53,15 @@ object ResultCache {
     val unpinned = scala.collection.mutable.Map.empty[String, Long]
     val ps = plan.collect {
       case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.location match {
-          case c: CommitLogFileIndex =>
-            val v = c.pinned.getOrElse {
-              val cur = CommitLog.currentVersion(c.root).getOrElse(0L)
-              unpinned(c.root) = cur
-              cur
-            }
-            s"commitlog:${c.root}@$v"
-          case other =>
-            s"files:${md5(other.inputFiles.sorted.mkString("\n"))}"
-        }
+        case CommitLogRelation(root, pinned) =>
+          val v = pinned.getOrElse {
+            val cur = CommitLog.currentVersion(root).getOrElse(0L)
+            unpinned(root) = cur
+            cur
+          }
+          s"commitlog:$root@$v"
+        case h: HadoopFsRelation =>
+          s"files:${md5(h.location.inputFiles.sorted.mkString("\n"))}"
         case other => s"rel:${other.getClass.getName}"
       }
       case lr: LocalRelation =>

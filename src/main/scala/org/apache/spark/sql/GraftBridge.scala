@@ -80,4 +80,14 @@ object GraftBridge {
     classic.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
+
+  /** The catalog and identifier a table name resolves to, as the analyzer
+    * resolves it: an unqualified or partial name takes the session's
+    * current catalog and namespace (`LookupCatalog` is `private[sql]`).
+    */
+  def catalogAndIdentifier(spark: SparkSession, parts: Seq[String])
+      : Option[(connector.catalog.CatalogPlugin, connector.catalog.Identifier)] =
+    new connector.catalog.LookupCatalog {
+      override protected val catalogManager = spark.sessionState.catalogManager
+    }.CatalogAndIdentifier.unapply(parts)
 }

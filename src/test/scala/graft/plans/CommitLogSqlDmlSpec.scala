@@ -44,6 +44,19 @@ class CommitLogSqlDmlSpec extends SparkTestBase {
     assert(CommitLog.currentVersion(root).contains(2L))
   }
 
+  test("DELETE and UPDATE land on a declared-empty catalog table after its first INSERT") {
+    val root = Files.createTempDirectory("graft-sqldml-decl").toString + "/t"
+    val name = s"decl_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
+    spark.sql(s"CREATE TABLE $name (id BIGINT) USING `graft-commitlog` " +
+      s"OPTIONS (path '$root')")
+    try {
+      spark.sql(s"INSERT INTO $name VALUES (1), (2), (3)")
+      spark.sql(s"DELETE FROM $name WHERE id = 1")
+      spark.sql(s"UPDATE $name SET id = 20 WHERE id = 2")
+      assert(spark.table(name).collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 20L))
+    } finally spark.sql(s"DROP TABLE $name")
+  }
+
   test("SQL UPDATE rewrites only files containing matches") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-sqldml").toString

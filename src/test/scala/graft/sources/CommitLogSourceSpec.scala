@@ -207,6 +207,25 @@ class CommitLogSourceSpec extends SparkTestBase {
     } finally spark.sql("DROP TABLE lake.events_cl")
   }
 
+  test("a session that resolved a catalog table sees columns a later append added") {
+    val root = Files.createTempDirectory("graft-dsv1-evolve").toString
+    CommitLog.append(spark.range(3).toDF("id"), root)
+    val s = spark.newSession()
+    val name = s"cat_evolve_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
+    s.sql(s"CREATE TABLE $name USING `graft-commitlog` OPTIONS (path '$root')")
+    try {
+      val before = s.sql(s"SELECT * FROM $name")
+      assert(before.columns.toSeq == Seq("id"))
+      CommitLog.append(spark.range(3, 5).selectExpr("id", "id * 10 AS x"), root)
+      val after = s.sql(s"SELECT * FROM $name")
+      assert(after.columns.toSeq == Seq("id", "x"))
+      assert(after.collect().map(r => (r.getLong(0), Option(r.get(1)))).sortBy(_._1).toSeq ==
+        Seq((0L, None), (1L, None), (2L, None), (3L, Some(30L)), (4L, Some(40L))))
+      // a frame resolved earlier keeps the columns it resolved with
+      assert(before.count() == 5 && before.columns.toSeq == Seq("id"))
+    } finally s.sql(s"DROP TABLE $name")
+  }
+
   test("a new stream can start on a table with rewrite history (snapshot first batch)") {
     val root = java.nio.file.Files.createTempDirectory("graft-dsv1-s2").toString
     CommitLog.append(spark.range(4).toDF("id"), root)

@@ -360,4 +360,54 @@ class GraftCatalogSpec extends SparkTestBase {
     val d2 = java.nio.file.Paths.get(root, "props", "t2").toString
     assert(CommitLog.tablePropertiesOf(d2).get("team").contains("ml"))
   }
+
+  test("a table name resolves in the session's current catalog and namespace") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.graft.root", root)
+    // the same name in spark_catalog, two files so OPTIMIZE would commit
+    val other = Files.createTempDirectory("graft-catalog-same-name").toString
+    CommitLog.append(s.range(3).toDF("k"), other)
+    CommitLog.append(s.range(3, 5).toDF("k"), other)
+    s.sql(s"CREATE TABLE spark_catalog.default.t_use USING `graft-commitlog` " +
+      s"OPTIONS (path '$other')")
+    val mine = java.nio.file.Paths.get(root, "t_use").toString
+    try {
+      s.sql("CREATE TABLE graft.t_use (k BIGINT)")
+      s.sql("INSERT INTO graft.t_use VALUES (1)")
+      s.sql("INSERT INTO graft.t_use VALUES (2)")
+      s.sql("USE graft")
+      assert(CommitLogRelation.tableRoot(s, Seq("t_use")) == Some((mine, None)))
+      val v = s.sql("OPTIMIZE t_use").head.getLong(0)
+      assert(CommitLog.currentVersion(mine).contains(v))
+      assert(CommitLog.currentVersion(other).contains(2L))
+      assert(s.sql("SELECT count(*) FROM t_use VERSION AS OF 2").head.getLong(0) == 1L)
+      s.sql("USE spark_catalog.default")
+      assert(CommitLogRelation.tableRoot(s, Seq("t_use")) == Some((other, None)))
+    } finally {
+      s.sql("USE spark_catalog.default")
+      s.sql("DROP TABLE IF EXISTS spark_catalog.default.t_use")
+    }
+  }
+
+  test("a persistent view that passes a table's columns through names the table") {
+    val base = Files.createTempDirectory("graft-catalog-view-base").toString
+    CommitLog.append(spark.range(3).selectExpr("id AS k", "id * 2 AS v"), base)
+    spark.sql(s"CREATE TABLE pv_base USING `graft-commitlog` OPTIONS (path '$base')")
+    try {
+      spark.sql("CREATE VIEW pv_all AS SELECT * FROM pv_base")
+      spark.sql("CREATE VIEW pv_renamed AS SELECT v AS k, k AS v FROM pv_base")
+      spark.sql("CREATE VIEW pv_some AS SELECT k FROM pv_base")
+      assert(CommitLogRelation.tableRoot(spark, Seq("pv_all")) == Some((base, None)))
+      assert(CommitLogRelation.tableRoot(spark, Seq("default", "pv_all")) == Some((base, None)))
+      assert(CommitLogRelation.tableRoot(spark, Seq("pv_renamed")).isEmpty)
+      assert(CommitLogRelation.tableRoot(spark, Seq("pv_some")).isEmpty)
+      spark.sql("CREATE TEMPORARY VIEW tv_all AS SELECT * FROM pv_base")
+      assert(CommitLogRelation.tableRoot(spark, Seq("tv_all")) == Some((base, None)))
+    } finally {
+      Seq("pv_all", "pv_renamed", "pv_some").foreach(v => spark.sql(s"DROP VIEW IF EXISTS $v"))
+      spark.sql("DROP VIEW IF EXISTS tv_all")
+      spark.sql("DROP TABLE pv_base")
+    }
+  }
 }

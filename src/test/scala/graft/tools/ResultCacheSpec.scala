@@ -53,5 +53,18 @@ class ResultCacheSpec extends SparkTestBase {
       .agg(sum("n").as("total"))
     assert(ResultCache.cached(cache, v1).collect()(0).getLong(0) == 10L)
     assert(Files.list(Paths.get(cache)).count() == 2, "pinned read re-used")
+    // a catalog table over a DV snapshot (merge-on-read relation) keys by
+    // its version too: an append after the first answer misses the cache
+    val dvRoot = Files.createTempDirectory("graft-rc-dv").toString
+    CommitLog.append(spark.range(10).toDF("id"), dvRoot)
+    CommitLog.deleteDV(spark, dvRoot, col("id") === 0)
+    val name = s"rc_dv_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
+    spark.sql(s"CREATE TABLE $name USING `graft-commitlog` OPTIONS (path '$dvRoot')")
+    try {
+      def n = spark.sql(s"SELECT count(id) AS n FROM $name")
+      assert(ResultCache.cached(cache, n).collect()(0).getLong(0) == 9L)
+      CommitLog.append(spark.range(10, 15).toDF("id"), dvRoot)
+      assert(ResultCache.cached(cache, n).collect()(0).getLong(0) == 14L)
+    } finally spark.sql(s"DROP TABLE $name")
   }
 }
