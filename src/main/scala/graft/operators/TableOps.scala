@@ -1196,8 +1196,9 @@ object TableOps {
     // SQL DML surface: the table is CREATED by df.write, exposed as a view
     // via CREATE TEMPORARY VIEW ... USING, grown by INSERT INTO ... SELECT
     // (one atomic commit through the log), and read back through the same
-    // view — which tracks the new commit because the FileIndex resolves
-    // the current version per scan. Oracle = the full orders table.
+    // view — which tracks the new commit because every query re-routes
+    // the view's relation to the current version. Oracle = the full
+    // orders table.
     "q65_sql_dml" -> QueryDef(
       fn = { (s, dir) =>
         val ord = Tables.load(s, dir, "orders")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 import graft.functions.FloatDotQ
+import graft.sources.commitlog.CommitLogRelation
 
 /** Optimizer rule: rewrite the declarative higher-order quantized
   * dot-product pattern
@@ -120,6 +121,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // vectorized relation; row-level DML then flows through ResolveDml.
     e.injectResolutionRule(s => new GraftCatalogFallback(s))
     e.injectHintResolutionRule(s => new CommitLogSqlDml.ResolveTimeTravel(s))
+    // deletion vectors of commitlog snapshots: a filter inside the file scan
+    e.injectPlannerStrategy(_ => CommitLogRelation.DeletionVectorScan)
     e.injectFunction((
       new FunctionIdentifier("float_dot_q"),
       new ExpressionInfo(classOf[FloatDotQ].getName, "float_dot_q"),
@@ -204,8 +207,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Attach the rewrite to an existing session (experimental optimizer
-    * hook) and register the function — idempotent.
+  /** Attach the rewrites and the deletion-vector scan to an existing
+    * session (experimental optimizer and planner hooks) and register the
+    * function — idempotent.
     */
   def install(spark: org.apache.spark.sql.SparkSession): Unit = {
     graft.functions.GraftFunctions.register(spark)
@@ -215,5 +219,8 @@ object GraftExtensions {
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ r
     }
+    if (!spark.experimental.extraStrategies.contains(CommitLogRelation.DeletionVectorScan))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ CommitLogRelation.DeletionVectorScan
   }
 }

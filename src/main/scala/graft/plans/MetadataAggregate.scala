@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Lit
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 import graft.sources.CommitLog
 import graft.sources.commitlog.CommitLogRelation
@@ -30,9 +31,9 @@ import graft.sources.commitlog.CommitLogRelation
   *     [[CommitLog.metadataAggAnswers]], which declines otherwise.
   * min/max parse through the SAME statParse the file pruner trusts, so
   * answering can never disagree with pruning about a value's type.
-  * Version-pinned (time travel) relations answer from THEIR version's
-  * manifest. `spark.graft.metadataAgg.enabled=false` turns the rewrite
-  * off.
+  * Each relation answers from the manifest of the version its scan reads
+  * (its time-travel pin, else the snapshot it was routed at).
+  * `spark.graft.metadataAgg.enabled=false` turns the rewrite off.
   */
 object MetadataAggregate extends Rule[LogicalPlan] {
 
@@ -51,6 +52,14 @@ object MetadataAggregate extends Rule[LogicalPlan] {
     case Filter(_, child) if throughFilter => relationOf(child, throughFilter)
     case _ => CommitLogRelation.rootOf(plan)
   }
+
+  /** (root, version) of the snapshot [[relationOf]]`(plan)` scans: the pin,
+    * else the version the relation was routed at — the one its scan reads.
+    */
+  private def snapshotOf(plan: LogicalPlan): Option[(String, Option[Long])] =
+    relationOf(plan).map { case (root, pinned) => (root, pinned.orElse(
+      plan.collectLeaves().collectFirst { case lr: LogicalRelation =>
+        CommitLogRelation.routedAt(lr.relation) }.flatten)) }
 
   private sealed trait Kind
   private case object CountStar extends Kind
@@ -86,12 +95,12 @@ object MetadataAggregate extends Rule[LogicalPlan] {
     plan.transform {
       case agg @ Aggregate(Seq(), exprs, child, _) =>
         (for {
-          (root, pinned) <- relationOf(child)
+          (root, version) <- snapshotOf(child)
           kinds <- {
             val ks = exprs.map(classify)
             if (ks.forall(_.isDefined)) Some(ks.flatten) else None
           }
-          answers <- CommitLog.metadataAggAnswers(spark, root, pinned,
+          answers <- CommitLog.metadataAggAnswers(spark, root, version,
             minMaxCols = kinds.collect {
               case MinCol(c) => c
               case MaxCol(c) => c
@@ -134,12 +143,12 @@ object MetadataAggregate extends Rule[LogicalPlan] {
           case other => classify(other)
         }
         (for {
-          (root, pinned) <- relationOf(child)
+          (root, version) <- snapshotOf(child)
           kinds <- {
             val ks = exprs.map(classifyG)
             if (ks.forall(_.isDefined)) Some(ks.flatten) else None
           }
-          answers <- CommitLog.metadataGroupAnswers(spark, root, pinned,
+          answers <- CommitLog.metadataGroupAnswers(spark, root, version,
             groupCols = groupNames,
             minMaxCols = kinds.collect {
               case MinCol(c) => c

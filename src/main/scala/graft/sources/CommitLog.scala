@@ -8,7 +8,8 @@ import scala.util.Using
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{catalyst, Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1854,8 +1855,8 @@ object CommitLog {
     * the data file's path exactly as the import references it, `pos`
     * BIGINT: parquet `_metadata.row_index`, the same addressing the
     * native DV writer records) — so readers apply imported DVs through
-    * the identical anti-join. Fully DISTRIBUTED: positions stay in the
-    * DataFrame end-to-end (duplicate marks dedupe in the shuffle, the
+    * the identical [[dvLive]] filter. Fully DISTRIBUTED: positions stay
+    * in the DataFrame end-to-end (duplicate marks dedupe in the shuffle, the
     * DV parquet lands through the native DV write, [[stageDV]]);
     * the driver holds only the DV'd FILE LIST — one row per file, never
     * a position set — so an import of billions of dead positions is a
@@ -2923,20 +2924,17 @@ object CommitLog {
                   val survivors = state.where(col(TagFile).isNotNull)
                     .select(col(TagFile), col(TagPos))
                   val absToRel = touched.map(f => (absPath(root, f), f))
-                  // (file, pos) is unique on both sides (one physical row
-                  // each), so EXCEPT's dedup-both-sides set machinery is
-                  // pure overhead — a left-anti join is the same answer
-                  val deadRel = tagged.select(col(TagFile), col(TagPos))
+                  // every raw position no survivor holds is dead: the
+                  // prior DV's and the fold's alike. (file, pos) is unique
+                  // on both sides (one physical row each), so EXCEPT's
+                  // dedup-both-sides set machinery is pure overhead — a
+                  // left-anti join is the same answer
+                  val dead = readTagged(spark, root, m, touched)
+                    .select(col(TagFile), col(TagPos))
                     .join(survivors, Seq(TagFile, TagPos), "left_anti")
                     .join(broadcast(spark.createDataFrame(absToRel)
                       .toDF(TagFile, "__dv_rel")), TagFile)
                     .select(col("__dv_rel"), col(TagPos).as("__dv_pos"))
-                  val priorDv = m.dvsOrEmpty.filter {
-                    case (f, _) => touched.contains(f)
-                  }
-                  val dead = if (priorDv.isEmpty) deadRel
-                    else deadRel.unionByName(
-                      dvPositionsRel(spark, root, priorDv))
                   stageDV(dead.filter(col("__dv_rel").isin(partial: _*)),
                     root, partial)
                 }
@@ -3232,36 +3230,17 @@ object CommitLog {
     val del0 = shaped(
       readTaggedLive(spark, root, mF, mF.files.filterNot(toSet)),
       sF.fieldNames.toSet)
-    // common files: only a DV change moves rows between the snapshots
+    // common files: only a DV change moves rows between the snapshots —
+    // a row one snapshot's DVs leave live and the other's mark dead
     val changed = mT.files.filter(f => fromSet(f) &&
       mF.dvsOrEmpty.get(f) != mT.dvsOrEmpty.get(f))
     val (ins, del) =
       if (changed.isEmpty) (ins0, del0)
       else {
         val raw = readTagged(spark, root, mT, changed)
-        def dead(m: Manifest): DataFrame = {
-          val dvMap = m.dvsOrEmpty.filter { case (f, _) => changed.contains(f) }
-          val relToAbs = dvMap.keysIterator.map(f => (f, absPath(root, f))).toSeq
-          if (dvMap.isEmpty)
-            spark.createDataFrame(Seq.empty[(String, Long)])
-              .toDF("__dv_file", "__dv_pos")
-          else dvPositionsRel(spark, root, dvMap)
-            .join(broadcast(spark.createDataFrame(relToAbs)
-              .toDF("__dv_rel", "__dv_file")), "__dv_rel")
-            .select(col("__dv_file"), col("__dv_pos"))
-        }
-        val deadF = dead(mF); val deadT = dead(mT)
-        def minus(a: DataFrame, b: DataFrame): DataFrame =
-          a.join(b.toDF("__b_file", "__b_pos"),
-            a("__dv_file") === col("__b_file") && a("__dv_pos") === col("__b_pos"),
-            "left_anti")
-        def rowsAt(posSet: DataFrame): DataFrame =
-          shaped(raw.join(broadcast(posSet),
-              raw(TagFile) === posSet("__dv_file") && raw(TagPos) === posSet("__dv_pos"),
-              "left_semi"),
-            sT.fieldNames.toSet)
-        (ins0.unionAll(rowsAt(minus(deadF, deadT))),
-          del0.unionAll(rowsAt(minus(deadT, deadF))))
+        def moved(to: Manifest, from: Manifest): DataFrame = shaped(
+          raw.filter(live(root, to) && !live(root, from)), sT.fieldNames.toSet)
+        (ins0.unionAll(moved(mT, mF)), del0.unionAll(moved(mF, mT)))
       }
     // NET semantics: a rewrite (compact/merge/optimize) re-stages existing
     // rows into new files — identical rows on both sides cancel, multiset
@@ -3520,10 +3499,10 @@ object CommitLog {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else spark.read.schema(schema).parquet(files.map(dataPath(root, _)): _*)
 
-  /** Manifest-resolved read: the snapshot's LIVE rows — files with a
-    * deletion vector anti-join their dead positions away
-    * ([[readTaggedLive]]); files without one stream through the plain
-    * vectorized scan untouched.
+  /** Manifest-resolved read: the snapshot's LIVE rows — a read of files
+    * with a deletion vector filters their dead positions away inside the
+    * scan ([[readTaggedLive]]); files without one stream through the
+    * plain vectorized scan untouched.
     */
   private def readFiles(spark: SparkSession, root: String, m: Manifest,
       files: Seq[String]): DataFrame = {
@@ -3551,7 +3530,9 @@ object CommitLog {
       org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
         Seq("_metadata", "file_path"))))
 
-  private def absPath(root: String, rel: String): String =
+  /** Canonical absolute path of a manifest path — the file path a scan
+    * of it reports (through [[graft.functions.CanonicalPath]]). */
+  private[graft] def absPath(root: String, rel: String): String =
     Paths.get(root).toAbsolutePath.normalize.resolve(rel).toString
 
   /** Raw per-file scan of `files`, tagged with the canonical absolute file
@@ -3592,28 +3573,29 @@ object CommitLog {
       .select(col("__dv_rel"), col("pos").as("__dv_pos"))
   }
 
-  /** Tagged read with deletion vectors applied: raw rows minus the
-    * positions their DVs mark dead. The dead side is O(deleted rows) —
-    * usually KBs that AQE broadcasts; a table whose DVs have grown to
-    * shuffle scale should [[purgeDeletionVectors]].
+  /** Tagged read with deletion vectors applied: the raw rows the
+    * snapshot's DVs leave live ([[dvLive]] over the scan's own tags).
     */
   private def readTaggedLive(spark: SparkSession, root: String, m: Manifest,
       files: Seq[String]): DataFrame = {
-    val inSet = files.toSet
-    val dvMap = m.dvsOrEmpty.filter { case (f, _) => inSet(f) }
     val tagged = readTagged(spark, root, m, files)
-    if (dvMap.isEmpty) return tagged
-    // manifest path → absolute scan path, resolved on the driver (handles
-    // both root-relative files and a shallow clone's absolute references)
-    val relToAbs = dvMap.keysIterator.map(f => (f, absPath(root, f))).toSeq
-    val dead = dvPositionsRel(spark, root, dvMap)
-      .join(broadcast(spark.createDataFrame(relToAbs)
-        .toDF("__dv_rel", "__dv_file")), "__dv_rel")
-      .select(col("__dv_file"), col("__dv_pos"))
-    tagged.join(dead,
-      tagged(TagFile) === dead("__dv_file") && tagged(TagPos) === dead("__dv_pos"),
-      "left_anti")
+    if (m.dvsOrEmpty.isEmpty) tagged else tagged.filter(live(root, m))
   }
+
+  /** [[dvLive]] of `m` over a tagged read's tag columns. */
+  private def live(root: String, m: Manifest): Column = GraftBridge.column(
+    dvLive(root, m, UnresolvedAttribute(TagFile), UnresolvedAttribute(TagPos)))
+
+  /** The deletion-vector predicate of snapshot `m` over a scan's canonical
+    * file path and row index: every read of a DV snapshot (the registered
+    * relation, [[read]]/[[readPruned]] and the DML touch sets) applies
+    * its DVs through this one filter.
+    */
+  private[graft] def dvLive(root: String, m: Manifest,
+      file: catalyst.expressions.Expression,
+      pos: catalyst.expressions.Expression): catalyst.expressions.Expression =
+    graft.functions.DvLive(file, pos,
+      m.dvsOrEmpty.map { case (data, dv) => absPath(root, data) -> absPath(root, dv) })
 
   /** Root-relative paths of files containing ≥1 LIVE row matching `cond` —
     * the copy-on-write touch set (rows a deletion vector already killed
@@ -3960,15 +3942,15 @@ object CommitLog {
     * GDPR-scale delete of a few thousand rows scattered over ten thousand
     * 128 MB files writes KBs of DV instead of re-staging TBs of parquet.
     *
-    * Readers apply DVs transparently ([[readTaggedLive]]'s anti-join, used
-    * by every manifest-resolved read, DML rewrite, and the registered data
-    * source). A file whose every row dies is dropped from the snapshot
-    * outright — no empty husks, no DV read amplification for it. A repeat
-    * delete REPLACES a file's DV with the union of old and new dead
-    * positions, so exactly one DV per file is ever live. When accumulated
-    * DVs make the scan-time anti-join noticeable, [[purgeDeletionVectors]]
-    * (or any rewrite: compact/optimize/merge touching the file)
-    * materializes them away.
+    * Readers apply DVs transparently (the [[dvLive]] filter inside the
+    * scan, used by every manifest-resolved read, DML rewrite, and the
+    * registered data source). A file whose every row dies is dropped from
+    * the snapshot outright — no empty husks, no DV read amplification for
+    * it. A repeat delete REPLACES a file's DV with the union of old and
+    * new dead positions, so exactly one DV per file is ever live. When
+    * accumulated DVs make the per-task position loads noticeable,
+    * [[purgeDeletionVectors]] (or any rewrite: compact/optimize/merge
+    * touching the file) materializes them away.
     */
   def deleteDV(spark: SparkSession, root: String, cond: Column): Long =
     commitOn(root) { prior =>
@@ -3995,7 +3977,7 @@ object CommitLog {
     // now yields both: matched (file, pos) rows persist (O(matched rows),
     // the DV size itself), their per-file counts give `touched`, and
     // previously-DV'd positions cannot reappear because the scan is the
-    // LIVE read (anti-joined against prior DVs) — the union below stays
+    // LIVE read (prior DVs filtered inside the scan) — the union below stays
     // disjoint, so new+prior counts add exactly as the old unioned count
     // did. Scan paths map back to MANIFEST path strings via a driver
     // lookup (correct for relative and clone-absolute references alike).
@@ -4084,7 +4066,7 @@ object CommitLog {
     * re-stages every row of every touched file, which at 100 TB turns a
     * ten-row correction scattered across ten files into a 1.2 GB rewrite;
     * this writes ten rows and a few KB of DV. The read path already
-    * reassembles the snapshot (anti-join + the appended images), and any
+    * reassembles the snapshot (the DV filter + the appended images), and any
     * later rewrite of a DV'd file materializes its deletes away.
     */
   def updateDV(spark: SparkSession, root: String,
@@ -4166,7 +4148,7 @@ object CommitLog {
     * materialized away and drop the DVs — one commit; every other file
     * moves into the new version by reference, stats intact. The
     * merge-on-read counterpart of OPTIMIZE: run it when accumulated DVs
-    * make the scan-time anti-join cost noticeable.
+    * make their scan-time position loads noticeable.
     */
   def purgeDeletionVectors(spark: SparkSession, root: String): Long =
     commitOn(root) { prior =>
@@ -4325,27 +4307,22 @@ object CommitLog {
     (m2, bloomPrune(root, m2, pred, tracked.toMap, byTransform))
   }
 
-  /** Scan-planning listing for the `graft-commitlog` FileIndex: resolves
-    * the snapshot, prunes with the pushed V1 filters, and returns the
-    * surviving (path, bytes) pairs plus the META manifest (schema / DV /
-    * column-mapping authority). On a slim snapshot both the prune AND the
-    * unfiltered listing run over the parquet sidecar — the driver holds
-    * (path, bytes) pairs, never the stats maps of a million files.
+  /** Scan-planning listing for the `graft-commitlog` FileIndex: the
+    * (path, bytes) pairs of snapshot `snap` that survive the pushed V1
+    * filters. On a slim snapshot both the prune AND the unfiltered listing
+    * run over the parquet sidecar — the driver holds (path, bytes) pairs,
+    * never the stats maps of a million files.
     */
   private[graft] def scanListing(spark: SparkSession, root: String,
-      version: Option[Long],
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : (Manifest, Seq[(String, Long)]) = {
-    val v = version.orElse(currentVersion(root))
-      .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val snap = readSnapshotSlim(root, v)
+      snap: SlimSnapshot,
+      filters: Array[org.apache.spark.sql.sources.Filter]): Seq[(String, Long)] =
     if (!snap.isSlim) {
       val m = snap.meta
       val surviving =
         if (filters.isEmpty) m.files
         else pruneForSourceFilters(spark, m, filters, Some(root))
       val byPath = m.statsOrNil.map(s => s.path -> s.bytes).toMap
-      (m, surviving.map(p => p -> byPath.getOrElse(p, 0L)))
+      surviving.map(p => p -> byPath.getOrElse(p, 0L))
     } else if (filters.isEmpty) {
       import scala.jdk.CollectionConverters._
       val refDF = statsParquetDF(spark, root, snap.statsRef.get)
@@ -4356,17 +4333,15 @@ object CommitLog {
             snap.refRemoves.map(org.apache.spark.sql.Row(_)).asJava,
             StructType(Seq(StructField("path", StringType))))),
           Seq("path"), "left_anti")
-      val pairs = live.select(col("path"), col("bytes")).collect()
+      live.select(col("path"), col("bytes")).collect()
         .iterator.map(r => r.getString(0) -> r.getLong(1)).toVector ++
         snap.meta.statsOrNil.map(s => s.path -> s.bytes)
-      (snap.meta, pairs)
     } else {
       val pred = sourceFilterPred(filters)
       val (m2, surviving) = prunedSlim(spark, root, snap, pred)
       val byPath = m2.statsOrNil.map(s => s.path -> s.bytes).toMap
-      (snap.meta, surviving.map(p => p -> byPath.getOrElse(p, 0L)))
+      surviving.map(p => p -> byPath.getOrElse(p, 0L))
     }
-  }
 
   /** The file subset [[readPruned]] would open (exposed for tests/EXPLAIN). */
   def prunedFiles(spark: SparkSession, m: Manifest, predicate: Column): Seq[String] =
@@ -4379,21 +4354,9 @@ object CommitLog {
       predicate: Column): Seq[String] =
     prunedByPred(spark, m, GraftBridge.pred(predicate), Some(root))
 
-  /** Log schema / file reading / V1-filter pruning, exposed for the
-    * `graft-commitlog` data source ([[graft.sources.commitlog.DefaultSource]]).
-    */
+  /** Log schema, exposed for the `graft-commitlog` data source
+    * ([[graft.sources.commitlog.DefaultSource]]). */
   def manifestSchema(m: Manifest): StructType = schemaOf(m)
-
-  /** Metadata-only snapshot resolution (schema / DVs / column mapping /
-    * properties — everything except a slim checkpoint's parquet-side file
-    * stats): what scan planning needs before it decides which files to
-    * list. KB-scale at any file count.
-    */
-  private[graft] def metaManifest(root: String, v: Long): Manifest =
-    readSnapshotSlim(root, v).meta
-
-  def readManifestFiles(spark: SparkSession, root: String, m: Manifest,
-      files: Seq[String]): DataFrame = readFiles(spark, root, m, files)
 
   /** Translate Catalyst-pushed V1 `sources.Filter`s to the pruning ADT and
     * return the surviving file set. Unsupported filter shapes degrade to

@@ -9,25 +9,28 @@ import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.analysis.{AnalysisContext, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias, View}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, FileSourceMetadataAttribute, GetStructField, NamedExpression}
+import org.apache.spark.sql.catalyst.planning.ScanOperation
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias, View}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.datasources.{FileSourceStrategy, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.CanonicalPath
 import graft.sources.CommitLog
 
-/** The one place that recognises and routes a CommitLog read. A read is
-  * served by one of three relations, chosen from the snapshot it reads:
-  * [[EmptyCommitLogRelation]] (no commits yet), [[MergeOnReadRelation]]
-  * (deletion vectors or a column mapping), or Spark's vectorized file
-  * scan over a [[CommitLogFileIndex]]. Everything outside this package
+/** The one place that recognises and routes a CommitLog read. A table
+  * with commits is read by Spark's vectorized file scan over a
+  * [[CommitLogFileIndex]] fixed at one snapshot, its deletion vectors a
+  * filter over that scan ([[DeletionVectorScan]]) and its column mapping
+  * applied inside the parquet reader ([[CommitLogParquet]]); a table with
+  * none yet by [[EmptyCommitLogRelation]]. Everything outside this package
   * recognises a read through [[unapply]], [[rootOf]] and [[tableRoot]],
   * builds one through [[route]], and has it re-routed per query through
-  * [[current]] — the way Delta resolves its snapshot for every query.
+  * [[current]] — the way Delta fixes one snapshot for every query.
   */
 object CommitLogRelation {
 
@@ -37,7 +40,6 @@ object CommitLogRelation {
       case idx: CommitLogFileIndex => Some((idx.root, idx.pinned))
       case _ => None
     }
-    case m: MergeOnReadRelation => Some((m.root, m.pinned))
     case e: EmptyCommitLogRelation => Some((e.root, None))
     case _ => None
   }
@@ -123,94 +125,86 @@ object CommitLogRelation {
       declared: Option[StructType] = None,
       options: Map[String, String] = Map.empty): BaseRelation =
     routeAt(spark, root, pinned,
-      pinned.orElse(CommitLog.currentVersion(root)).map(CommitLog.metaManifest(root, _)),
+      pinned.orElse(CommitLog.currentVersion(root)).map(CommitLog.readSnapshotSlim(root, _)),
       declared, options)
 
   private def routeAt(spark: SparkSession, root: String, pinned: Option[Long],
-      meta: Option[CommitLog.Manifest], declared: Option[StructType],
-      options: Map[String, String]): BaseRelation = meta match {
+      snap: Option[CommitLog.SlimSnapshot], declared: Option[StructType],
+      options: Map[String, String]): BaseRelation = snap match {
     case None => new EmptyCommitLogRelation(spark, root, declared.getOrElse(
       throw new IllegalStateException(s"no commits at $root")))
-    case Some(m) =>
-      val schema = declared.getOrElse(CommitLog.manifestSchema(m))
-      val at = Some(m.version)
-      if (mergeOnRead(m)) new MergeOnReadRelation(spark, root, pinned, at, schema)
-      else {
-        val index = new CommitLogFileIndex(spark, root, pinned, at)
-        new HadoopFsRelation(index, new StructType(), schema, None,
-            new ParquetFileFormat, options)(spark) with CommitLogInsert {
-          def root: String = index.root
-          def pinned: Option[Long] = index.pinned
-        }
+    case Some(s) =>
+      val m = s.meta
+      val index = new CommitLogFileIndex(spark, root, pinned, s)
+      new HadoopFsRelation(index, new StructType(),
+          declared.getOrElse(CommitLog.manifestSchema(m)), None,
+          new CommitLogParquet(m.colMapOrEmpty, m.dvsOrEmpty.nonEmpty), options)(spark)
+          with CommitLogInsert {
+        def root: String = index.root
+        def pinned: Option[Long] = index.pinned
       }
   }
 
-  /** DVs (dead positions) and column mappings (renames) need the
-    * manifest-aware read; neither fits a raw file scan. */
-  private def mergeOnRead(m: CommitLog.Manifest): Boolean =
-    m.dvsOrEmpty.nonEmpty || m.colMapOrEmpty.nonEmpty
-
-  /** The snapshot version `r`'s route was decided at; None for the empty
-    * relation, which is routed while the log has no commit. */
-  private def routedAt(r: BaseRelation): Option[Long] = r match {
+  /** The snapshot version `r` reads; None for the empty relation, which
+    * is routed while the log has no commit. */
+  def routedAt(r: BaseRelation): Option[Long] = r match {
     case h: HadoopFsRelation => h.location match {
-      case idx: CommitLogFileIndex => idx.routedAt
+      case idx: CommitLogFileIndex => Some(idx.routedAt)
       case _ => None
     }
-    case m: MergeOnReadRelation => m.routedAt
     case _ => None
   }
 
-  /** The relations [[current]] checked in the running analysis, each
-    * mapped to what it became. The key is the analysis' relation cache:
-    * Spark renews it per analysis and shares it with the analysis'
-    * subquery and view contexts. Per thread, so concurrent sessions never
-    * share a map, and the plan nodes themselves are never written.
+  /** What [[current]] saw in the running analysis: each relation it
+    * checked, mapped to what it became, and each table's version — read
+    * once, so every relation of one root (a self-join, an `IN (SELECT …)`)
+    * reads one snapshot. The key is the analysis' relation cache: Spark
+    * renews it per analysis and shares it with the analysis' subquery and
+    * view contexts. Per thread, so concurrent sessions never share one,
+    * and the plan nodes themselves are never written.
     */
-  private val checked = ThreadLocal.withInitial(() =>
-    (new WeakReference[AnyRef](null), new IdentityHashMap[LogicalRelation, LogicalRelation]))
-
-  private def checkedInThisAnalysis(): IdentityHashMap[LogicalRelation, LogicalRelation] = {
-    val key = AnalysisContext.get.relationCache
-    if (!(checked.get._1.get eq key)) checked.set((new WeakReference(key), new IdentityHashMap))
-    checked.get._2
+  private final class Seen {
+    val relations = new IdentityHashMap[LogicalRelation, LogicalRelation]
+    val versions = new java.util.HashMap[String, Option[Long]]
   }
 
-  /** `lr` re-routed for the current snapshot: an unpinned relation whose
-    * route no longer fits it (DVs or a column mapping came or went, the
-    * first commit landed) is rebuilt through [[route]] with `lr`'s output
-    * attributes, so operators bound to them still bind. `resolveAgain` (a
-    * catalog table this analysis looked up afresh) also takes a changed
-    * table schema and drops the session's cached relation, so the next
-    * lookup decides its route at the new snapshot. Pinned relations pass
-    * through. Each relation costs one `currentVersion` per analysis, not
-    * per iteration, plus one meta-manifest read when a commit landed
-    * since its route was decided.
+  private val seen = ThreadLocal.withInitial(() => (new WeakReference[AnyRef](null), new Seen))
+
+  private def seenInThisAnalysis(): Seen = {
+    val key = AnalysisContext.get.relationCache
+    if (!(seen.get._1.get eq key)) seen.set((new WeakReference(key), new Seen))
+    seen.get._2
+  }
+
+  /** `lr` re-routed for the current snapshot: an unpinned relation routed
+    * at an older version (or before the first commit) is rebuilt through
+    * [[route]] at the current one with `lr`'s output attributes, so
+    * operators bound to them still bind. `resolveAgain` (a catalog table
+    * this analysis looked up afresh) also takes a changed table schema and
+    * drops the session's cached relation, so the next lookup routes at the
+    * new snapshot. Pinned relations pass through. Each table costs one
+    * `currentVersion` per analysis, not per iteration, plus one snapshot
+    * metadata read per relation when a commit landed since its route.
     */
   def current(spark: SparkSession, lr: LogicalRelation,
       resolveAgain: Boolean): LogicalRelation = lr.relation match {
     case CommitLogRelation(root, None) =>
-      val seen = checkedInThisAnalysis()
-      Option(seen.get(lr)).getOrElse {
-        val out = reroute(spark, root, lr, resolveAgain)
-        seen.put(lr, out)
-        seen.put(out, out)
+      val s = seenInThisAnalysis()
+      Option(s.relations.get(lr)).getOrElse {
+        val now = s.versions.computeIfAbsent(root, CommitLog.currentVersion(_))
+        val out = reroute(spark, root, now, lr, resolveAgain)
+        s.relations.put(lr, out)
+        s.relations.put(out, out)
         out
       }
     case _ => lr
   }
 
-  private def reroute(spark: SparkSession, root: String, lr: LogicalRelation,
-      resolveAgain: Boolean): LogicalRelation = {
-    val now = CommitLog.currentVersion(root)
+  private def reroute(spark: SparkSession, root: String, now: Option[Long],
+      lr: LogicalRelation, resolveAgain: Boolean): LogicalRelation = {
     if (now == routedAt(lr.relation)) return lr
-    val meta = now.map(CommitLog.metaManifest(root, _))
-    val fits = meta.forall { m => lr.relation match {
-      case _: MergeOnReadRelation => mergeOnRead(m)
-      case _: HadoopFsRelation => !mergeOnRead(m)
-      case _ => false // the empty relation, once a commit exists
-    }}
-    val columns = meta.map(CommitLog.manifestSchema).filter(s => resolveAgain &&
+    val snap = now.map(CommitLog.readSnapshotSlim(root, _))
+    val columns = snap.map(s => CommitLog.manifestSchema(s.meta)).filter(s => resolveAgain &&
       s.map(f => f.name -> f.dataType) != lr.schema.map(f => f.name -> f.dataType))
     // the session's next lookup re-creates the relation through the data
     // source (caching a re-routed relation instead would let Spark's
@@ -219,13 +213,45 @@ object CommitLogRelation {
       lr.catalogTable.foreach(t => spark.sessionState.catalog.invalidateCachedTable(t.identifier))
     columns match {
       case Some(schema) =>
-        val rel = routeAt(spark, root, None, meta, None, Map.empty)
+        val rel = routeAt(spark, root, None, snap, None, Map.empty)
         LogicalRelation(rel, DataTypeUtils.toAttributes(schema).map(a =>
           lr.output.find(o => o.name == a.name && o.dataType == a.dataType).getOrElse(a)),
           lr.catalogTable, isStreaming = false, stream = None)
-      case None if fits => lr
-      case None => lr.copy(relation = routeAt(spark, root, None, meta,
+      case None => lr.copy(relation = routeAt(spark, root, None, snap,
         Some(DataTypeUtils.fromAttributes(lr.output)), Map.empty))
+    }
+  }
+
+  /** Planner strategy that applies a snapshot's deletion vectors inside
+    * Spark's own file scan: a read of a [[CommitLogFileIndex]] whose
+    * snapshot carries DVs is planned as that scan plus `_metadata` and a
+    * `Filter` of [[CommitLog.dvLive]] over `_metadata.file_path` and
+    * `_metadata.row_index` — one `FileSourceScanExec`, no join, no
+    * broadcast, nothing executed while planning. The rewrite happens here,
+    * after optimization, so every analyzer and optimizer rule still sees
+    * the bare relation. [[graft.plans.GraftExtensions]] registers it.
+    */
+  object DeletionVectorScan extends SparkStrategy {
+    override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+      case ScanOperation(_, _, _, lr @ LogicalRelation(h: HadoopFsRelation, _, _, _, _)) =>
+        h.location match {
+          case idx: CommitLogFileIndex if idx.snapshot.meta.dvsOrEmpty.nonEmpty =>
+            FileSourceStrategy(plan.transformUp {
+              case r: LogicalRelation if r eq lr => live(lr, idx)
+            })
+          case _ => Nil
+        }
+      case _ => Nil
+    }
+
+    private def live(lr: LogicalRelation, idx: CommitLogFileIndex): LogicalPlan = {
+      val meta = lr.output.collectFirst { case FileSourceMetadataAttribute(a) => a }
+        .getOrElse(lr.metadataOutput.collectFirst { case FileSourceMetadataAttribute(a) => a }.get)
+      val fields = meta.dataType.asInstanceOf[StructType]
+      def field(n: String) = GetStructField(meta, fields.fieldIndex(n), Some(n))
+      val scan = if (lr.output.contains(meta)) lr else lr.copy(output = lr.output :+ meta)
+      Project(lr.output, Filter(CommitLog.dvLive(idx.root, idx.snapshot.meta,
+        CanonicalPath(field("file_path")), field("row_index")), scan))
     }
   }
 }

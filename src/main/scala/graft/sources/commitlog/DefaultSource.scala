@@ -6,7 +6,8 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileIndex, PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Source => V1Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources._
@@ -30,19 +31,22 @@ import graft.sources.CommitLog
   * The architecture is the one Delta Lake published for exactly this
   * problem (a log-indexed parquet table under a stock Spark runtime):
   *
-  *  - **Reads** resolve a snapshot into a [[CommitLogFileIndex]] wrapped in
-  *    a `HadoopFsRelation` over the builtin `ParquetFileFormat` (or the
-  *    relation [[CommitLogRelation.route]] picks for DVs). Execution
-  *    is Spark's own `FileSourceScanExec`: vectorized columnar parquet
-  *    reads inside whole-stage codegen, with pushed filters — strictly
-  *    better than any hand-rolled row-producing scan (the previous V1
+  *  - **Reads** resolve a snapshot into a [[CommitLogFileIndex]] fixed at
+  *    that version, wrapped in a `HadoopFsRelation` over
+  *    [[CommitLogParquet]] (Spark's parquet format, column mapping applied
+  *    inside the reader); deletion vectors are a filter inside the same
+  *    scan ([[CommitLogRelation.DeletionVectorScan]]). Execution is
+  *    Spark's own `FileSourceScanExec`: vectorized columnar parquet reads
+  *    inside whole-stage codegen, with pushed filters — strictly better
+  *    than any hand-rolled row-producing scan (the previous V1
   *    `PrunedFilteredScan` here ended in `.rdd`, which boxed every value
   *    and severed codegen above the scan). Catalyst hands the index each
   *    query's data filters, so manifest-stats file skipping happens
-  *    per-scan, an unpinned index re-resolves `currentVersion` per scan,
-  *    and every query re-routes an unpinned relation
-  *    ([[CommitLogRelation.current]]) — a `CREATE TEMPORARY VIEW` tracks
-  *    the table, DVs included, instead of freezing at DDL time.
+  *    per-scan; every query re-routes an unpinned relation to the current
+  *    snapshot ([[CommitLogRelation.current]]) and then reads that one
+  *    version in all its scans — a `CREATE TEMPORARY VIEW` tracks the
+  *    table instead of freezing at DDL time, and a self-join never mixes
+  *    two versions.
   *  - **Writes** commit through the log, never around it: the relation
   *    mixes in [[InsertableRelation]] (SQL `INSERT INTO`/`INSERT
   *    OVERWRITE` plan `InsertIntoDataSourceCommand` against it) and the
@@ -195,47 +199,51 @@ class DefaultSource extends RelationProvider with SchemaRelationProvider
     new CommitLogStreamSource(sqlContext, rootOf(parameters))
 }
 
-/** Snapshot-resolving [[FileIndex]]: the bridge between the commit log's
+/** The [[FileIndex]] of one snapshot: the bridge between the commit log's
   * metadata and Spark's file-scan planner (Delta's `TahoeLogFileIndex`
-  * pattern). `listFiles` is invoked at planning time with the query's
-  * data filters; the index resolves the manifest (the CURRENT version per
-  * scan unless pinned for time travel), evaluates the filters against the
-  * per-file min/max stats, and returns only surviving files — so data
-  * skipping costs a metadata read, composes with the parquet row-group
-  * pruning that happens inside surviving files, and at 100 TB never lists
-  * a directory (file sizes come from the manifest, not the filesystem).
-  * The schema is fixed per plan ([[CommitLogRelation.route]]); extra
-  * columns in later files are simply not requested.
+  * pattern). It lists exactly the version it was routed at
+  * ([[CommitLogRelation.route]]), so every scan of one analyzed query reads
+  * one snapshot. `listFiles` is invoked at planning time with the query's
+  * data filters; the index evaluates them against the per-file min/max
+  * stats and returns only surviving files — so data skipping costs a
+  * metadata read, composes with the parquet row-group pruning that happens
+  * inside surviving files, and at 100 TB never lists a directory (file
+  * sizes come from the manifest, not the filesystem). The snapshot's
+  * deletion vectors apply as a filter over the same scan
+  * ([[CommitLogRelation.DeletionVectorScan]]) and its column mapping inside
+  * the parquet reader ([[CommitLogParquet]]).
   */
 class CommitLogFileIndex(
     spark: SparkSession,
     val root: String,
     val pinned: Option[Long],
-    val routedAt: Option[Long]) extends FileIndex {
+    val snapshot: CommitLog.SlimSnapshot) extends FileIndex {
+
+  def routedAt: Long = snapshot.meta.version
 
   override def rootPaths: Seq[HPath] = Seq(new HPath(Paths.get(root).toUri))
 
   override def partitionSchema: StructType = new StructType()
 
-  override def refresh(): Unit = () // resolution is per-listFiles already
+  override def refresh(): Unit = () // a routed snapshot never changes
 
-  override def sizeInBytes: Long =
-    CommitLog.scanListing(spark, root, pinned, Array.empty)._2.map {
-      case (p, bytes) =>
-        // bytes=0 means a record without sizes (hand-built/external
-        // commit): fall back to a stat rather than report ~0, which would
-        // make Spark auto-broadcast a table of unknown — possibly huge —
-        // size.
-        if (bytes > 0L) bytes
-        else try Files.size(Paths.get(CommitLog.dataPath(root, p)))
-        catch { case _: Exception => 0L }
-    }.sum
+  /** Every (file, bytes) of the snapshot, listed once per index. */
+  private lazy val all: Seq[(String, Long)] =
+    CommitLog.scanListing(spark, root, snapshot, Array.empty)
+
+  private def pathOf(rel: String): java.nio.file.Path =
+    Paths.get(CommitLog.absPath(root, rel))
+
+  override def sizeInBytes: Long = all.map { case (p, bytes) =>
+    // bytes=0 means a record without sizes (hand-built/external commit):
+    // fall back to a stat rather than report ~0, which would make Spark
+    // auto-broadcast a table of unknown — possibly huge — size.
+    if (bytes > 0L) bytes
+    else try Files.size(pathOf(p)) catch { case _: Exception => 0L }
+  }.sum
 
   override def inputFiles: Array[String] =
-    CommitLog.scanListing(spark, root, pinned, Array.empty)._2
-      .map { case (f, _) =>
-        Paths.get(CommitLog.dataPath(root, f)).toUri.toString
-      }.toArray
+    all.map { case (f, _) => pathOf(f).toUri.toString }.toArray
 
   override def listFiles(
       partitionFilters: Seq[Expression],
@@ -247,25 +255,75 @@ class CommitLogFileIndex(
     // parquet sidecar and only survivors reach this driver (r13 verdict
     // #1) — on ordinary tables the driver fold stays (faster there).
     val v1Filters = dataFilters.flatMap(GraftBridge.toSourceFilter)
-    val (meta, pairs) =
-      CommitLog.scanListing(spark, root, pinned, v1Filters.toArray)
-    // This relation was routed against a DV-free snapshot, and every new
-    // analysis re-routes it (CommitLogRelation.current). Only a plan
-    // analyzed BEFORE a deletion-vector commit reaches here with one:
-    // its file-level listing would serve dead rows — fail loudly instead.
-    if (meta.dvsOrEmpty.nonEmpty || meta.colMapOrEmpty.nonEmpty)
-      throw new IllegalStateException(
-        s"snapshot v${meta.version} at $root now carries deletion vectors " +
-          "or a column mapping; re-create the read (each new query " +
-          "resolves the right scan)")
+    val pairs =
+      if (v1Filters.isEmpty) all
+      else CommitLog.scanListing(spark, root, snapshot, v1Filters.toArray)
     val statuses = pairs.map { case (rel, bytes) =>
-      val p = Paths.get(CommitLog.dataPath(root, rel))
+      val p = pathOf(rel)
       val len =
         if (bytes > 0L) bytes
         else Files.size(p) // pre-bytes manifests only
       new FileStatus(len, false, 1, len.max(1L), 0L, new HPath(p.toUri))
     }
     Seq(PartitionDirectory(InternalRow.empty, statuses.toArray))
+  }
+}
+
+/** Parquet reader for a snapshot's files: Spark plans and reads logical
+  * column names, the files store the physical ones a column mapping
+  * assigned (renames never rewrite data). Parquet rows are positional, so
+  * mapping the data schema, the required schema and the pushed filters to
+  * physical names is the whole rename — the relation above the scan stays
+  * the bare relation every plan rule recognises. A snapshot with deletion
+  * vectors must be read through [[CommitLogRelation.DeletionVectorScan]],
+  * which asks for the row index; a scan without it fails loudly rather
+  * than serve deleted rows.
+  */
+class CommitLogParquet(physOf: Map[String, String], hasDvs: Boolean)
+    extends ParquetFileFormat {
+
+  private def phys(s: StructType): StructType =
+    StructType(s.fields.map(f => f.copy(name = physOf.getOrElse(f.name, f.name))))
+
+  /** `f` on physical names; None where it cannot be renamed (a nested or
+    * dotted name, an unlisted shape) — not pushing a filter only skips
+    * row-group pruning, Spark re-applies every filter above the scan. */
+  private def phys(f: Filter): Option[Filter] = {
+    def n[T](a: String)(g: String => T): Option[T] =
+      if (a.contains('.') || a.contains('`')) None else Some(g(physOf.getOrElse(a, a)))
+    f match {
+      case EqualTo(a, v) => n(a)(EqualTo(_, v))
+      case EqualNullSafe(a, v) => n(a)(EqualNullSafe(_, v))
+      case GreaterThan(a, v) => n(a)(GreaterThan(_, v))
+      case GreaterThanOrEqual(a, v) => n(a)(GreaterThanOrEqual(_, v))
+      case LessThan(a, v) => n(a)(LessThan(_, v))
+      case LessThanOrEqual(a, v) => n(a)(LessThanOrEqual(_, v))
+      case In(a, vs) => n(a)(In(_, vs))
+      case IsNull(a) => n(a)(IsNull(_))
+      case IsNotNull(a) => n(a)(IsNotNull(_))
+      case And(l, r) => (phys(l) ++ phys(r)).reduceOption(And)
+      case Or(l, r) => for (pl <- phys(l); pr <- phys(r)) yield Or(pl, pr)
+      case _ => None
+    }
+  }
+
+  override def buildReaderWithPartitionValues(
+      sparkSession: SparkSession,
+      dataSchema: StructType,
+      partitionSchema: StructType,
+      requiredSchema: StructType,
+      filters: Seq[Filter],
+      options: Map[String, String],
+      hadoopConf: org.apache.hadoop.conf.Configuration)
+      : PartitionedFile => Iterator[InternalRow] = {
+    if (hasDvs && !requiredSchema.fieldNames.contains(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME))
+      throw new IllegalStateException("a snapshot with deletion vectors is " +
+        "read without its deletion-vector filter; build the session with " +
+        "spark.sql.extensions=graft.plans.GraftExtensions")
+    if (physOf.isEmpty) super.buildReaderWithPartitionValues(sparkSession,
+      dataSchema, partitionSchema, requiredSchema, filters, options, hadoopConf)
+    else super.buildReaderWithPartitionValues(sparkSession, phys(dataSchema),
+      partitionSchema, phys(requiredSchema), filters.flatMap(phys), options, hadoopConf)
   }
 }
 
@@ -303,40 +361,6 @@ class EmptyCommitLogRelation(
     }
 }
 
-/** V1 relation for snapshots that carry deletion vectors: delegates to the
-  * DV-aware [[CommitLog.readPruned]] (manifest-stats file skipping plus
-  * the dead-position anti-join) and surfaces the inner plan's InternalRows
-  * directly (`needConversion = false`) — the parquet scan under the
-  * anti-join is still Spark's vectorized, codegen'd one; only the relation
-  * boundary is an RDD hand-off. Translatable pushed filters prune files
-  * via the manifest; Spark re-applies every filter above the scan (the V1
-  * contract), so partial translation is always safe.
-  */
-class MergeOnReadRelation(
-    spark: SparkSession,
-    val root: String,
-    val pinned: Option[Long],
-    val routedAt: Option[Long],
-    override val schema: StructType) extends BaseRelation
-    with PrunedFilteredScan with CommitLogInsert {
-
-  override def sqlContext: SQLContext = spark.sqlContext
-
-  override def needConversion: Boolean = false
-
-  override def buildScan(
-      requiredColumns: Array[String],
-      filters: Array[Filter]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val df = CommitLog.readPruned(spark, root, GraftTable.pushed(filters), pinned)
-    val projected = df.select(requiredColumns.toIndexedSeq
-      .map(org.apache.spark.sql.functions.col): _*)
-    // needConversion=false: Spark accepts InternalRows from a V1 scan —
-    // the documented fast path file sources themselves use.
-    projected.queryExecution.toRdd
-      .asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-  }
-}
-
 /** INSERT through a CommitLog read relation: one append commit (an
   * overwrite commit for `INSERT OVERWRITE`); a version-pinned (time
   * travel) relation refuses it.
@@ -356,8 +380,9 @@ private[commitlog] trait CommitLogInsert extends InsertableRelation {
 /** CDC-slice relation ([[CommitLog.changes]] as a V1 table): the rows the
   * append-only commits in (fromV, toV] added, with pushed filters applied
   * as the residual condition and `needConversion=false` preserving
-  * codegen below the boundary — the same fast-path contract as
-  * [[MergeOnReadRelation]]. The append-only range check happens inside
+  * codegen below the boundary (Spark accepts InternalRows from a V1 scan,
+  * the fast path file sources themselves use). The append-only range
+  * check happens inside
   * `changes` (a rewrite in the range fails loudly, never double-counts).
   */
 class ChangesRelation(

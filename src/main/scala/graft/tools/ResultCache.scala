@@ -20,11 +20,13 @@ import graft.sources.commitlog.CommitLogRelation
   * valid for the exact snapshot it served (time-travel reads hit the
   * same entries forever).
   *
-  * Correctness under concurrency: unpinned commitlog relations resolve
-  * their manifest per scan, so a table advancing BETWEEN key capture and
-  * materialization could store a result newer than its key. The store is
-  * therefore guarded by a second version read — publish only when every
-  * unpinned version is unchanged; otherwise serve the computed result
+  * Correctness under concurrency: an unpinned commitlog relation reads
+  * the snapshot it was routed at when its plan was analyzed, and
+  * `df.write` analyzes the plan again — so a table advancing BETWEEN key
+  * capture and materialization could store a result newer than its key.
+  * The store is therefore guarded by a second version read — publish
+  * only when every unpinned version is unchanged; otherwise serve the
+  * computed result
   * uncached. Entry publication is an atomic directory rename (racers:
   * one wins, both serve correct bytes — same-key entries are
   * semantically identical).

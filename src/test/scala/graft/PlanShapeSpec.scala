@@ -204,4 +204,86 @@ class PlanShapeSpec extends SparkTestBase {
     // column pruning: q50 touches only (doc_id, lang) of the 5-column table
     assert(plan("q50_stratified_sample").contains("struct<doc_id:bigint,lang:string>"))
   }
+
+  /** The physical plan of `df` (planning counted by a job listener; the
+    * logical plan is optimized first) and the Spark jobs planning started.
+    * A sentinel job marks the end: the listener bus delivers in order, so
+    * every job planning started is seen before it.
+    */
+  private def plannedWithJobs(df: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.execution.SparkPlan, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val qe = df.queryExecution
+    qe.optimizedPlan
+    val sentinel = s"plan-shape-sentinel-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
+          done.countDown()
+        else if (done.getCount > 0) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      val plan = qe.sparkPlan
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (plan, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** A CommitLog snapshot read plans as one parquet scan over the table's
+    * own files — deletion vectors a filter inside it, column names mapped
+    * inside the reader — with `column`'s filter pushed into the scan, no
+    * join, no broadcast, no row-based relation and no job while planning.
+    */
+  private def assertSnapshotScan(df: org.apache.spark.sql.DataFrame, root: String,
+      column: String, dvs: Boolean): Unit = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val (p, jobs) = plannedWithJobs(df)
+    val scans = p.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, s"expected one file scan:\n$p")
+    val files = scans.head.relation.location.inputFiles
+    assert(files.nonEmpty && files.forall(_.contains(root)),
+      s"scan reads other files: ${files.mkString(", ")}")
+    assert(p.collect { case j: BaseJoinExec => j }.isEmpty, s"join in a snapshot read:\n$p")
+    assert(p.collect { case b: BroadcastExchangeExec => b }.isEmpty, s"broadcast:\n$p")
+    assert(p.collect { case r: RowDataSourceScanExec => r }.isEmpty, s"row scan:\n$p")
+    assert(scans.head.metadata("PushedFilters").contains(column),
+      s"no pushed filter on $column:\n${scans.head.metadata}")
+    assert(p.toString.contains("dv_live") == dvs, s"DV filter present != $dvs:\n$p")
+    assert(jobs == 0, s"physical planning started $jobs Spark job(s)")
+  }
+
+  test("CommitLog snapshot reads plan as one scan: DVs, time travel, renamed columns") {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.CommitLog
+    def tmp() = java.nio.file.Files.createTempDirectory("graft-shape").toString
+    val root = tmp()
+    CommitLog.append(spark.range(100).selectExpr("id", "id * 2 AS v").coalesce(1), root)
+    CommitLog.append(spark.range(100, 200).selectExpr("id", "id * 2 AS v").coalesce(1), root)
+    CommitLog.deleteDV(spark, root, col("id") % 5 === 0)
+    val byPath = spark.read.format("graft-commitlog").load(root).filter(col("v") > 10)
+    assertSnapshotScan(byPath, root, "v", dvs = true)
+    assert(byPath.count() == (0L until 200L).count(i => i % 5 != 0 && i * 2 > 10))
+    val name = s"shape_dv_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
+    spark.sql(s"CREATE TABLE $name USING `graft-commitlog` OPTIONS (path '$root')")
+    try {
+      assertSnapshotScan(spark.sql(s"SELECT id FROM $name WHERE v > 10"), root, "v", dvs = true)
+      val tt = spark.sql(s"SELECT id FROM $name VERSION AS OF 3 WHERE v > 10")
+      assertSnapshotScan(tt, root, "v", dvs = true)
+      assert(tt.count() == (0L until 200L).count(i => i % 5 != 0 && i * 2 > 10))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $name")
+    val renamed = tmp()
+    CommitLog.append(spark.range(100).selectExpr("id", "id AS v").coalesce(1), renamed)
+    CommitLog.renameColumn(renamed, "v", "value")
+    val mapped = spark.read.format("graft-commitlog").load(renamed).filter(col("value") >= 90)
+    assertSnapshotScan(mapped, renamed, "value", dvs = false)
+    assert(mapped.collect().map(_.getLong(1)).sorted.toSeq == (90L until 100L))
+  }
 }

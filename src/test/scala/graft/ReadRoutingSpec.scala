@@ -9,10 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Read-routing guard: which relation serves a CommitLog read is decided
   * in `sources/commitlog/` alone (`CommitLogRelation`: one extractor, one
-  * route function, the per-query re-route). A mention of one of the three
-  * relation classes, or a `new DefaultSource()` round-trip, anywhere else
-  * under `src/main` is a second, hand-written copy of that decision and
-  * fails this spec.
+  * route function, the per-query re-route). A mention of a read relation
+  * class (the file index or the empty relation; the pattern also keeps
+  * the deleted merge-on-read relation out), or a `new DefaultSource()`
+  * round-trip, anywhere else under `src/main` is a second, hand-written
+  * copy of that decision and fails this spec.
   */
 class ReadRoutingSpec extends AnyFunSuite {
 
