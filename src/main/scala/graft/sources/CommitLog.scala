@@ -1775,7 +1775,10 @@ object CommitLog {
         .filter(s => s.spec == spec && s.colMap == cm && s.props == props)
         .fold(stageWithStats(df, root, spec, colMap = cm, props = props))(_.add)
       enforceConstraints(df.sparkSession, root, prior, add, schema)
-      enforceRelational(df.sparkSession, root, prior, add, schema)
+      prior.filter(_ => add.nonEmpty).foreach(m =>
+        enforceRelational(df.sparkSession, root, m.propsOrEmpty,
+          stagedLogical(df.sparkSession, root, prior, add, schema),
+          readFiles(df.sparkSession, root, m, m.files)))
       PreparedAppend(root, df0, prior.map(_.version), schema, spec, cm,
         props, add)
     }
@@ -2142,18 +2145,21 @@ object CommitLog {
     }
   }
 
-  /** Append-path re-check of declared pk/fk constraints over the STAGED
-    * rows only (new-row enforcement — merge keyed on the pk preserves
-    * uniqueness structurally via its own duplicate-source check). Cost is
-    * one key-column pass over the staged batch plus one key-only probe of
-    * the existing table / referenced dimension per constraint.
+  /** Re-check of declared pk/fk constraints over the rows a write INSERTS
+    * (`batch`): no duplicate or null key within it, none of its keys among
+    * `live` (the keys the commit leaves live beside the batch), and a
+    * parent row for every foreign key. UPDATE and MERGE images are not
+    * re-checked (a merge keyed on the pk keeps it unique through its own
+    * duplicate-source check); they drop RELY trust through `modifyV`
+    * instead. Cost is one key-column pass over the batch plus one key-only
+    * probe of `live` / the referenced dimension per constraint.
     */
   private def enforceRelational(spark: SparkSession, root: String,
-      prior: Option[Manifest], add: Seq[FileStat], schema: StructType): Unit = {
-    val props = prior.map(_.propsOrEmpty).getOrElse(Map.empty)
+      props: Map[String, String], batch: => DataFrame,
+      live: => DataFrame): Unit = {
     val fks = declaredFks(props)
-    if (add.isEmpty || (props.get(PkProp).isEmpty && fks.isEmpty)) return
-    val staged = stagedLogical(spark, root, prior, add, schema)
+    if (props.get(PkProp).isEmpty && fks.isEmpty) return
+    val staged = batch
     props.get(PkProp).foreach { pk =>
       val c = pk.trim
       val dup = staged.groupBy(col(c)).agg(count(lit(1)).as("n"))
@@ -2161,11 +2167,8 @@ object CommitLog {
       require(dup.isEmpty,
         s"append violates $PkProp = $c on $root: batch has duplicate " +
           "or null key values — commit aborted")
-      // prior is always present here: the props map came from it
-      val existing = readFiles(spark, root, prior.get, prior.get.files)
-        .select(col(c))
       val clash = staged.select(col(c))
-        .join(existing, Seq(c), "left_semi").limit(1).collect()
+        .join(live.select(col(c)), Seq(c), "left_semi").limit(1).collect()
       require(clash.isEmpty,
         s"append violates $PkProp = $c on $root: batch re-inserts key " +
           s"${clash.headOption.map(_.get(0))} — commit aborted")
@@ -2699,12 +2702,12 @@ object CommitLog {
     * pointed by the stager — pg's contract; a moving source at COMMIT
     * would be a different merge), carrying the table-schema columns
     * plus `deleteFlag` (the WHEN MATCHED DELETE condition, pre-computed
-    * against the full source row). The clause structure mirrors
-    * [[mergeRows]]: `replaceMatched` = a WHEN MATCHED UPDATE SET *
-    * clause exists, `insertUnmatched` = WHEN NOT MATCHED INSERT *,
-    * `bySource` = the one WHEN NOT MATCHED BY SOURCE clause (target-row
-    * expressions only — evaluated at fold time, so the stager must
-    * guard them deterministic).
+    * against the full source row). The clause fields are [[mergeRows]]'
+    * parameters, and [[applyTxnOps]] folds both: `replaceMatched` = a
+    * WHEN MATCHED UPDATE SET * clause exists, `insertUnmatched` = WHEN
+    * NOT MATCHED INSERT *, `bySource` = the one WHEN NOT MATCHED BY SOURCE
+    * clause (target-row expressions only — evaluated at fold time, so the
+    * stager must guard them deterministic).
     */
   final case class TxnMerge(source: DataFrame, keys: Seq[String],
       deleteFlag: Option[String], insertUnmatched: Boolean,
@@ -2718,47 +2721,58 @@ object CommitLog {
   final class TxnSerializationException(msg: String)
     extends RuntimeException(msg)
 
-  /** Fold a block's ordered ops over a base frame — THE definition of the
-    * transaction's view of a table, shared by the pg-wire shadow views
-    * (read-your-writes at every point in the block) and [[multiDml]]'s
-    * commit materialization. `extra` columns (the file/position tags the
-    * commit path rides) pass through untouched except that an UPDATE
-    * nulls them on the rows it rewrites: an updated base row's old
-    * position dies and its new image appends, exactly like [[updateDV]].
+  /** A column by its exact name (backquoted, so dots and spaces stay
+    * part of the name). */
+  private def quoted(n: String): Column = col(s"`${n.replace("`", "``")}`")
+
+  /** THE definition of row-level DML: a statement list's ordered ops
+    * folded over a base frame. Every UPDATE, DELETE and MERGE writer —
+    * autocommit or a transaction block — folds here through [[stageDml]],
+    * and the pg-wire shadow views (read-your-writes at every point in a
+    * block) fold the same ops over the pinned snapshot.
+    *  - INSERT unions its rows in;
+    *  - DELETE drops the rows its condition holds on (NULL is false);
+    *  - UPDATE applies its assignments, cast to the declared types, to the
+    *    rows its condition holds on;
+    *  - MERGE: a row whose key a source row holds is replaced by that row
+    *    (`replaceMatched`; dropped instead when the source row's
+    *    `deleteFlag` is set) or kept unchanged (no WHEN MATCHED clause); a
+    *    source row matching no key inserts (`insertUnmatched`; a set flag
+    *    does not stop it); a row no source key matches passes through
+    *    `bySource`, which drops it or applies its assignments where its
+    *    condition holds.
+    * Columns outside `schema` ride along; those in `extra` (a deletion-
+    * vector write's position tags) are null on every row an op rewrites or
+    * brings in, so the old position dies and the new image stages.
     */
   def applyTxnOps(base: DataFrame, schema: StructType, ops: Seq[TxnOp],
-      extra: Seq[String] = Nil): DataFrame =
+      extra: Seq[String] = Nil): DataFrame = {
+    def rewrite(df: DataFrame, hit: Column,
+        assign: Map[String, Column]): DataFrame =
+      df.select(schema.fields.toIndexedSeq.map { f =>
+        assign.get(f.name) match {
+          case Some(v) =>
+            when(hit, v.cast(f.dataType)).otherwise(quoted(f.name)).as(f.name)
+          case None => quoted(f.name)
+        }
+      } ++ df.columns.toIndexedSeq.filterNot(schema.fieldNames.contains).map(e =>
+        if (!extra.contains(e)) quoted(e)
+        else when(hit, lit(null).cast(df.schema(e).dataType))
+          .otherwise(quoted(e)).as(e)): _*)
     ops.foldLeft(base) {
       case (df, TxnIns(b)) => df.unionByName(b, allowMissingColumns = true)
       case (df, TxnDel(c)) => df.filter(!coalesce(c, lit(false)))
-      case (df, TxnUpd(set, c)) =>
-        val hit = coalesce(c, lit(false))
-        val assign = set.toMap
-        val cols = schema.fields.toIndexedSeq.map { f =>
-          assign.get(f.name) match {
-            case Some(v) =>
-              when(hit, v.cast(f.dataType))
-                .otherwise(col(s"`${f.name.replace("`", "``")}`"))
-                .as(f.name)
-            case None => col(s"`${f.name.replace("`", "``")}`")
-          }
-        } ++ extra.map(e =>
-          when(hit, lit(null)).otherwise(col(e)).as(e))
-        df.select(cols: _*)
+      case (df, TxnUpd(set, c)) => rewrite(df, coalesce(c, lit(false)), set.toMap)
       case (df, tm: TxnMerge) =>
-        // MERGE as a pure frame fold — [[mergeRows]]' clause semantics
-        // re-expressed over the block's current state. "Matched" is
-        // decided against THIS df: in shadow mode it is the whole folded
-        // table; in multiDml's tagged mode it is the touched-file rows,
-        // which is sound because the touch probe semi-joins the source
-        // keys (a source key present anywhere makes its file touched).
-        val q = (n: String) => col(s"`${n.replace("`", "``")}`")
-        val srcKeys = tm.source
-          .select(tm.keys.map(q).toIndexedSeq: _*).distinct()
-        val stateKeys = df.select(tm.keys.map(q).toIndexedSeq: _*).distinct()
-        // surviving SOURCE rows: matched replacements (minus delete-flag
-        // hits) and/or unmatched inserts, per the clause set
-        val keep1 =
+        // "Matched" is decided against THIS df: the whole folded table in
+        // shadow mode, the touched files' rows in [[stageDml]] — sound
+        // because its touch probe semi-joins the source keys (a source key
+        // present anywhere makes its file touched). Semi and anti joins
+        // never repeat a row, so neither key set needs de-duplicating.
+        val keyCols = tm.keys.map(quoted).toIndexedSeq
+        val srcKeys = tm.source.select(keyCols: _*)
+        val stateKeys = df.select(keyCols: _*)
+        val keep =
           if (!tm.replaceMatched) {
             if (tm.insertUnmatched)
               tm.source.join(stateKeys, tm.keys, "left_anti")
@@ -2768,42 +2782,181 @@ object CommitLog {
               case None => tm.source
               case Some(fl) =>
                 tm.source.join(stateKeys, tm.keys, "left_semi")
-                  .filter(!coalesce(q(fl), lit(false)))
+                  .filter(!coalesce(quoted(fl), lit(false)))
                   .unionByName(tm.source.join(stateKeys, tm.keys, "left_anti"))
             }
             if (tm.insertUnmatched) k0
             else k0.join(stateKeys, tm.keys, "left_semi")
           }
-        val keepCast = keep1.select(schema.fields.toIndexedSeq.map(f =>
-          q(f.name).cast(f.dataType).as(f.name)): _*)
-        // source-born rows carry no base position — their extra tags are
-        // null, exactly like a staged insert (old matched positions die)
-        val keepTagged = extra.foldLeft(keepCast)((d, e) =>
-          d.withColumn(e, lit(null).cast(df.schema(e).dataType)))
-        val unmatchedT = df.join(srcKeys, tm.keys, "left_anti")
+        val unmatched = df.join(srcKeys, tm.keys, "left_anti")
         val unmatchedKept = tm.bySource match {
-          case None => unmatchedT
+          case None => unmatched
           case Some(bs) =>
             val c = coalesce(bs.cond.getOrElse(lit(true)), lit(false))
-            if (bs.delete) unmatchedT.filter(!c)
-            else {
-              val setMap = bs.set.toMap
-              unmatchedT.select((schema.fields.toIndexedSeq.map { f =>
-                setMap.get(f.name) match {
-                  case Some(v) =>
-                    when(c, v.cast(f.dataType)).otherwise(q(f.name)).as(f.name)
-                  case None => q(f.name)
-                }
-              } ++ extra.map(e =>
-                when(c, lit(null).cast(df.schema(e).dataType))
-                  .otherwise(col(e)).as(e))): _*)
-            }
+            if (bs.delete) unmatched.filter(!c)
+            else rewrite(unmatched, c, bs.set.toMap)
         }
         val matchedKept =
           if (tm.replaceMatched) df.limit(0)
           else df.join(srcKeys, tm.keys, "left_semi")
-        unmatchedKept.unionByName(matchedKept).unionByName(keepTagged)
+        // source-born rows carry no base position: their tags are null
+        unmatchedKept.unionByName(matchedKept).unionByName(
+          keep.select(schema.fields.toIndexedSeq.map(f =>
+            quoted(f.name).cast(f.dataType).as(f.name)): _*),
+          allowMissingColumns = true)
     }
+  }
+
+  /** Marks the rows an INSERT op brought into a fold — the rows pk/fk
+    * checks cover — riding through [[applyTxnOps]] beside the data.
+    */
+  private val TagIns = "_graft_ins"
+
+  /** THE row-level DML engine: the commit `ops` make against snapshot `m`
+    * as op `op`, or None when they change nothing. Every UPDATE, DELETE and
+    * MERGE writer stages here, in three steps:
+    *  1. touch probe: one scan of the live rows marks the files an op
+    *     reaches — a DELETE/UPDATE by its condition on each row's ORIGINAL
+    *     image (a row only matches a later op after an earlier op reached
+    *     it, and that op's mark already claims its file), a MERGE by the
+    *     source-key semi-join plus the unmatched rows its by-source clause
+    *     reaches — with a per-file hit count from the same job;
+    *  2. fold: [[applyTxnOps]] over the live rows of the touched files;
+    *  3. write, copy-on-write (`dv = false`): stage every folded row and
+    *     remove the touched files; or deletion vectors (`dv = true`): stage
+    *     the rows the fold brought in (inserts, rewritten images), drop the
+    *     files none of whose rows survive, and write a DV holding each
+    *     other touched file's base positions that no survivor holds.
+    * Untouched files carry by reference. CHECK constraints run over the
+    * staged rows unless every op is a DELETE; pk/fk checks cover only the
+    * rows the ops INSERT, against the keys the commit leaves live (the
+    * untouched files plus the fold's other rows).
+    */
+  private def stageDml(spark: SparkSession, root: String, m: Manifest,
+      ops: Seq[TxnOp], op: String, dv: Boolean): Option[Commit] = {
+    val schema = schemaOf(m)
+    val props = m.propsOrEmpty
+    val merges = ops.collect { case tm: TxnMerge => tm }
+    val hit = balancedOr(ops.collect {
+      case TxnDel(c) => coalesce(c, lit(false))
+      case TxnUpd(_, c) => coalesce(c, lit(false))
+    }).getOrElse(lit(false))
+    // 1. touch probe
+    val scan = readTaggedLive(spark, root, m, m.files)
+    val marks = scan.filter(hit) +: merges.flatMap { tm =>
+      val srcKeys = tm.source.select(tm.keys.map(quoted).toIndexedSeq: _*)
+      scan.join(srcKeys, tm.keys, "left_semi") +: tm.bySource.toSeq.map(bs =>
+        scan.filter(coalesce(bs.cond.getOrElse(lit(true)), lit(false)))
+          .join(srcKeys, tm.keys, "left_anti"))
+    }
+    val hitsAbs = marks.map(_.select(TagFile)).reduceLeft(_ unionByName _)
+      .groupBy(TagFile).agg(count(lit(1))).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // exact-path equality (TagFile is the canonical absolute path, byte-
+    // equal to absPath) — endsWith could mis-map a relative path that is
+    // a suffix of a different file's absolute path
+    val hits = m.files.flatMap(f => hitsAbs.get(absPath(root, f)).map(f -> _)).toMap
+    val touched = m.files.filter(hits.contains)
+    if (touched.isEmpty && !ops.exists {
+        case _: TxnIns => true
+        case tm: TxnMerge => tm.insertUnmatched
+        case _ => false
+      }) return None
+    // 2. fold
+    val relational = props.contains(PkProp) || declaredFks(props).nonEmpty
+    val state = applyTxnOps(
+      if (dv) readTaggedLive(spark, root, m, touched)
+      else readFiles(spark, root, m, touched),
+      schema,
+      if (!relational) ops else ops.map {
+        case TxnIns(df) => TxnIns(df.withColumn(TagIns, lit(true)))
+        case o => o
+      },
+      extra = if (dv) Seq(TagFile, TagPos) else Nil)
+    def rows(df: DataFrame): DataFrame = df.select(schema.fields.toIndexedSeq
+      .map(f => quoted(f.name).cast(f.dataType).as(f.name)): _*)
+    // an empty staged file adds nothing: left out of the commit, an
+    // orphan for vacuum like any unpublished staging
+    def stageRows(df: DataFrame): Seq[FileStat] =
+      stageWithStats(rows(df), root, m.partitionByOrNil,
+        colMap = m.colMapOrEmpty, props = props).filter(_.rows > 0)
+    // a MERGE decides its matches inside the fold, so a DV write counts
+    // survivors over the folded state, cached for its three readers
+    val cached = dv && merges.nonEmpty
+    if (cached) state.persist()
+    try {
+      // 3. write
+      val (add, remove, dvs) =
+        if (!dv) (stageRows(state), touched, Map.empty[String, String])
+        else {
+          val rowsOf = m.statsOrNil.map(s => s.path -> s.rows).toMap
+          // survivors per touched file, the base positions no survivor
+          // holds, and whether the fold brought any row in
+          val (survivorsOf, dead, anyNew) =
+            if (!cached) {
+              // without a MERGE the fold reaches exactly the base rows
+              // `hit` holds on: survivors are the live rows it misses,
+              // counted from the probe and the prior DVs' footers
+              val conf = spark.sessionState.newHadoopConf()
+              (touched.map(f => f -> (rowsOf(f) - hits(f) -
+                m.dvsOrEmpty.get(f).fold(0L)(dvCardinality(conf, root, _)))).toMap,
+                (files: Seq[String]) => readTagged(spark, root, m, files)
+                  .filter(if (m.dvsOrEmpty.isEmpty) hit else hit || !live(root, m)),
+                ops.exists(!_.isInstanceOf[TxnDel]))
+            } else {
+              val grouped = state.groupBy(col(TagFile))
+                .agg(count(lit(1))).collect()
+              val byAbs = grouped.filterNot(_.isNullAt(0))
+                .map(r => r.getString(0) -> r.getLong(1)).toMap
+              val survivors = state.where(col(TagFile).isNotNull)
+                .select(col(TagFile), col(TagPos))
+              (touched.flatMap(f => byAbs.get(absPath(root, f)).map(f -> _)).toMap,
+                // (file, pos) is unique on both sides: a left-anti join
+                (files: Seq[String]) => readTagged(spark, root, m, files)
+                  .select(col(TagFile), col(TagPos))
+                  .join(survivors, Seq(TagFile, TagPos), "left_anti"),
+                grouped.exists(_.isNullAt(0)))
+            }
+          val (fullGone, partial0) =
+            touched.partition(f => survivorsOf.getOrElse(f, 0L) == 0L)
+          // a touched file whose fold killed nothing keeps its DV
+          val partial = partial0.filter(f => rowsOf(f) > survivorsOf(f))
+          val absToRel = touched.map(f => (absPath(root, f), f))
+          // the DV and new-row stagings are independent writes: run them
+          // concurrently so the second's tasks back-fill the first's tail
+          val dvFut = scala.concurrent.Future {
+            if (partial.isEmpty) Map.empty[String, String]
+            else stageDV(dead(partial)
+              .join(broadcast(spark.createDataFrame(absToRel)
+                .toDF(TagFile, "__dv_rel")), TagFile)
+              .select(col("__dv_rel"), col(TagPos).as("__dv_pos")),
+              root, partial)
+          }(scala.concurrent.ExecutionContext.global)
+          val add =
+            if (anyNew) stageRows(state.where(col(TagFile).isNull)) else Nil
+          (add, fullGone, scala.concurrent.Await.result(dvFut,
+            scala.concurrent.duration.Duration.Inf))
+        }
+      if (add.nonEmpty && !ops.forall(_.isInstanceOf[TxnDel]))
+        enforceConstraints(spark, root, Some(m), add, schema)
+      if (relational && ops.exists(_.isInstanceOf[TxnIns]))
+        enforceRelational(spark, root, props,
+          rows(state.where(col(TagIns).isNotNull)),
+          rows(state.where(col(TagIns).isNull)).unionByName(
+            readFiles(spark, root, m, m.files.filterNot(hits.contains))))
+      if (add.isEmpty && remove.isEmpty && dvs.isEmpty) None
+      else Some(nextCommit(Some(m), op).copy(add = add, remove = remove,
+        dvs = dvs))
+    } finally if (cached) state.unpersist()
+  }
+
+  /** Dead positions deletion vector `dv` holds: its parquet row count. */
+  private def dvCardinality(conf: org.apache.hadoop.conf.Configuration,
+      root: String, dv: String): Long =
+    Using.resource(org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(dataPath(root, dv)), conf)))(
+      _.getRecordCount)
 
   /** A fully-staged single-table DML payload, awaiting its phase-1
     * publish: everything here was data work; the publish is one KB-scale
@@ -2813,18 +2966,15 @@ object CommitLog {
       commit: Option[Commit])
 
   /** Atomic multi-table commit of a transaction block that may carry
-    * row-level DELETE/UPDATE alongside INSERTs — the pg-wire BEGIN…COMMIT
-    * surface ([[graft.tools.PgTxn]]). Same Percolator-style protocol as
-    * [[multiAppend]] (phase 0 all data work, phase 1 KB-scale prepares,
-    * phase 2 ONE create-if-absent marker write), with per-table payloads
-    * generalized from append-only to add+remove+DV.
+    * row-level DELETE/UPDATE/MERGE alongside INSERTs — the pg-wire
+    * BEGIN…COMMIT surface ([[graft.tools.PgTxn]]). Same Percolator-style
+    * protocol as [[multiAppend]] (phase 0 all data work, phase 1 KB-scale
+    * prepares, phase 2 ONE create-if-absent marker write), with per-table
+    * payloads generalized from append-only to add+remove+DV.
     *
-    * Per table the ordered ops fold over the POSITION-TAGGED live rows of
-    * the files the predicates touch ([[applyTxnOps]]): base positions
-    * absent from the folded state die (deletion vectors / whole-file
-    * drops — merge-on-read, O(matched rows) write cost like [[deleteDV]]);
-    * rows with no surviving tag (staged inserts + updated images) stage
-    * as new files. Untouched files carry by reference.
+    * Per table the ordered ops are staged by [[stageDml]] as deletion
+    * vectors (O(matched rows) write cost, like [[deleteDV]]), op
+    * "txn-dml"; a table whose ops change nothing publishes nothing.
     *
     * Isolation: a table whose ops include DELETE/UPDATE must still be at
     * `pinned` (the version the block's snapshot cut pinned) at COMMIT —
@@ -2860,109 +3010,8 @@ object CommitLog {
               throw new TxnSerializationException(
                 s"$root moved past pinned version $base before COMMIT; " +
                   "retry the transaction (serialization failure)")
-            val m = readManifest(root, base)
-            val schema = schemaOf(m)
-            // touch probe on ORIGINAL images — sound because the first op
-            // touching a row sees its original (a row only matches a later
-            // op after rewrite if an earlier op touched it, and that op's
-            // own mark already claims the file). Merges mark files via the
-            // source-key semi-join plus the by-source clause condition.
-            val touched = touchedFiles(spark, root, m) { df0 =>
-              val marks = ops.flatMap {
-                case TxnDel(c) => Seq(df0.filter(coalesce(c, lit(false))))
-                case TxnUpd(_, c) => Seq(df0.filter(coalesce(c, lit(false))))
-                case tm: TxnMerge =>
-                  val q = (n: String) => col(s"`${n.replace("`", "``")}`")
-                  val srcKeys = tm.source
-                    .select(tm.keys.map(q).toIndexedSeq: _*).distinct()
-                  val matched = df0.join(srcKeys, tm.keys, "left_semi")
-                  tm.bySource match {
-                    case Some(bs) => Seq(matched, df0.filter(
-                      coalesce(bs.cond.getOrElse(lit(true)), lit(false))))
-                    case None => Seq(matched)
-                  }
-                case _: TxnIns => Nil
-              }
-              marks.reduceLeft(_ unionByName _)
-            }
-            val tagged = readTaggedLive(spark, root, m, touched)
-            val state = applyTxnOps(tagged, schema, ops,
-              extra = Seq(TagFile, TagPos)).persist()
-            try {
-              // r15 OPT (guide §1.2 fewer passes): ONE aggregation over the
-              // folded state yields (a) surviving base positions per
-              // touched file and (b) the new-row count (the TagFile-null
-              // group). The per-file DEAD count — what the old code
-              // measured with a separate job over the dead frame — is then
-              // pure arithmetic: dead(f) = rows(f) − survivors(f), because
-              // `tagged` is the LIVE read (rows − priorDV) and the old
-              // count unioned newly-dead (live − survivors) with the prior
-              // DV positions. Values identical, one collect job fewer.
-              val grouped = state.groupBy(col(TagFile))
-                .agg(count(lit(1)).as("n")).collect()
-              val newCount = grouped.find(_.isNullAt(0))
-                .map(_.getLong(1)).getOrElse(0L)
-              val relOfAbs = touched.map(f => (absPath(root, f), f)).toMap
-              val survivorsOf: Map[String, Long] = grouped
-                .filterNot(_.isNullAt(0))
-                .flatMap(r => relOfAbs.get(r.getString(0)).map(_ -> r.getLong(1)))
-                .toMap
-              val rowsOf = m.statsOrNil.map(s => s.path -> s.rows).toMap
-              val (fullGone, partial0) = touched.partition(f =>
-                survivorsOf.getOrElse(f, 0L) == 0L)
-              // a touched file whose net fold killed nothing keeps its
-              // (possibly absent) DV and is neither removed nor re-DV'd
-              val partial = partial0.filter(f =>
-                rowsOf.get(f).exists(_ > survivorsOf.getOrElse(f, 0L)))
-              // r15 OPT (guide §2.6 overlap independent jobs): the DV
-              // staging and the new-image staging are independent writes —
-              // run them concurrently so the second's tasks back-fill the
-              // first's tail. Both recipes read `state` through its cache.
-              val dvFut = scala.concurrent.Future {
-                if (partial.isEmpty) Map.empty[String, String]
-                else {
-                  val survivors = state.where(col(TagFile).isNotNull)
-                    .select(col(TagFile), col(TagPos))
-                  val absToRel = touched.map(f => (absPath(root, f), f))
-                  // every raw position no survivor holds is dead: the
-                  // prior DV's and the fold's alike. (file, pos) is unique
-                  // on both sides (one physical row each), so EXCEPT's
-                  // dedup-both-sides set machinery is pure overhead — a
-                  // left-anti join is the same answer
-                  val dead = readTagged(spark, root, m, touched)
-                    .select(col(TagFile), col(TagPos))
-                    .join(survivors, Seq(TagFile, TagPos), "left_anti")
-                    .join(broadcast(spark.createDataFrame(absToRel)
-                      .toDF(TagFile, "__dv_rel")), TagFile)
-                    .select(col("__dv_rel"), col(TagPos).as("__dv_pos"))
-                  stageDV(dead.filter(col("__dv_rel").isin(partial: _*)),
-                    root, partial)
-                }
-              }(scala.concurrent.ExecutionContext.global)
-              val newRows = state.where(col(TagFile).isNull)
-                .select(schema.fields.toIndexedSeq.map(f =>
-                  col(s"`${f.name.replace("`", "``")}`")
-                    .cast(f.dataType).as(f.name)): _*)
-              val add =
-                if (newCount == 0L) Nil
-                else stageWithStats(newRows, root, m.partitionByOrNil,
-                  colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
-              val dvEntries = scala.concurrent.Await.result(dvFut,
-                scala.concurrent.duration.Duration.Inf)
-              if (add.nonEmpty) {
-                enforceConstraints(spark, root, Some(m), add, schema)
-                enforceRelational(spark, root, Some(m), add, schema)
-              }
-              if (add.isEmpty && fullGone.isEmpty && dvEntries.isEmpty)
-                // the fold nets to nothing on this table (predicates
-                // matched no rows, no surviving inserts) — skip the
-                // prepare entirely; skipping cannot break atomicity
-                // because there is nothing to publish
-                Right(PreparedDml(root, base, None))
-              else Right(PreparedDml(root, base, Some(
-                nextCommit(Some(m), "txn-dml").copy(add = add,
-                  remove = fullGone, dvs = dvEntries))))
-            } finally state.unpersist()
+            Right(PreparedDml(root, base, stageDml(spark, root,
+              readManifest(root, base), ops, "txn-dml", dv = true)))
           }
         }
       // Phase 1 — prepares back-to-back (KB-scale commit writes each)
@@ -3556,23 +3605,6 @@ object CommitLog {
       m, extra = Seq(TagFile, TagPos))
   }
 
-  /** Deletion-vector rows for the given data files as (`__dv_rel` data
-    * file, `__dv_pos` dead position). One scan over every referenced DV
-    * parquet; which DATA file a row addresses is recovered by joining the
-    * scan's own file path against a driver-built broadcast lookup (the
-    * dv→data mapping is manifest metadata).
-    */
-  private def dvPositionsRel(spark: SparkSession, root: String,
-      dvMap: Map[String, String]): DataFrame = {
-    val lookup = dvMap.toSeq.map { case (data, dv) => (absPath(root, dv), data) }
-    spark.read.schema(StructType(Seq(StructField("pos", LongType))))
-      .parquet(dvMap.values.toSeq.sorted.map(dataPath(root, _)): _*)
-      .withColumn("__dv_src", canonicalFileCol)
-      .join(broadcast(spark.createDataFrame(lookup).toDF("__dv_src", "__dv_rel")),
-        "__dv_src")
-      .select(col("__dv_rel"), col("pos").as("__dv_pos"))
-  }
-
   /** Tagged read with deletion vectors applied: the raw rows the
     * snapshot's DVs leave live ([[dvLive]] over the scan's own tags).
     */
@@ -3597,23 +3629,7 @@ object CommitLog {
     graft.functions.DvLive(file, pos,
       m.dvsOrEmpty.map { case (data, dv) => absPath(root, data) -> absPath(root, dv) })
 
-  /** Root-relative paths of files containing ≥1 LIVE row matching `cond` —
-    * the copy-on-write touch set (rows a deletion vector already killed
-    * can't re-touch their file). One pass over the snapshot projecting only
-    * the columns `cond` needs; the collect is file-path metadata, not data.
-    */
-  private def touchedFiles(spark: SparkSession, root: String, m: Manifest)(
-      mark: DataFrame => DataFrame): Seq[String] = {
-    val withFile = readTaggedLive(spark, root, m, m.files)
-    val abs = mark(withFile).select(TagFile).distinct()
-      .collect().map(_.getString(0)).toSet
-    // exact-path equality (TagFile is the canonical absolute path, byte-
-    // equal to absPath) — endsWith could mis-map a relative path that is
-    // a suffix of a different file's absolute path
-    m.files.filter(f => abs.contains(absPath(root, f)))
-  }
-
-  /** Delta-style MERGE, file-granular copy-on-write:
+  /** Delta-style MERGE, copy-on-write through [[stageDml]]:
     *  - target rows whose key matches a `source` row are replaced by that
     *    source row (full-row UPDATE), or dropped when the source row
     *    satisfies `deleteWhen` (MERGE … WHEN MATCHED DELETE);
@@ -3654,8 +3670,9 @@ object CommitLog {
       insertUnmatched = true, replaceMatched = true,
       bySource = Some(BySourceClause(delete = true, Nil, scope)))
 
-  /** The general MERGE engine (SQL `MERGE INTO` semantics): full-row
-    * replace of matched target rows by their source row, with
+  /** The general MERGE writer (SQL `MERGE INTO` semantics, op "merge"):
+    * one [[TxnMerge]] staged copy-on-write by [[stageDml]], whose fold
+    * ([[applyTxnOps]]) is the clause semantics —
     *  - `deleteFlag`: boolean source column naming MATCHED rows to delete
     *    instead of replace (an UNMATCHED row with the flag set still
     *    inserts — `WHEN MATCHED … DELETE` never touches insert candidates);
@@ -3664,15 +3681,18 @@ object CommitLog {
     *  - `bySource` (SQL `WHEN NOT MATCHED BY SOURCE`): applied to TARGET
     *    rows whose key matches no source row — `delete = true` drops them,
     *    otherwise `set` assignments rewrite them in place; `cond` (over the
-    *    target row) restricts the clause. The file-touch probe is exact:
-    *    only files containing a matched key OR an unmatched row satisfying
+    *    target row) restricts the clause. The touch probe is exact: only
+    *    files containing a matched key OR an unmatched row satisfying
     *    `cond` are rewritten, so a partition-selective condition keeps the
     *    snapshot-sync cost proportional to the synced slice, not the table
     *    (the unconditional full-sync case rewrites every file holding any
     *    unmatched row — inherent to its semantics, same as Delta);
-    *  - `replaceMatched = false` (no `WHEN MATCHED` clause but a `bySource`
-    *    one): matched target rows are carried UNCHANGED through the rewrite
-    *    instead of being replaced by their source row.
+    *  - `replaceMatched = false` (no `WHEN MATCHED` clause): matched target
+    *    rows are carried UNCHANGED through the rewrite instead of being
+    *    replaced by their source row.
+    * Guards here: the source has the table's column names and types and
+    * unique keys; it is persisted so an expensive upstream pipeline runs
+    * once across the guard, the probe and the staging.
     */
   private[graft] case class BySourceClause(
       delete: Boolean,
@@ -3702,140 +3722,54 @@ object CommitLog {
       require(st == f.dataType,
         s"merge source retypes ${f.name}: ${f.dataType.simpleString} -> ${st.simpleString}")
     }
-    // The source is evaluated several times (dup-key check, touch probe,
-    // match split, staging) — persist it so an expensive upstream pipeline
-    // runs once.
     val src = source.select(
       (schema.fieldNames ++ deleteFlag).map(col).toIndexedSeq: _*).persist()
     try {
       require(src.groupBy(keys.map(col).toIndexedSeq: _*)
         .count().filter(col("count") > 1).isEmpty,
         "merge source has duplicate keys — ambiguous MATCHED action")
-
-      val srcKeys = src.select(keys.map(col).toIndexedSeq: _*)
-      // The by-source clause fires on rows with NO source match, so its
-      // touch probe is the anti-join under the clause condition; files with
-      // neither a matched key nor a clause-hit row move by reference.
-      val bsCond = bySource.map(b =>
-        coalesce(b.cond.getOrElse(lit(true)), lit(false)))
-      val touched = touchedFiles(spark, root, m) { df =>
-        val matchedRows = df.join(srcKeys, keys, "left_semi")
-        bsCond match {
-          case None => matchedRows
-          case Some(c) => matchedRows.unionByName(
-            df.filter(c).join(srcKeys, keys, "left_anti"))
-        }
-      }
-      val tTouched = readFiles(spark, root, m, touched)
-
-      // Full-row replace collapses the merged touch-set to one anti-join and
-      // a union: (touched target rows with no source key) ∪ (every surviving
-      // source row). A surviving source row that matched is the UPDATE; one
-      // that matched nothing anywhere is the INSERT (any matching key would
-      // have made its file touched). "Matched" is decidable against the
-      // touched files alone — a source key present anywhere in the table
-      // makes its file touched — so the split below never rescans the table.
-      val tKeys = tTouched.select(keys.map(col).toIndexedSeq: _*)
-      // Surviving SOURCE rows (updates + inserts). Without a WHEN MATCHED
-      // clause the source contributes only inserts — a source key present
-      // anywhere in the table makes its file touched, so "matches nothing"
-      // is decidable against the touched keys alone.
-      val keep1 =
-        if (!replaceMatched) {
-          if (insertUnmatched) src.join(tKeys, keys, "left_anti") else src.limit(0)
-        } else {
-          val keep0 = deleteFlag match {
-            case None => src
-            case Some(f) =>
-              src.join(tKeys, keys, "left_semi")
-                .filter(!coalesce(col(f), lit(false)))
-                .unionByName(src.join(tKeys, keys, "left_anti"))
-          }
-          if (insertUnmatched) keep0 else keep0.join(tKeys, keys, "left_semi")
-        }
-      val keep = keep1.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      // Surviving TARGET rows: unmatched rows pass through the by-source
-      // clause (delete → drop; update → conditional in-place assignments,
-      // cast back to the declared type so staged parquet can never
-      // contradict the log schema); matched rows survive unchanged only
-      // when there is no WHEN MATCHED clause.
-      val unmatchedT = tTouched.join(srcKeys, keys, "left_anti")
-      val unmatchedKept = (bySource, bsCond) match {
-        case (Some(b), Some(c)) if b.delete => unmatchedT.filter(!c)
-        case (Some(b), Some(c)) =>
-          val setMap = b.set.toMap
-          unmatchedT.select(schema.fields.toIndexedSeq.map { f =>
-            setMap.get(f.name) match {
-              case Some(v) =>
-                when(c, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-              case None => col(f.name)
-            }
-          }: _*)
-        case _ => unmatchedT
-      }
-      val matchedKept =
-        if (replaceMatched) tTouched.limit(0)
-        else tTouched.join(srcKeys, keys, "left_semi")
-      val merged = unmatchedKept.unionByName(matchedKept).unionByName(keep)
-
-      val add = stageWithStats(merged, root, m.partitionByOrNil,
-        colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
-      enforceConstraints(spark, root, prior, add, schema)
-      Some(nextCommit(prior, "merge").copy(schemaJson = schema.json,
-        add = add, remove = touched))
+      stageDml(spark, root, m, Seq(TxnMerge(src, keys, deleteFlag,
+        insertUnmatched, replaceMatched, bySource)), "merge", dv = false)
     } finally src.unpersist()
   }
 
-  /** Copy-on-write UPDATE (SQL `UPDATE … SET … WHERE …`): rewrite only
-    * files containing a matching row; within them, each matching row gets
-    * the assignments applied and every other row is carried unchanged.
-    * Assigned values are cast back to the column's declared type so the
-    * staged parquet can never contradict the log schema.
+  /** One autocommit DML statement: `ops` (built against the current
+    * snapshot, which they may validate) staged by [[stageDml]] and
+    * published by [[commitOn]]; nothing to change publishes nothing.
     */
-  def update(spark: SparkSession, root: String,
-      set: Seq[(String, Column)], cond: Column): Long = commitOn(root) { prior =>
+  private def dml(spark: SparkSession, root: String, op: String,
+      dv: Boolean)(ops: Manifest => Seq[TxnOp]): Long = commitOn(root) { prior =>
     val m = prior
       .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val schema = schemaOf(m)
-    val bad = set.map(_._1).filterNot(n => schema.fieldNames.contains(n))
-    require(bad.isEmpty, s"UPDATE of unknown column(s): ${bad.mkString(",")}")
-    val touched = touchedFiles(spark, root, m)(_.filter(cond))
-    if (touched.isEmpty) None // nothing matches: no-op, no commit
-    else {
-      val guard = coalesce(cond, lit(false))
-      val assign = set.toMap
-      val updated = readFiles(spark, root, m, touched).select(
-        schema.fields.toIndexedSeq.map { f =>
-          assign.get(f.name) match {
-            case Some(v) => when(guard, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }: _*)
-      val add = stageWithStats(updated, root, m.partitionByOrNil,
-        colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
-      enforceConstraints(spark, root, prior, add, schema)
-      Some(nextCommit(prior, "update").copy(add = add, remove = touched))
-    }
+    stageDml(spark, root, m, ops(m), op, dv)
   }
 
-  /** Copy-on-write DELETE: rewrite only files containing a matching row. */
+  /** An UPDATE's one op, its assigned columns checked against `m`. */
+  private def updateOp(m: Manifest, set: Seq[(String, Column)],
+      cond: Column): Seq[TxnOp] = {
+    val bad = set.map(_._1).filterNot(schemaOf(m).fieldNames.contains)
+    require(bad.isEmpty, s"UPDATE of unknown column(s): ${bad.mkString(",")}")
+    Seq(TxnUpd(set, cond))
+  }
+
+  /** Copy-on-write UPDATE (SQL `UPDATE … SET … WHERE …`, op "update"):
+    * files holding a matching row are rewritten, the assignments — cast to
+    * each column's declared type — applied to the matching rows
+    * ([[applyTxnOps]]); the rest of the table moves by reference.
+    */
+  def update(spark: SparkSession, root: String,
+      set: Seq[(String, Column)], cond: Column): Long =
+    dml(spark, root, "update", dv = false)(updateOp(_, set, cond))
+
+  /** Copy-on-write DELETE (op "delete"): files holding a matching row are
+    * rewritten without it. */
   def delete(spark: SparkSession, root: String, cond: Column): Long =
-    commitOn(root) { prior =>
-      val m = prior
-        .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-      val touched = touchedFiles(spark, root, m)(_.filter(cond))
-      val kept = readFiles(spark, root, m, touched)
-        .filter(!coalesce(cond, lit(false)))
-      val add =
-        if (touched.isEmpty) Nil
-        else stageWithStats(kept, root, m.partitionByOrNil,
-          colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
-      Some(nextCommit(prior, "delete").copy(add = add, remove = touched))
-    }
+    dml(spark, root, "delete", dv = false)(_ => Seq(TxnDel(cond)))
 
   /** Predicate-scoped atomic overwrite (the published Delta `replaceWhere`
     * concept): ONE commit deletes every row matching `cond` and lands `df`
-    * in its place. The file-touch set is exact — only files holding a
+    * in its place — a DELETE and an INSERT folded copy-on-write by
+    * [[stageDml]]. The file-touch set is exact — only files holding a
     * matching row rewrite (their non-matching rows carry into the staged
     * output); everything else moves by reference — so re-landing one
     * day of a day-partitioned 10⁵-file table costs that day's files, never
@@ -3844,24 +3778,12 @@ object CommitLog {
     * own scope, so it is refused here rather than discovered as drift.
     */
   def replaceWhere(spark: SparkSession, root: String, cond: Column,
-      df: DataFrame): Long = commitOn(root) { prior =>
-    val m = prior
-      .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val schema = schemaOf(m)
+      df: DataFrame): Long = dml(spark, root, "replaceWhere", dv = false) { m =>
     require(df.filter(!coalesce(cond, lit(false))).isEmpty,
       "replaceWhere: every input row must satisfy the replace predicate " +
         "(out-of-scope rows would silently survive later replaces)")
-    val touched = touchedFiles(spark, root, m)(_.filter(cond))
-    val kept = readFiles(spark, root, m, touched)
-      .filter(!coalesce(cond, lit(false)))
-    val merged = kept.unionByName(
-      df.select(schema.fieldNames.toIndexedSeq.map(col): _*))
-    val add =
-      if (touched.isEmpty && df.isEmpty) Nil
-      else stageWithStats(merged, root, m.partitionByOrNil,
-        colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
-    enforceConstraints(spark, root, prior, add, schema)
-    Some(nextCommit(prior, "replaceWhere").copy(add = add, remove = touched))
+    Seq(TxnDel(cond),
+      TxnIns(df.select(schemaOf(m).fieldNames.toIndexedSeq.map(col): _*)))
   }
 
   /** Dynamic-partition overwrite (Spark's `partitionOverwriteMode=dynamic`
@@ -3934,96 +3856,40 @@ object CommitLog {
     }.toMap
   }
 
-  /** Merge-on-read DELETE (the published Delta deletion-vector concept):
-    * instead of rewriting every file containing a matching row
-    * (copy-on-write [[delete]]), record the matching POSITIONS in per-file
-    * deletion vectors and publish a metadata+DV commit. Write cost is
-    * O(matching rows), not O(touched files' rows) — at 100 TB, a
-    * GDPR-scale delete of a few thousand rows scattered over ten thousand
-    * 128 MB files writes KBs of DV instead of re-staging TBs of parquet.
+  /** Merge-on-read DELETE (the published Delta deletion-vector concept,
+    * op "delete-dv"): instead of rewriting every file containing a matching
+    * row (copy-on-write [[delete]]), [[stageDml]] records the matching
+    * POSITIONS in per-file deletion vectors and publishes a metadata+DV
+    * commit. Write cost is O(matching rows), not O(touched files' rows) —
+    * at 100 TB, a GDPR-scale delete of a few thousand rows scattered over
+    * ten thousand 128 MB files writes KBs of DV instead of re-staging TBs
+    * of parquet. The probe that finds the touched files also counts their
+    * matches; with each prior DV's footer row count that classifies every
+    * touched file without another pass, and the DV write is one scan of
+    * the partly-hit files.
     *
     * Readers apply DVs transparently (the [[dvLive]] filter inside the
     * scan, used by every manifest-resolved read, DML rewrite, and the
     * registered data source). A file whose every row dies is dropped from
     * the snapshot outright — no empty husks, no DV read amplification for
-    * it. A repeat delete REPLACES a file's DV with the union of old and
-    * new dead positions, so exactly one DV per file is ever live. When
-    * accumulated DVs make the per-task position loads noticeable,
-    * [[purgeDeletionVectors]] (or any rewrite: compact/optimize/merge
-    * touching the file) materializes them away.
+    * it. A repeat delete REPLACES a file's DV with every raw position no
+    * survivor holds (old and new dead alike), so exactly one DV per file is
+    * ever live. When accumulated DVs make the per-task position loads
+    * noticeable, [[purgeDeletionVectors]] (or any rewrite: compact/
+    * optimize/merge touching the file) materializes them away.
     */
   def deleteDV(spark: SparkSession, root: String, cond: Column): Long =
-    commitOn(root) { prior =>
-      val m = prior
-        .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-      // None: nothing matches — no-op, no commit
-      stageDvDelete(spark, root, m, cond).map { case (fullGone, dvEntries) =>
-        nextCommit(prior, "delete-dv").copy(remove = fullGone, dvs = dvEntries)
-      }
-    }
-
-  /** The staging core of a merge-on-read delete against snapshot `m`:
-    * returns None when no file holds a matching row, otherwise the files
-    * whose every row died (dropped outright) and the DV sidecar entries
-    * for partially-hit files. Shared by [[deleteDV]] (single-table commit)
-    * and [[forgetKeys]] (multi-table transactional commit).
-    */
-  private def stageDvDelete(spark: SparkSession, root: String, m: Manifest,
-      cond: Column): Option[(Seq[String], Map[String, String])] = {
-    // r14 OPT (guide §2.4 — remove shuffles/passes outright): this staged
-    // in TWO live scans — a touchedFiles probe over the full snapshot,
-    // then a second readTaggedLive over the touched files for the dead
-    // coordinates. The coordinates determine the touch set, so ONE scan
-    // now yields both: matched (file, pos) rows persist (O(matched rows),
-    // the DV size itself), their per-file counts give `touched`, and
-    // previously-DV'd positions cannot reappear because the scan is the
-    // LIVE read (prior DVs filtered inside the scan) — the union below stays
-    // disjoint, so new+prior counts add exactly as the old unioned count
-    // did. Scan paths map back to MANIFEST path strings via a driver
-    // lookup (correct for relative and clone-absolute references alike).
-    val absToRel = m.files.map(f => (absPath(root, f), f))
-    val newDead = readTaggedLive(spark, root, m, m.files)
-      .filter(coalesce(cond, lit(false)))
-      .join(broadcast(spark.createDataFrame(absToRel).toDF(TagFile, "__dv_rel")),
-        TagFile)
-      .select(col("__dv_rel"), col(TagPos).as("__dv_pos"))
-      .persist()
-    try {
-      val newCounts = newDead.groupBy("__dv_rel").agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (newCounts.isEmpty) return None
-      val touched = m.files.filter(newCounts.contains)
-      val priorDv = m.dvsOrEmpty.filter { case (f, _) => touched.contains(f) }
-      val priorCounts: Map[String, Long] =
-        if (priorDv.isEmpty) Map.empty
-        else dvPositionsRel(spark, root, priorDv)
-          .groupBy("__dv_rel").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val counts = (newCounts.keySet ++ priorCounts.keySet).iterator
-        .map(f => f -> (newCounts.getOrElse(f, 0L) + priorCounts.getOrElse(f, 0L)))
-        .toMap
-      val rowsOf = m.statsOrNil.map(s => s.path -> s.rows).toMap
-      val (fullGone, partial) = touched.partition(f =>
-        rowsOf.get(f).contains(counts.getOrElse(f, 0L)))
-      val dvEntries =
-        if (partial.isEmpty) Map.empty[String, String]
-        else {
-          val dead = if (priorDv.isEmpty) newDead
-            else newDead.unionByName(dvPositionsRel(spark, root, priorDv))
-          stageDV(dead.filter(col("__dv_rel").isin(partial: _*)), root, partial)
-        }
-      Some((fullGone, dvEntries))
-    } finally newDead.unpersist()
-  }
+    dml(spark, root, "delete-dv", dv = true)(_ => Seq(TxnDel(cond)))
 
   /** Right-to-erasure ("forget me") across a table FAMILY in one atomic
     * multi-table transaction: every row whose `keyCol` is one of `keys`
-    * dies — via merge-on-read deletion vectors — in EVERY listed table at
-    * a single visibility instant (the coordinator marker write, the same
-    * Percolator-style protocol as [[multiAppend]]); a reader can never
-    * observe the subject half-erased. Tables holding no matching row skip
-    * (their current version is returned unchanged) — skipping cannot break
-    * atomicity because there is nothing to erase there.
+    * dies — via merge-on-read deletion vectors ([[deleteDV]]'s write) — in
+    * EVERY listed table at a single visibility instant (the coordinator
+    * marker write, the same Percolator-style protocol as [[multiAppend]]);
+    * a reader can never observe the subject half-erased. Tables holding no
+    * matching row skip (their current version is returned unchanged) —
+    * skipping cannot break atomicity because there is nothing to erase
+    * there.
     *
     * DV erasure removes the rows from every subsequent read instantly at
     * O(matched rows) write cost; the bytes still sit in the original
@@ -4034,10 +3900,10 @@ object CommitLog {
     * the log is vacuumed; shrink the retention window accordingly when
     * running under a deletion deadline.
     *
-    * Scale: per table, cost is the key-pruned touch probe (manifest stats
-    * / bloom sidecars cut the candidate files first) + DV staging of the
-    * matched positions — erasing one subject from a 10⁵-file table opens
-    * the handful of files bloom/min-max say may hold the key.
+    * Scale: per table, cost is one touch probe over every live file (the
+    * key predicate is pushed into the parquet scan, but no manifest stats
+    * or bloom sidecars cut the file list first) + DV staging of the
+    * matched positions.
     */
   def forgetKeys(spark: SparkSession, tables: Seq[(String, String)],
       keys: Seq[Any], coord: String): Map[String, Long] = {
@@ -4050,79 +3916,26 @@ object CommitLog {
         root -> commitOn(root, retry = true, marker = Some(marker)) { prior =>
           val m = prior.getOrElse(
             throw new IllegalStateException(s"no commits at $root"))
-          // None: no matching rows here — nothing to erase
-          stageDvDelete(spark, root, m, col(keyCol).isin(keys: _*)).map {
-            case (fullGone, dvEntries) => nextCommit(prior, "delete-dv")
-              .copy(remove = fullGone, dvs = dvEntries)
-          }
+          stageDml(spark, root, m, Seq(TxnDel(col(keyCol).isin(keys: _*))),
+            "delete-dv", dv = true)
         }
       }.toMap
     }
   }
 
-  /** Merge-on-read UPDATE: ONE commit in which the matched rows' positions
-    * die via deletion vectors and their updated images append as new
-    * files. Write cost is O(matched rows) — copy-on-write [[update]]
-    * re-stages every row of every touched file, which at 100 TB turns a
-    * ten-row correction scattered across ten files into a 1.2 GB rewrite;
-    * this writes ten rows and a few KB of DV. The read path already
-    * reassembles the snapshot (the DV filter + the appended images), and any
-    * later rewrite of a DV'd file materializes its deletes away.
+  /** Merge-on-read UPDATE (op "update-dv"): ONE commit in which
+    * [[stageDml]] kills the matched rows' positions via deletion vectors
+    * and appends their updated images as new files. Write cost is
+    * O(matched rows) — copy-on-write [[update]] re-stages every row of
+    * every touched file, which at 100 TB turns a ten-row correction
+    * scattered across ten files into a 1.2 GB rewrite; this writes ten
+    * rows and a few KB of DV. The read path already reassembles the
+    * snapshot (the DV filter + the appended images), and any later rewrite
+    * of a DV'd file materializes its deletes away.
     */
   def updateDV(spark: SparkSession, root: String,
-      set: Seq[(String, Column)], cond: Column): Long = commitOn(root) { prior =>
-    val m = prior
-      .getOrElse(throw new IllegalStateException(s"no commits at $root"))
-    val schema = schemaOf(m)
-    val bad = set.map(_._1).filterNot(n => schema.fieldNames.contains(n))
-    require(bad.isEmpty, s"UPDATE of unknown column(s): ${bad.mkString(",")}")
-    // r14 OPT (guide §2.4): one live scan yields the matched rows AND the
-    // touch set (same single-pass rework as stageDvDelete — the former
-    // touchedFiles probe re-scanned the full snapshot first).
-    val matched = readTaggedLive(spark, root, m, m.files)
-      .filter(coalesce(cond, lit(false))).persist()
-    val touchedAbs = matched.select(TagFile).distinct()
-      .collect().map(_.getString(0)).toSet
-    // exact-path equality, not endsWith: a manifest-relative path that is
-    // a suffix of a DIFFERENT file's absolute path (a/b.parquet vs
-    // x/a/b.parquet, both in the manifest) would otherwise mis-map
-    val touched = m.files.filter(f => touchedAbs.contains(absPath(root, f)))
-    try if (touched.isEmpty) None else { // nothing matches: no-op
-      val absToRel = touched.map(f => (absPath(root, f), f))
-      val newDead = matched
-        .join(broadcast(spark.createDataFrame(absToRel).toDF(TagFile, "__dv_rel")),
-          TagFile)
-        .select(col("__dv_rel"), col(TagPos).as("__dv_pos"))
-      val priorDv = m.dvsOrEmpty.filter { case (f, _) => touched.contains(f) }
-      val dead = (if (priorDv.isEmpty) newDead
-        else newDead.unionByName(dvPositionsRel(spark, root, priorDv))).persist()
-      try {
-        val counts = dead.groupBy("__dv_rel").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val rowsOf = m.statsOrNil.map(s => s.path -> s.rows).toMap
-        val (fullGone, partial) = touched.partition(f =>
-          rowsOf.get(f).contains(counts.getOrElse(f, 0L)))
-        val dvEntries =
-          if (partial.isEmpty) Map.empty[String, String]
-          else stageDV(dead.filter(col("__dv_rel").isin(partial: _*)), root, partial)
-        // every matched row's updated image (cond holds on all of them, so
-        // the assignment applies unconditionally), typed back to the
-        // declared schema like copy-on-write update
-        val assign = set.toMap
-        val updated = matched.select(schema.fields.toIndexedSeq.map { f =>
-          assign.get(f.name) match {
-            case Some(v) => v.cast(f.dataType).as(f.name)
-            case None => col(f.name)
-          }
-        }: _*)
-        val add = stageWithStats(updated, root, m.partitionByOrNil,
-          colMap = m.colMapOrEmpty, props = m.propsOrEmpty)
-        enforceConstraints(spark, root, prior, add, schema)
-        Some(nextCommit(prior, "update-dv").copy(add = add, remove = fullGone,
-          dvs = dvEntries))
-      } finally dead.unpersist()
-    } finally matched.unpersist()
-  }
+      set: Seq[(String, Column)], cond: Column): Long =
+    dml(spark, root, "update-dv", dv = true)(updateOp(_, set, cond))
 
   /** The session-configurable UPDATE twin of [[deleteConfigured]]. */
   def updateConfigured(spark: SparkSession, root: String,

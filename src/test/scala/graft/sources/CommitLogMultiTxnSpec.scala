@@ -150,4 +150,42 @@ class CommitLogMultiTxnSpec extends SparkTestBase {
     assert(CommitLog.read(spark, a, version = Some(cut1(a))).count() == 1
       && CommitLog.read(spark, b, version = Some(cut1(b))).count() == 1)
   }
+
+  /** A block on a table declaring `constraint.pk = id`: ids 1–3. */
+  private def pkTable(name: String): String = {
+    val t = tmp(name)
+    CommitLog.append(Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "v"), t)
+    CommitLog.setTableProperties(t, Map(CommitLog.PkProp -> "id"))
+    t
+  }
+
+  private def block(t: String, ops: Seq[CommitLog.TxnOp]): Long =
+    CommitLog.multiDml(spark, Seq((t, CommitLog.currentVersion(t), ops)),
+      tmp("mt-pk-coord"))(t)
+
+  test("a block's non-key UPDATE on a pk table commits") {
+    val t = pkTable("mt-pk1")
+    block(t, Seq(CommitLog.TxnUpd(Seq("v" -> (col("v") + 1)), col("id") === 1L)))
+    assert(CommitLog.read(spark, t).as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((1L, 11L), (2L, 20L), (3L, 30L)))
+  }
+
+  test("a block's DELETE-then-INSERT of one key commits") {
+    val t = pkTable("mt-pk2")
+    block(t, Seq(CommitLog.TxnDel(col("id") === 2L),
+      CommitLog.TxnIns(Seq((2L, 99L)).toDF("id", "v"))))
+    assert(CommitLog.read(spark, t).as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((1L, 10L), (2L, 99L), (3L, 30L)))
+  }
+
+  test("a block that INSERTs a live key still aborts") {
+    val t = pkTable("mt-pk3")
+    val v0 = CommitLog.currentVersion(t)
+    val e = intercept[IllegalArgumentException](block(t, Seq(
+      CommitLog.TxnUpd(Seq("v" -> lit(0L)), col("id") === 1L),
+      CommitLog.TxnIns(Seq((3L, 33L)).toDF("id", "v")))))
+    assert(e.getMessage.contains("re-inserts key"))
+    assert(CommitLog.currentVersion(t) == v0)
+    assert(CommitLog.read(spark, t).count() == 3)
+  }
 }
