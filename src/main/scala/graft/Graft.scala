@@ -14,6 +14,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
+  /** Entries in Spark's generated-class cache (`spark.sql.codegen.cache.
+    * maxEntries`, a static conf: it must be set before the first query).
+    * Spark's default of 100 is below graft's working set: the four corpus
+    * steps q14/q123/q138/q16 compile 124 distinct classes in a fresh JVM,
+    * so an LRU cache cycled over them hits nothing, and every pass
+    * recompiles with Janino and re-JITs from cold. Guava splits the bound
+    * over its segments, so the cap keeps headroom over the working set
+    * (DEPLOYMENT.md lists it per workload). `CodegenReuseSpec` pins it.
+    */
+  val CodegenCacheEntries = 256
+
   /** Build a tuned SparkSession. `master` is only set if the caller asks —
     * under spark-submit the cluster manager decides.
     *
@@ -63,6 +74,7 @@ object Graft {
       // oracle's naive-micros view under the UTC session tz.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
     master.foreach(b.master)
     val spark = b.getOrCreate()

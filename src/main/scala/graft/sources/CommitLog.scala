@@ -1216,7 +1216,7 @@ object CommitLog {
     val tracked = schema.fields.filter(f => statTracked(f.dataType)).toSeq
     val summed = sumCols.distinct.flatMap(c =>
       tracked.find(f => f.name == c && integralType(f.dataType)))
-    // 0-row files never enter the manifest (vacuum reclaims the orphans)
+    // 0-row files never enter the manifest (a staging writer deletes them)
     val read = readFileStats(spark, root, files, tracked, summed)
       .filter(_.stat.rows > 0L)
     val under = tracked.filter(f => read.exists(_.underivable.contains(f.name)))
@@ -1560,13 +1560,33 @@ object CommitLog {
     // zone-safe rendering); transform entries parse their derived value
     // back out of the file's own __gp_<key>=<value> path segments.
     val transformKeys = fields.filterNot(_.fn == "identity").map(_.key(p)).toSet
-    statsFor(sess, root, files, physDf.schema, sketches, sumCols).map { st =>
+    val stats = statsFor(sess, root, files, physDf.schema, sketches, sumCols).map { st =>
       val idTuple = fields.filter(_.fn == "identity")
         .flatMap(f => st.minsOrEmpty.get(p(f.source)).map(p(f.source) -> _))
         .toMap
       val trTuple = partitionsFromPath(st.path)
         .filter { case (k, _) => transformKeys.contains(k) }
       st.copy(partitions = idTuple ++ trTuple)
+    }
+    dropEmptyStaged(root, files, stats)
+    stats
+  }
+
+  /** Delete the staged files `stats` leaves out (0-row files, which never
+    * enter a manifest): this writer's own and never published, so they go
+    * now rather than at `vacuum` — each with its checksum, or the whole
+    * staging directory (`data/<uuid>`, markers included) when none is kept.
+    */
+  private def dropEmptyStaged(root: String, staged: Seq[String],
+      stats: Seq[FileStat]): Unit = {
+    val kept = stats.map(_.path).toSet
+    val dropped = staged.filterNot(kept)
+    if (kept.isEmpty)
+      dropped.map(_.split('/').take(2).mkString("/")).distinct
+        .foreach(d => deleteRecursively(Paths.get(root, d)))
+    else dropped.map(Paths.get(root, _)).foreach { f =>
+      Files.deleteIfExists(f)
+      Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
     }
   }
 
@@ -2875,11 +2895,11 @@ object CommitLog {
       extra = if (dv) Seq(TagFile, TagPos) else Nil)
     def rows(df: DataFrame): DataFrame = df.select(schema.fields.toIndexedSeq
       .map(f => quoted(f.name).cast(f.dataType).as(f.name)): _*)
-    // an empty staged file adds nothing: left out of the commit, an
-    // orphan for vacuum like any unpublished staging
+    // an empty staged file adds nothing: stageWithStats leaves it out of
+    // the commit and deletes it
     def stageRows(df: DataFrame): Seq[FileStat] =
       stageWithStats(rows(df), root, m.partitionByOrNil,
-        colMap = m.colMapOrEmpty, props = props).filter(_.rows > 0)
+        colMap = m.colMapOrEmpty, props = props)
     // a MERGE decides its matches inside the fold, so a DV write counts
     // survivors over the folded state, cached for its three readers
     val cached = dv && merges.nonEmpty

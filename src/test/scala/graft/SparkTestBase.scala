@@ -26,6 +26,7 @@ object SparkTestBase {
       // ChecksumCheckpointFileManager.awaitResult); checksums guard against
       // checkpoint corruption on real DFS — irrelevant for tmp-dir tests.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", Graft.CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
   }

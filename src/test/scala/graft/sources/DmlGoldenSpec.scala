@@ -150,6 +150,25 @@ class DmlGoldenSpec extends SparkTestBase {
     }
     assert(failures.isEmpty, failures.mkString("\nactual:\n", "\n", ""))
   }
+
+  test("a DML that touches no file and inserts nothing leaves no file behind") {
+    def parquetFiles(root: String): Int = {
+      val s = Files.walk(java.nio.file.Paths.get(root, "data"))
+      try s.filter(_.toString.endsWith(".parquet")).count().toInt
+      finally s.close()
+    }
+    for (kind <- fixtures) {
+      val fx = fixture(kind)
+      val version = CommitLog.currentVersion(fx.root)
+      val before = parquetFiles(fx.root)
+      val empty = rows(fx.vc, Nil, 0L)
+      CommitLog.replaceWhere(spark, fx.root, col("id") > 1000, empty)
+      assert(parquetFiles(fx.root) == before, s"$kind: replaceWhere")
+      CommitLog.merge(spark, fx.root, empty, Seq("id"))
+      assert(parquetFiles(fx.root) == before, s"$kind: merge")
+      assert(CommitLog.currentVersion(fx.root) == version, kind)
+    }
+  }
 }
 
 object DmlGoldenSpec {
